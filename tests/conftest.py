@@ -17,7 +17,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from ydb_vector_search_demo_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # local[SPARK_GRAFT_CPUS] with as many shuffle partitions (get_spark)
+    s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

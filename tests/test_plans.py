@@ -787,3 +787,24 @@ def test_forecast_backtest_broadcast_joins(spark):
     for node in ("FlatMapGroupsInPandas", "MapInPandas", "BatchEvalPython",
                  "ArrowEvalPython"):
         assert node not in final, f"{node} in plan:\n" + final[:2000]
+
+
+def test_search_with_summary_runs_at_most_two_jobs(spark):
+    """The serving path is one scored top-k joined to payloads (a
+    broadcast job and the collect); context, prompt and summary are
+    built on the driver and the reply collects as a local relation.
+    A window, aggregate or Python-UDF stage would show as extra jobs."""
+    from ydb_vector_search_demo_spark.pipeline import rag
+
+    query = "как оформить возврат"
+    rag.search_with_summary(spark, SF_ORACLE, query).collect()  # resolves the store
+    sc = spark.sparkContext
+    group = "test-search-with-summary-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = rag.search_with_summary(spark, SF_ORACLE, query).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 1
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs

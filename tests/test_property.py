@@ -43,7 +43,7 @@ def _get_spark():
     if _spark is None:
         from ydb_vector_search_demo_spark.session import get_spark
 
-        _spark = get_spark("tests", master="local[8]", shuffle_partitions=8)
+        _spark = get_spark("tests")
         _spark.sparkContext.setLogLevel("ERROR")
     return _spark
 

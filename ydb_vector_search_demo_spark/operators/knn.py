@@ -6,7 +6,9 @@ scores, ``index_enabled=False`` semantics of
 Scale design (100 TB posture):
 
 * The query vector is a plan literal — broadcast implicitly with the
-  serialized plan; nothing is collected from executors.
+  serialized plan; nothing is collected from executors. It is bound as
+  one parsed expression (:func:`vector_literal`), not one py4j literal
+  per component.
 * Distance + ``orderBy().limit(k)`` compiles to ``TakeOrderedAndProject``:
   each scan task keeps a size-k heap, only ``k * num_partitions`` tiny
   rows ever reach the driver-side merge. No global sort, no full shuffle.
@@ -23,12 +25,32 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance
+
+
+def _double_sql(x: float) -> str:
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def vector_literal(query_vector: Sequence[float]) -> Column:
+    """A query vector as one ``array(<x>D, ...)`` expression parsed in
+    the JVM: a single py4j call, where ``F.lit(list)`` makes one per
+    component. ``repr`` is the shortest decimal that round-trips, so
+    each component parses back to the identical double (NaN and ±inf
+    through Spark's own string casts); constant folding turns both
+    forms into the same array<double> literal."""
+    return F.expr("array(" + ", ".join(_double_sql(x) for x in query_vector) + ")")
 
 
 def knn_scores(
@@ -45,7 +67,7 @@ def knn_scores(
     Reference analogue: ``similarity_search_by_vector_with_score(v, k)``
     (/root/reference/app.py:124) with ``index_enabled=False``.
     """
-    qv = F.lit([float(x) for x in query_vector])
+    qv = vector_literal(query_vector)
     return (
         embeddings.select(
             F.col(id_col), distance(vector_col, qv, metric).alias(score_col)
@@ -266,7 +288,7 @@ def distance_column(
     vector_col: str | Column, query_vector: Sequence[float], metric: str = "cosine"
 ) -> Column:
     """Convenience: distance of a vector column to a literal query vector."""
-    return distance(vector_col, F.lit([float(x) for x in query_vector]), metric)
+    return distance(vector_col, vector_literal(query_vector), metric)
 
 
 def knn_page_after(
@@ -296,8 +318,7 @@ def knn_page_after(
     reachable through a numeric cursor; they are excluded, keeping the
     page contract total-order clean (same rows as the OFFSET oracle,
     which never reaches the NULL tail either)."""
-    qv = F.lit([float(x) for x in query_vector])
-    sc = distance(vector_col, qv, metric)
+    sc = distance(vector_col, vector_literal(query_vector), metric)
     scored = embeddings.select(F.col(id_col), sc.alias(score_col)).filter(
         F.col(score_col).isNotNull()
     )
@@ -333,11 +354,10 @@ def knn_topk_per_group(
     carries at most partitions x groups x k rows — the batch_knn
     boundedness argument with groups playing the query role. NULL
     scores sort last and never displace real matches."""
-    qv = F.lit([float(x) for x in query_vector])
     scored = embeddings.select(
         F.col(group_col),
         F.col(id_col),
-        distance(vector_col, qv, metric).alias(score_col),
+        distance(vector_col, vector_literal(query_vector), metric).alias(score_col),
     )
     w = Window.partitionBy(group_col).orderBy(
         F.col(score_col).asc_nulls_last(), F.col(id_col).asc()
@@ -438,7 +458,7 @@ def knn_cosine_normalized_parquet(
         raise ValueError("zero-norm query vector has no cosine ranking")
     qu = [x / qn for x in qv]
     store = spark.read.parquet(path)
-    score = F.round(F.lit(1.0) - dot(F.col("unit"), F.lit(qu)), 6)
+    score = F.round(F.lit(1.0) - dot(F.col("unit"), vector_literal(qu)), 6)
     return (
         store.select(F.col(id_col), score.alias("score"))
         .orderBy(F.col("score").asc_nulls_last(), F.col(id_col).asc())

@@ -11,8 +11,18 @@ app.py:95) are network services; here they are pluggable. The default
 implementations are the deterministic seeded stubs required for oracle
 checking (FIXTURES.md): query text → 64-dim unit vector from per-token
 hashes, and summary → deterministic function of the prompt. Swap in real
-services by passing a different ``embed_fn`` / ``llm_fn`` — both run as
-Arrow-batched pandas UDFs when applied to columns, never row-at-a-time.
+services by passing a different ``embed_fn`` / ``llm_fn``.
+
+The serving path, :func:`search_with_summary`, has the reference's own
+shape: it runs at call time as one scored top-k joined to payloads
+(collected as at most k rows), then builds the context and prompt in
+Python on the driver and calls ``llm_fn`` once there, like app.py:95.
+Both ``search`` and ``search_with_summary`` read the store through a
+resolved-once handle (:func:`store_tables`). The DataFrame forms
+(:func:`format_results`, :func:`assemble_context`, :func:`build_prompt`)
+and the Arrow-batched UDF seams (:func:`embed_texts_udf`,
+:func:`llm_udf`) remain for column-wise and batch callers, never
+row-at-a-time.
 """
 
 from __future__ import annotations
@@ -20,14 +30,17 @@ from __future__ import annotations
 import hashlib
 import math
 import random
+import threading
 from collections.abc import Callable, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
-from ydb_vector_search_demo_spark.operators.knn import knn_scores
+# knn_scores is re-exported: callers (and tracers) address it as rag.knn_scores
+from ydb_vector_search_demo_spark.operators.knn import knn, knn_scores  # noqa: F401
 from ydb_vector_search_demo_spark.sources.tables import load_table
 
 EMBEDDING_DIM = 64
@@ -159,6 +172,74 @@ def build_prompt(query: str, context_df: DataFrame) -> DataFrame:
     )
 
 
+class StoreHandle:
+    """The ``documents`` and ``embeddings`` relations of one store
+    directory, resolved (listed) once. ``version`` is the tables'
+    modification times read before the listing; :meth:`current_version`
+    re-reads them with one Hadoop-FS ``getFileStatus`` per table and no
+    recursive listing. A writer that adds or replaces files of a table
+    changes its root's modification time (Spark's commit protocol does
+    on every append or overwrite), so a changed version means the
+    resolved listing may be stale."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+        jvm = spark.sparkContext._jvm
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        self._status = []
+        for name in ("documents", "embeddings"):
+            path = jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
+            self._status.append((path.getFileSystem(conf), path))
+        self.version = self.current_version()
+        self.documents = load_table(spark, sf_dir, "documents")
+        self.embeddings = load_table(spark, sf_dir, "embeddings")
+
+    def current_version(self) -> tuple[int, ...]:
+        return tuple(fs.getFileStatus(p).getModificationTime() for fs, p in self._status)
+
+
+# One handle per (session, store directory). Owned by this module: entries
+# of a stopped session are dropped at the next lookup, and
+# clear_store_cache() drops them all.
+_STORE_HANDLES: dict[tuple[SparkSession, str], StoreHandle] = {}
+_STORE_LOCK = threading.Lock()
+
+
+def store_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(documents, embeddings)`` of the store at ``sf_dir``, from its
+    resident handle; re-resolved only when the store's version changed.
+    Safe to call from any thread: lookups and re-resolution run under
+    one lock, so concurrent requests never list the same store twice."""
+    key = (spark, sf_dir)
+    with _STORE_LOCK:
+        for stale in [k for k in _STORE_HANDLES if k[0].sparkContext._jsc is None]:
+            del _STORE_HANDLES[stale]
+        handle = _STORE_HANDLES.get(key)
+        if handle is None or handle.current_version() != handle.version:
+            handle = _STORE_HANDLES[key] = StoreHandle(spark, sf_dir)
+    return handle.documents, handle.embeddings
+
+
+def clear_store_cache() -> None:
+    """Drop every resident store handle (the next call re-resolves)."""
+    with _STORE_LOCK:
+        _STORE_HANDLES.clear()
+
+
+def _scored_docs(
+    spark: SparkSession,
+    sf_dir: str,
+    query: str,
+    k: int,
+    metric: str,
+    embed_fn: Callable[[str], Sequence[float]],
+) -> DataFrame:
+    """Embed the (validated) query once — app.py:118 CSE — then the
+    exact KNN top-k joined to its document payloads."""
+    qv = list(embed_fn(query))
+    docs, embs = store_tables(spark, sf_dir)
+    return knn(docs, embs, qv, k=k, metric=metric)
+
+
 def search(
     spark: SparkSession,
     sf_dir: str,
@@ -170,12 +251,19 @@ def search(
     """End-to-end search stage (app.py:117-138): embed once, exact KNN
     top-k, formatted results. Returns the formatted-results DataFrame."""
     query = validate_query(query)
-    qv = list(embed_fn(query))  # computed once, reused — app.py:118 CSE
-    docs = load_table(spark, sf_dir, "documents")
-    embs = load_table(spark, sf_dir, "embeddings")
-    top = knn_scores(embs, qv, k=k, metric=metric)
-    scored_docs = docs.join(F.broadcast(top), docs.doc_id == top.vec_id).drop("vec_id")
-    return format_results(scored_docs)
+    return format_results(_scored_docs(spark, sf_dir, query, k, metric, embed_fn))
+
+
+def _result_order(row) -> tuple:
+    """:func:`enumerate_results`' order as a Python sort key: score
+    ascending with NULL first and NaN after every number (Spark's
+    ordering of doubles), ties on doc_id."""
+    score = row["score"]
+    if score is None:
+        return (0, 0.0, row["doc_id"])
+    if math.isnan(score):
+        return (2, 0.0, row["doc_id"])
+    return (1, score, row["doc_id"])
 
 
 def search_with_summary(
@@ -187,16 +275,37 @@ def search_with_summary(
     embed_fn: Callable[[str], Sequence[float]] = embed_query_stub,
     llm_fn: Callable[[str], str] = summarize_stub,
 ) -> DataFrame:
-    """Full pipeline including the summary stage (app.py:141-149):
-    context → prompt → LLM UDF → stripped summary, single-row DataFrame
-    with (prompt, summary, n_docs)."""
-    formatted = search(spark, sf_dir, query, k=k, metric=metric, embed_fn=embed_fn)
-    prompt_df = build_prompt(query, assemble_context(formatted))
-    invoke = llm_udf(llm_fn)
-    return prompt_df.select(
-        "prompt",
-        F.trim(invoke(F.col("prompt"))).alias("summary"),  # .strip(), app.py:97
-        "n_docs",
+    """Full pipeline including the summary stage (app.py:82-97,141-149),
+    executed at call time: one scored top-k joined to payloads is
+    collected (at most ``k`` rows), then the top-3 context, the prompt
+    and one ``llm_fn`` call are made on the driver. Returns the single
+    ``(prompt, summary, n_docs)`` row as a local relation, which
+    collects without a Spark job.
+
+    Row-for-row equal to ``build_prompt(query, assemble_context(search(
+    ...)))`` with ``F.trim(llm_udf(llm_fn)(prompt))``: a NULL text is
+    skipped in the context but counted in ``n_docs``, and the summary
+    is stripped of ASCII spaces only, as ``F.trim`` does."""
+    query = validate_query(query)
+    rows = (
+        _scored_docs(spark, sf_dir, query, k, metric, embed_fn)
+        .select("doc_id", "text", "score")
+        .collect()
+    )
+    top = sorted(rows, key=_result_order)[:CONTEXT_TOP_N]
+    context = CONTEXT_SEPARATOR.join(r["text"] for r in top if r["text"] is not None)
+    prompt = PROMPT_TEMPLATE % (query, context)
+    summary = llm_fn(prompt)
+    if summary is not None:
+        summary = summary.strip(" ")  # .strip(), app.py:97 — F.trim's spaces-only rule
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "prompt": pa.array([prompt], pa.string()),
+                "summary": pa.array([summary], pa.string()),
+                "n_docs": pa.array([len(top)], pa.int64()),
+            }
+        )
     )
 
 
