@@ -1,26 +1,51 @@
-"""Approximate nearest-neighbor search: MLlib batch index building.
+"""Approximate nearest-neighbor search: index builds and the probe core.
 
 The reference ships an ANN path but runs with it disabled
 (``index_enabled=False``, /root/reference/app.py:37); when enabled, the
 store builds a ``vector_kmeans_tree`` (hierarchical k-means) index
 [API-inferred]. The Spark-first analogue (BASELINE.json
-``spark_approach`` = "MLlib for batch indexing"):
+``spark_approach`` = "MLlib for batch indexing"): index *building* is a
+Spark batch job (seeded MLlib KMeans, map-side assignment), and the
+built store is partitioned by its cell columns so that probing a cell
+is ordinary Parquet partition pruning — a plain filter, no custom
+Catalyst rule (SURVEY.md §4). At 100 TB with 4096 cells and nprobe=8, a
+query scans ~0.2% of the data.
 
-* **IVF**: KMeans over the corpus → every vector gets a ``centroid_id``.
-  Persist the corpus **partitioned by centroid_id**; at query time rank
-  centroids by distance to the query, read only the ``nprobe`` nearest
-  partitions (ordinary partition pruning — a plain filter, no custom
-  Catalyst rule, SURVEY.md §4), and exact-rescore inside them. At 100 TB
-  with 4096 centroids and nprobe=8, a query scans ~0.2% of the data.
-* **LSH**: MLlib ``BucketedRandomProjectionLSH`` as the
-  similarity-join / multi-probe alternative.
+**Probe core.** Every vector-store search here and in
+``operators.quant`` / ``operators.pq`` / ``operators.rotation`` is one
+router × one codec score → one coarse→rescore tail:
 
-Index *building* is the Spark batch job; online serving of the built
-index belongs to a serving system, not Spark.
+* **Router** — which cells a query probes. :class:`_IvfRouter` (one
+  ``centroid_id`` level) and :class:`_TreeRouter` (``cell_top`` ×
+  ``cell_sub``) each own the single-query pruning filter at a probe
+  level, the widening schedule used by ``min_candidates``, the batch
+  membership rows and their union filter, and the probe-width clamp
+  ``max(1, min(n, n_cells))``. :func:`_probe_scan` (one query) and
+  :func:`_batch_probe_scan` (a broadcast membership join for a batch)
+  are the only callers of :func:`rank_centroids` that pick cells.
+* **Predicate seam** — :func:`_apply_pred` applies a Column / SQL-string
+  metadata filter inside the pruned scan, where it reaches the parquet
+  reader as a pushed filter.
+* **Codec score** — the coarse score expression: the exact distance for
+  float stores (``knn_scores`` / ``distance``), ``quant.coarse_distance``
+  for int8, Hamming for sign bits, ``pq.adc_score`` for PQ codes, a
+  prefix distance for Matryoshka and PCA-rotated stores.
+* **Tail** — :func:`_coarse_rescore` (one query: TakeOrderedAndProject
+  over the coarse score, broadcast the ``rescore·k`` ids into the float
+  relation, exact ``knn_scores``) and :func:`_batch_coarse_rescore` (a
+  batch: Partial WindowGroupLimit coarse cut per query, broadcast pool,
+  exact per-query top-k). Float stores need no tail: their coarse score
+  is already exact.
+
+The module also holds MLlib LSH and kNN-graph search, and the graph
+analytics built on the kNN graph.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
+import threading
 from collections.abc import Sequence
 
 from pyspark.ml.clustering import KMeans
@@ -31,14 +56,6 @@ from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
-
-
-def _pred(predicate: Column | str | None) -> Column | None:
-    """Normalize a metadata predicate (Column or SQL string) — None
-    passes through."""
-    if predicate is None or isinstance(predicate, Column):
-        return predicate
-    return F.expr(predicate)
 
 
 def _choose_probe_level(
@@ -61,12 +78,6 @@ def _choose_probe_level(
     return levels[-1]
 
 
-def _hashable(v):
-    """Cache-key normalization: list-valued build kwargs (keep_cols)
-    become tuples so the session-cache key stays hashable."""
-    return tuple(v) if isinstance(v, list) else v
-
-
 def _doubling_levels(start: int, maximum: int) -> list[int]:
     """start, 2·start, 4·start, … capped at maximum (always included)."""
     levels, n = [], max(1, int(start))
@@ -75,6 +86,188 @@ def _doubling_levels(start: int, maximum: int) -> list[int]:
         n *= 2
     levels.append(maximum)
     return levels
+
+
+# --------------------------------------------------------------------------
+# Probe core: predicate seam, cell routers, coarse→rescore tails
+# --------------------------------------------------------------------------
+
+
+def _apply_pred(df: DataFrame, predicate: Column | str | None) -> DataFrame:
+    """The predicate seam: filter ``df`` by an optional metadata
+    predicate (Column or SQL string). Probes apply it inside the pruned
+    scan, so the final top-k is exact over the filtered pool; its
+    columns must live in the store (``keep_cols`` at write time)."""
+    if predicate is None:
+        return df
+    return df.filter(F.expr(predicate) if isinstance(predicate, str) else predicate)
+
+
+def _probe_width(n: int, n_cells: int) -> int:
+    """The one probe-width rule: at least one cell, at most all."""
+    return max(1, min(int(n), n_cells))
+
+
+class _IvfRouter:
+    """Flat IVF routing over ``centroid_id``: cells nearest-first by
+    :func:`rank_centroids`; ``levels`` widens by doubling ``nprobe``."""
+
+    fields = ("centroid_id",)
+
+    def __init__(self, centroids: list[list[float]], metric: str, nprobe: int):
+        self.centroids, self.metric = centroids, metric
+        n = len(centroids)
+        self.levels = _doubling_levels(_probe_width(nprobe, n), n)
+
+    def ranker(self, qv: list[float]):
+        """level -> probed cells (1-tuples) in rank order; ranks once."""
+        ranked = rank_centroids(self.centroids, qv, self.metric)
+        return lambda n: [(c,) for c in ranked[:n]]
+
+    @staticmethod
+    def clause(cells: list[tuple]) -> Column:
+        """IN filter on ``centroid_id`` — partition pruning on disk."""
+        return F.col("centroid_id").isin([c for (c,) in cells])
+
+
+class _TreeRouter:
+    """Two-level k-means tree routing over (``cell_top``, ``cell_sub``):
+    rank the top cells, then only the probed cells' child codebooks
+    (sub-linear in the cell count); ``levels`` is
+    :func:`_tree_probe_levels`."""
+
+    fields = ("cell_top", "cell_sub")
+
+    def __init__(
+        self,
+        centroids_top: list[list[float]],
+        centroids_sub: list[list[list[float]]],
+        metric: str,
+        nprobe_top: int,
+        nprobe_sub: int,
+    ):
+        self.top, self.sub, self.metric = centroids_top, centroids_sub, metric
+        k_top, k_sub = len(centroids_top), max(len(s) for s in centroids_sub)
+        self.levels = _tree_probe_levels(
+            _probe_width(nprobe_top, k_top), _probe_width(nprobe_sub, k_sub),
+            k_top, k_sub,
+        )
+
+    def ranker(self, qv: list[float]):
+        """(nprobe_top, nprobe_sub) -> probed (top, sub) cells in rank
+        order; each child codebook is ranked at most once."""
+        tops = rank_centroids(self.top, qv, self.metric)
+        subs: dict[int, list[int]] = {}
+
+        def cells(level: tuple[int, int]) -> list[tuple]:
+            nt, ns = level
+            out = []
+            for t in tops[:nt]:
+                if t not in subs:
+                    subs[t] = rank_centroids(self.sub[t], qv, self.metric)
+                out += [(t, s) for s in subs[t][:ns]]
+            return out
+
+        return cells
+
+    @staticmethod
+    def clause(cells: list[tuple]) -> Column:
+        """OR-of-AND (cell_top = t AND cell_sub IN …) filter, tops in
+        the order given — partition pruning at both directory levels."""
+        by_top: dict[int, list[int]] = {}
+        for t, s in cells:
+            by_top.setdefault(t, []).append(s)
+        return functools.reduce(
+            lambda a, b: a | b,
+            [
+                (F.col("cell_top") == t) & F.col("cell_sub").isin(subs)
+                for t, subs in by_top.items()
+            ],
+        )
+
+
+def _probe_scan(
+    base: DataFrame,
+    router,
+    qv: list[float],
+    predicate: Column | str | None = None,
+    min_candidates: int | None = None,
+) -> tuple[DataFrame, list[tuple]]:
+    """Single-query routing: (pruned, predicate-filtered ``base``, the
+    probed cells) at the router's first level — or, with a predicate and
+    ``min_candidates``, the first level whose filtered pool reaches it
+    (:func:`_choose_probe_level`)."""
+    cells_at = router.ranker(qv)
+
+    def pruned_at(level) -> DataFrame:
+        return _apply_pred(base.filter(router.clause(cells_at(level))), predicate)
+
+    level = _choose_probe_level(
+        lambda lv: pruned_at(lv).count(),
+        router.levels,
+        min_candidates if predicate is not None else None,
+    )
+    return pruned_at(level), cells_at(level)
+
+
+def _batch_probe_scan(
+    base: DataFrame,
+    router,
+    queries: DataFrame,
+    query_id_col: str,
+    query_vec_col: str,
+    predicate: Column | str | None = None,
+    extra_fields: Sequence = (),
+    extra=None,
+) -> DataFrame:
+    """Batch routing: per query exactly the cells its single-query probe
+    reads at the router's first level. The union of those cells (sorted)
+    prunes ONE scan of ``base``; a broadcast (query_id, *cell fields,
+    _qv, *extra_fields) membership join fans each row out only to the
+    queries that probed its cell. ``extra(qv, cells)`` supplies the
+    codec columns of each (query, cell) row, e.g. a PQ lookup table."""
+    members = []
+    for qid, qv in _collect_query_vectors(queries, query_id_col, query_vec_col):
+        cells = router.ranker(qv)(router.levels[0])
+        more = extra(qv, cells) if extra is not None else [()] * len(cells)
+        members += [(qid, *map(int, c), qv, *m) for c, m in zip(cells, more)]
+    n = len(router.fields)
+    union = sorted({m[1 : 1 + n] for m in members})
+    mem = _membership_df(
+        queries, query_id_col, members, list(router.fields), extra_fields
+    )
+    return _apply_pred(base.filter(router.clause(union)), predicate).join(
+        F.broadcast(mem), on=list(router.fields)
+    )
+
+
+def _coarse_rescore(
+    coarse: DataFrame,
+    score: Column,
+    embeddings: DataFrame,
+    qv: list[float],
+    k: int,
+    rescore: int,
+    metric: str,
+    id_col: str,
+    vector_col: str,
+) -> DataFrame:
+    """Single-query tail: the top ``rescore·k`` ids of ``coarse`` by the
+    codec's ``score`` (TakeOrderedAndProject — no shuffle of scored
+    rows), broadcast into the float relation, exact top-k over those
+    candidates. ``rescore`` is the recall knob; the final top-k is exact
+    over the pool whatever the coarse loss."""
+    pool = (
+        coarse.select(F.col(id_col), score.alias("_coarse"))
+        .orderBy(F.col("_coarse").asc_nulls_last(), F.col(id_col).asc())
+        .limit(int(rescore) * k)
+    )
+    candidates = embeddings.join(
+        F.broadcast(pool.select(id_col)), on=id_col, how="inner"
+    )
+    return knn_scores(
+        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    )
 
 
 class IvfIndex:
@@ -110,22 +303,10 @@ class IvfIndex:
         (RAG over a tenant/date slice). With ``min_candidates`` set,
         ``nprobe`` doubles until the filtered candidate pool reaches it
         (or every cell is probed) — see :func:`_choose_probe_level`."""
-        qv = [float(x) for x in query_vector]
-        ranked = rank_centroids(self.centroids, qv, metric)
-        pred = _pred(predicate)
-
-        def pruned_at(n: int) -> DataFrame:
-            out = self.assigned.filter(F.col("centroid_id").isin(ranked[:n]))
-            return out.filter(pred) if pred is not None else out
-
-        nprobe = _choose_probe_level(
-            lambda n: pruned_at(n).count(),
-            _doubling_levels(nprobe, len(ranked)),
-            min_candidates if pred is not None else None,
-        )
-        return knn_scores(
-            pruned_at(nprobe), qv, k=k, metric=metric, id_col=self.id_col,
-            vector_col=self.vector_col,
+        return _flat_probe(
+            self.assigned, _IvfRouter(self.centroids, metric, nprobe),
+            query_vector, k, metric, self.id_col, self.vector_col, predicate,
+            min_candidates,
         )
 
     def batch_search(self, queries: DataFrame, **kwargs) -> DataFrame:
@@ -186,23 +367,29 @@ def ivf_search_parquet(
     not scored. ``min_candidates`` enables selectivity-aware nprobe
     doubling (each widening step counts only the pruned, filtered
     scan)."""
-    qv = [float(x) for x in query_vector]
-    ranked = rank_centroids(centroids, qv, metric)
-    pred = _pred(predicate)
-    base = spark.read.parquet(path)
-
-    def pruned_at(n: int) -> DataFrame:
-        out = base.filter(F.col("centroid_id").isin(ranked[:n]))
-        return out.filter(pred) if pred is not None else out
-
-    nprobe = _choose_probe_level(
-        lambda n: pruned_at(n).count(),
-        _doubling_levels(nprobe, len(ranked)),
-        min_candidates if pred is not None else None,
+    return _flat_probe(
+        spark.read.parquet(path), _IvfRouter(centroids, metric, nprobe),
+        query_vector, k, metric, id_col, vector_col, predicate, min_candidates,
     )
+
+
+def _flat_probe(
+    base: DataFrame,
+    router,
+    query_vector: Sequence[float],
+    k: int,
+    metric: str,
+    id_col: str,
+    vector_col: str,
+    predicate: Column | str | None,
+    min_candidates: int | None,
+) -> DataFrame:
+    """The float-store probe body: route, prune, exact top-k in the
+    probed cells (the float score is exact, so no rescore tail)."""
+    qv = [float(x) for x in query_vector]
+    pruned, _ = _probe_scan(base, router, qv, predicate, min_candidates)
     return knn_scores(
-        pruned_at(nprobe), qv, k=k, metric=metric, id_col=id_col,
-        vector_col=vector_col,
+        pruned, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
     )
 
 
@@ -257,18 +444,68 @@ def build_ivf_index(
     return IvfIndex(assigned, centroids, id_col, vector_col)
 
 
-# Session-scope index cache: build once per (cache_key, k_clusters),
-# probe many times — the build/probe split a production IVF has (the
-# build is a periodic batch job, probes are the steady-state workload).
-_IVF_CACHE: dict[tuple, IvfIndex] = {}
+# Session-scope index cache for IVF and tree indexes: build once per
+# key, probe many times — the build/probe split a production IVF has
+# (the build is a periodic batch job, probes are the steady-state
+# workload). ``_CACHE_LOCK`` guards both dicts; a per-key build lock
+# makes concurrent callers of one key share a single build. Entries live
+# until clear_index_cache / clear_tree_cache.
+_INDEX_CACHE: dict[tuple, object] = {}
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
+_CACHE_LOCK = threading.Lock()
+
+
+def _hashable(v):
+    """Cache-key normalization: list-valued build kwargs (keep_cols)
+    become tuples so the session-cache key stays hashable."""
+    return tuple(v) if isinstance(v, list) else v
+
+
+def _cached_index(
+    kind: str, build, embeddings: DataFrame, cache_key, sizes: dict,
+    build_kwargs: dict,
+):
+    """``build(embeddings, **sizes, **build_kwargs)`` through the session
+    cache; ``cache_key=None`` always builds. The key is (kind,
+    cache_key, the input relation's ``semanticHash()``, sizes, build
+    kwargs normalized against ``build``'s defaults): two relations
+    under one cache_key never share an index, and a kwarg passed at its
+    default hits the same entry as one omitted."""
+    if cache_key is None:
+        return build(embeddings, **sizes, **build_kwargs)
+    # the build parameters are part of the identity — a sampled-fit
+    # index must never be returned to a caller asking for a full-fit
+    # one (or a different seed/max_iter)
+    norm = tuple(
+        (name, _hashable(build_kwargs.get(name, p.default)))
+        for name, p in inspect.signature(build).parameters.items()
+        if name != "embeddings" and name not in sizes
+    )
+    key = (kind, cache_key, embeddings.semanticHash(), *sizes.values(), norm)
+    with _CACHE_LOCK:
+        build_lock = _BUILD_LOCKS.setdefault(key, threading.Lock())
+    with build_lock:
+        with _CACHE_LOCK:
+            index = _INDEX_CACHE.get(key)
+        if index is None:
+            index = build(embeddings, **sizes, **build_kwargs)
+            with _CACHE_LOCK:
+                _INDEX_CACHE[key] = index
+    return index
+
+
+def _clear_cached(kind: str) -> None:
+    """Drop every cached index of ``kind`` and release its persisted
+    assignment."""
+    with _CACHE_LOCK:
+        for key in [key for key in _INDEX_CACHE if key[0] == kind]:
+            _INDEX_CACHE.pop(key).assigned.unpersist()
 
 
 def clear_index_cache() -> None:
     """Drop every session-cached IVF index and release its persisted
     assignment (benchmarks use this to make each build trial real)."""
-    for idx in _IVF_CACHE.values():
-        idx.assigned.unpersist()
-    _IVF_CACHE.clear()
+    _clear_cached("ivf")
 
 
 def get_or_build_ivf_index(
@@ -278,38 +515,15 @@ def get_or_build_ivf_index(
     **build_kwargs,
 ) -> IvfIndex:
     """Return a cached IvfIndex for (cache_key, input relation,
-    k_clusters, normalized build params), building it on first use.
+    k_clusters, normalized build params), building it on first use —
+    once, however many threads ask (:func:`_cached_index`).
     ``cache_key`` names the corpus (e.g. its path); pass None to always
     rebuild. Keeps per-call benchmarks honest: probe-time measurements
-    no longer pay a KMeans refit per query.
-
-    The key also folds in the input DataFrame's ``semanticHash()`` —
-    two callers passing DIFFERENT relations (e.g. a filtered corpus)
-    under the same cache_key must not silently share one index — and
-    normalizes ``build_kwargs`` against :func:`build_ivf_index`'s
-    defaults, so kwargs passed explicitly at their default value hit
-    the same entry as kwargs omitted."""
-    key = None
-    if cache_key is not None:
-        import inspect
-
-        # the build parameters are part of the identity — a sampled-fit
-        # index must never be returned to a caller asking for a
-        # full-fit one (or a different seed/max_iter)
-        params = inspect.signature(build_ivf_index).parameters
-        norm = tuple(
-            (name, _hashable(build_kwargs.get(name, p.default)))
-            for name, p in params.items()
-            if name not in ("embeddings", "k_clusters")
-        )
-        key = (cache_key, embeddings.semanticHash(), k_clusters, norm)
-        cached = _IVF_CACHE.get(key)
-        if cached is not None:
-            return cached
-    index = build_ivf_index(embeddings, k_clusters=k_clusters, **build_kwargs)
-    if key is not None:
-        _IVF_CACHE[key] = index
-    return index
+    no longer pay a KMeans refit per query."""
+    return _cached_index(
+        "ivf", build_ivf_index, embeddings, cache_key,
+        {"k_clusters": k_clusters}, build_kwargs,
+    )
 
 
 def write_ivf_partitioned(index: IvfIndex, path: str) -> None:
@@ -482,28 +696,14 @@ class KMeansTreeIndex:
         :meth:`IvfIndex.search` — the probe set grows along
         :func:`_tree_probe_levels` (sub first, then top) until the
         filtered candidate pool reaches ``min_candidates``."""
-        qv = [float(x) for x in query_vector]
-        pred = _pred(predicate)
-
-        def pruned_at(level: tuple[int, int]) -> DataFrame:
-            nt, ns = level
-            clause = _tree_probe_clause(
-                self.centroids_top, self.centroids_sub, qv, nt, ns, metric
-            )
-            out = self.assigned.filter(clause)
-            return out.filter(pred) if pred is not None else out
-
-        level = _choose_probe_level(
-            lambda lv: pruned_at(lv).count(),
-            _tree_probe_levels(
-                nprobe_top, nprobe_sub,
-                len(self.centroids_top), max(len(s) for s in self.centroids_sub),
+        return _flat_probe(
+            self.assigned,
+            _TreeRouter(
+                self.centroids_top, self.centroids_sub, metric, nprobe_top,
+                nprobe_sub,
             ),
-            min_candidates if pred is not None else None,
-        )
-        return knn_scores(
-            pruned_at(level), qv, k=k, metric=metric, id_col=self.id_col,
-            vector_col=self.vector_col,
+            query_vector, k, metric, self.id_col, self.vector_col, predicate,
+            min_candidates,
         )
 
     def batch_search(self, queries: DataFrame, **kwargs) -> DataFrame:
@@ -513,26 +713,6 @@ class KMeansTreeIndex:
             self.assigned, self.centroids_top, self.centroids_sub, queries,
             id_col=self.id_col, vector_col=self.vector_col, **kwargs,
         )
-
-
-def _tree_probe_clause(
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    qv: list[float],
-    nprobe_top: int,
-    nprobe_sub: int,
-    metric: str,
-) -> Column:
-    """OR-of-AND (cell_top, cell_sub ∈ …) filter for the probed cells —
-    the shape that partition-prunes a two-level directory layout."""
-    import functools
-
-    tops = rank_centroids(centroids_top, qv, metric)[:nprobe_top]
-    clauses = []
-    for t in tops:
-        subs = rank_centroids(centroids_sub[t], qv, metric)[:nprobe_sub]
-        clauses.append((F.col("cell_top") == t) & F.col("cell_sub").isin(subs))
-    return functools.reduce(lambda a, b: a | b, clauses)
 
 
 def _tree_probe_levels(
@@ -680,13 +860,8 @@ def build_kmeans_tree_index(
     return KMeansTreeIndex(assigned, centroids_top, centroids_sub, id_col, vector_col)
 
 
-_TREE_CACHE: dict[tuple, KMeansTreeIndex] = {}
-
-
 def clear_tree_cache() -> None:
-    for idx in _TREE_CACHE.values():
-        idx.assigned.unpersist()
-    _TREE_CACHE.clear()
+    _clear_cached("tree")
 
 
 def get_or_build_kmeans_tree(
@@ -696,29 +871,12 @@ def get_or_build_kmeans_tree(
     cache_key: object | None = None,
     **build_kwargs,
 ) -> KMeansTreeIndex:
-    """Session-scope tree cache — same identity rules as
-    :func:`get_or_build_ivf_index`: corpus name + input relation's
-    semanticHash + default-normalized build params."""
-    key = None
-    if cache_key is not None:
-        import inspect
-
-        params = inspect.signature(build_kmeans_tree_index).parameters
-        norm = tuple(
-            (name, _hashable(build_kwargs.get(name, p.default)))
-            for name, p in params.items()
-            if name not in ("embeddings", "k_top", "k_sub")
-        )
-        key = (cache_key, embeddings.semanticHash(), k_top, k_sub, norm)
-        cached = _TREE_CACHE.get(key)
-        if cached is not None:
-            return cached
-    index = build_kmeans_tree_index(
-        embeddings, k_top=k_top, k_sub=k_sub, **build_kwargs
+    """Session-scope tree cache — same identity and locking rules as
+    :func:`get_or_build_ivf_index`."""
+    return _cached_index(
+        "tree", build_kmeans_tree_index, embeddings, cache_key,
+        {"k_top": k_top, "k_sub": k_sub}, build_kwargs,
     )
-    if key is not None:
-        _TREE_CACHE[key] = index
-    return index
 
 
 def write_tree_partitioned(index: KMeansTreeIndex, path: str) -> None:
@@ -758,28 +916,10 @@ def tree_search_parquet(
     reader alongside the cell filter); ``min_candidates`` widens the
     probe set along :func:`_tree_probe_levels` until the filtered
     candidate pool is large enough."""
-    qv = [float(x) for x in query_vector]
-    pred = _pred(predicate)
-    base = spark.read.parquet(path)
-
-    def pruned_at(level: tuple[int, int]) -> DataFrame:
-        nt, ns = level
-        out = base.filter(
-            _tree_probe_clause(centroids_top, centroids_sub, qv, nt, ns, metric)
-        )
-        return out.filter(pred) if pred is not None else out
-
-    level = _choose_probe_level(
-        lambda lv: pruned_at(lv).count(),
-        _tree_probe_levels(
-            nprobe_top, nprobe_sub,
-            len(centroids_top), max(len(s) for s in centroids_sub),
-        ),
-        min_candidates if pred is not None else None,
-    )
-    return knn_scores(
-        pruned_at(level), qv, k=k, metric=metric, id_col=id_col,
-        vector_col=vector_col,
+    return _flat_probe(
+        spark.read.parquet(path),
+        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+        query_vector, k, metric, id_col, vector_col, predicate, min_candidates,
     )
 
 
@@ -1079,8 +1219,7 @@ def filtered_recall(
     what a fixed-nprobe filtered search silently loses under a
     selective predicate."""
     qv = [float(x) for x in query_vector]
-    pred = _pred(predicate)
-    filtered = embeddings.filter(pred)
+    filtered = _apply_pred(embeddings, predicate)
     exact = [
         r[0] for r in knn_scores(filtered, qv, k, metric).collect()
     ]
@@ -1091,7 +1230,7 @@ def filtered_recall(
     fixed = [
         r[0]
         for r in index.search(qv, k=k, nprobe=nprobe, metric=metric,
-                              predicate=pred).collect()
+                              predicate=predicate).collect()
     ]
     # widened level computed once here so it can be *reported*. ONE
     # per-cell filtered count job + a driver-side cumulative sum over
@@ -1099,27 +1238,26 @@ def filtered_recall(
     # count jobs this loop used to issue (r4 verdict blemish #2): the
     # pool size at ANY nprobe is the prefix sum of per-cell counts in
     # rank order, and per-cell counts are k_clusters rows.
-    ranked = rank_centroids(index.centroids, qv, metric)
+    router = _IvfRouter(index.centroids, metric, nprobe)
+    ranked = router.ranker(qv)(len(index.centroids))
     per_cell = {
         r["centroid_id"]: r["n"]
-        for r in index.assigned.filter(pred)
+        for r in _apply_pred(index.assigned, predicate)
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
     cum, cum_at = 0, {}
-    for i, c in enumerate(ranked, start=1):
+    for i, (c,) in enumerate(ranked, start=1):
         cum += per_cell.get(c, 0)
         cum_at[i] = cum
 
     target = int(rescore_factor) * k
-    nprobe_eff = _choose_probe_level(
-        lambda n: cum_at[n], _doubling_levels(nprobe, len(ranked)), target
-    )
+    nprobe_eff = _choose_probe_level(lambda n: cum_at[n], router.levels, target)
     widened = [
         r[0]
         for r in index.search(qv, k=k, nprobe=nprobe_eff, metric=metric,
-                              predicate=pred).collect()
+                              predicate=predicate).collect()
     ]
     return spark.createDataFrame(
         [
@@ -1162,11 +1300,13 @@ def _membership_df(
     query_id_col: str,
     rows: list[tuple],
     cell_fields: list[str],
+    extra_fields: Sequence = (),
 ):
-    """(query_id, *cell columns, _qv) broadcast side for the batched
-    probe: which queries probe which cells, with the query vector riding
-    along so scoring needs no second join. Size is Q × nprobe rows —
-    driver/broadcast scale by construction."""
+    """(query_id, *cell columns, _qv, *extra_fields) broadcast side for
+    the batched probe: which queries probe which cells, with the query
+    vector (and any codec columns) riding along so scoring needs no
+    second join. Size is Q × nprobe rows — driver/broadcast scale by
+    construction."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -1180,6 +1320,7 @@ def _membership_df(
             StructField(query_id_col, queries.schema[query_id_col].dataType),
             *[StructField(c, IntegerType()) for c in cell_fields],
             StructField("_qv", ArrayType(DoubleType())),
+            *extra_fields,
         ]
     )
     return queries.sparkSession.createDataFrame(rows, schema)
@@ -1198,8 +1339,6 @@ def _batch_topk(
     InferWindowGroupLimit rewrite, so each scan task keeps only its k
     best rows per query (Partial WindowGroupLimit) before the keyed
     exchange — the scored candidate set never shuffles in full."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(score_col).asc_nulls_last(), F.col(id_col).asc()
     )
@@ -1207,6 +1346,71 @@ def _batch_topk(
         scored.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
+
+
+def _batch_coarse_rescore(
+    coarse: DataFrame,
+    score: Column,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rescore: int,
+    metric: str,
+    query_id_col: str,
+    query_vec_col: str,
+    id_col: str,
+    vector_col: str,
+) -> DataFrame:
+    """Batch tail, the twin of :func:`_coarse_rescore`: per query the top
+    ``rescore·k`` ids of ``coarse`` (query_id, id, …) by the codec's
+    ``score`` (Partial WindowGroupLimit), the (query_id, id) pool
+    broadcast into the float relation, the query vector re-attached,
+    exact per-query top-k — exact over each query's pool."""
+    scored = coarse.select(
+        F.col(query_id_col), F.col(id_col), score.alias("_coarse")
+    )
+    pool = _batch_topk(
+        scored, int(rescore) * k, query_id_col, id_col, "_coarse", "_crank"
+    ).select(query_id_col, id_col)
+    exact = (
+        embeddings.join(F.broadcast(pool), on=id_col)
+        .join(
+            F.broadcast(queries.select(query_id_col, query_vec_col)),
+            on=query_id_col,
+        )
+        .select(
+            F.col(query_id_col),
+            F.col(id_col),
+            distance(vector_col, F.col(query_vec_col), metric).alias("score"),
+        )
+    )
+    return _batch_topk(exact, k, query_id_col, id_col, "score", "rank")
+
+
+def _flat_batch_probe(
+    base: DataFrame,
+    router,
+    queries: DataFrame,
+    k: int,
+    metric: str,
+    query_id_col: str,
+    query_vec_col: str,
+    id_col: str,
+    vector_col: str,
+    score_col: str,
+    rank_col: str,
+    predicate: Column | str | None,
+) -> DataFrame:
+    """The float-store batch probe body: one routed scan scored exactly
+    against each member query's ``_qv``, per-query top-k cut."""
+    scored = _batch_probe_scan(
+        base, router, queries, query_id_col, query_vec_col, predicate
+    ).select(
+        F.col(query_id_col),
+        F.col(id_col),
+        distance(vector_col, F.col("_qv"), metric).alias(score_col),
+    )
+    return _batch_topk(scored, k, query_id_col, id_col, score_col, rank_col)
 
 
 def ivf_batch_search(
@@ -1232,15 +1436,15 @@ def ivf_batch_search(
     engine otherwise avoids, and exact ``knn.batch_knn`` scans the full
     corpus per batch.
 
-    Shape: centroids are ranked per query driver-side over the
-    already-driver-resident codebook (Q × k_clusters comparisons);
-    the union of probed cells becomes one ``centroid_id IN (...)``
-    filter (partition pruning on the persisted layout); a broadcast
-    (query_id, centroid_id, query_vec) membership join fans each
-    corpus row out ONLY to the queries that probed its cell; distances
-    compute in whole-stage codegen; and the per-query top-k cut is the
-    same Partial WindowGroupLimit shape as ``knn.batch_knn``
-    (knn.py:147-153) — zero Python nodes anywhere (plan-asserted in
+    Shape (:func:`_batch_probe_scan`): centroids are ranked per query
+    driver-side over the already-driver-resident codebook (Q ×
+    k_clusters comparisons); the union of probed cells becomes one
+    ``centroid_id IN (...)`` filter (partition pruning on the persisted
+    layout); a broadcast (query_id, centroid_id, query_vec) membership
+    join fans each corpus row out ONLY to the queries that probed its
+    cell; distances compute in whole-stage codegen; and the per-query
+    top-k cut is the same Partial WindowGroupLimit shape as
+    ``knn.batch_knn`` — zero Python nodes anywhere (plan-asserted in
     tests/test_batch_ann.py). Per query the candidate set is exactly
     the cells its single-query ``search`` would probe, so results are
     row-identical to the per-query loop at equal nprobe.
@@ -1248,24 +1452,11 @@ def ivf_batch_search(
     ``predicate`` filters inside the pruned scan (filtered batch
     retrieval); selectivity-aware widening is per-query by nature and
     stays a single-query concern (``IvfIndex.search(min_candidates=)``)."""
-    qrows = _collect_query_vectors(queries, query_id_col, query_vec_col)
-    nprobe = max(1, min(int(nprobe), len(centroids)))
-    members = []
-    for qid, qv in qrows:
-        for c in rank_centroids(centroids, qv, metric)[:nprobe]:
-            members.append((qid, int(c), qv))
-    union_cells = sorted({m[1] for m in members})
-    mem = _membership_df(queries, query_id_col, members, ["centroid_id"])
-    pred = _pred(predicate)
-    pruned = assigned.filter(F.col("centroid_id").isin(union_cells))
-    if pred is not None:
-        pruned = pruned.filter(pred)
-    scored = pruned.join(F.broadcast(mem), on="centroid_id").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        distance(vector_col, F.col("_qv"), metric).alias(score_col),
+    return _flat_batch_probe(
+        assigned, _IvfRouter(centroids, metric, nprobe), queries, k, metric,
+        query_id_col, query_vec_col, id_col, vector_col, score_col, rank_col,
+        predicate,
     )
-    return _batch_topk(scored, k, query_id_col, id_col, score_col, rank_col)
 
 
 def ivf_batch_search_parquet(
@@ -1280,50 +1471,6 @@ def ivf_batch_search_parquet(
     the whole batch reads at most ``|union cells|/k_clusters`` of the
     directory tree once — not per query."""
     return ivf_batch_search(spark.read.parquet(path), centroids, queries, **kwargs)
-
-
-def _tree_batch_membership(
-    queries: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    nprobe_top: int,
-    nprobe_sub: int,
-    metric: str,
-):
-    """Shared batched-tree probe planning: per query rank top cells then
-    only the probed cells' child codebooks (driver-side, sub-linear in
-    cell count like the single-query path), returning (a) the broadcast
-    (query_id, cell_top, cell_sub, _qv) membership relation and (b) the
-    union OR-of-AND clause — per top cell, the union of probed subs —
-    that partition-prunes the two-level layout. Used by the float,
-    int8, and PQ batched tree probes so all three share one planning
-    rule."""
-    import functools
-
-    qrows = _collect_query_vectors(queries, query_id_col, query_vec_col)
-    members = []
-    for qid, qv in qrows:
-        tops = rank_centroids(centroids_top, qv, metric)[:nprobe_top]
-        for t in tops:
-            subs = rank_centroids(centroids_sub[t], qv, metric)[:nprobe_sub]
-            for s in subs:
-                members.append((qid, int(t), int(s), qv))
-    mem = _membership_df(
-        queries, query_id_col, members, ["cell_top", "cell_sub"]
-    )
-    by_top: dict[int, set[int]] = {}
-    for _qid, t, s, _qv in members:
-        by_top.setdefault(t, set()).add(s)
-    clause = functools.reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("cell_top") == t) & F.col("cell_sub").isin(sorted(subs))
-            for t, subs in sorted(by_top.items())
-        ],
-    )
-    return mem, clause
 
 
 def tree_batch_search(
@@ -1350,22 +1497,12 @@ def tree_batch_search(
     fan out via a broadcast membership join on both cell columns, cut
     per query with the Partial-WindowGroupLimit shape. Row-identical to
     the per-query ``KMeansTreeIndex.search`` loop at equal nprobes."""
-    mem, clause = _tree_batch_membership(
-        queries, query_id_col, query_vec_col, centroids_top, centroids_sub,
-        nprobe_top, nprobe_sub, metric,
+    return _flat_batch_probe(
+        assigned,
+        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+        queries, k, metric, query_id_col, query_vec_col, id_col, vector_col,
+        score_col, rank_col, predicate,
     )
-    pred = _pred(predicate)
-    pruned = assigned.filter(clause)
-    if pred is not None:
-        pruned = pruned.filter(pred)
-    scored = pruned.join(
-        F.broadcast(mem), on=["cell_top", "cell_sub"]
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        distance(vector_col, F.col("_qv"), metric).alias(score_col),
-    )
-    return _batch_topk(scored, k, query_id_col, id_col, score_col, rank_col)
 
 
 def tree_batch_search_parquet(
@@ -2908,8 +3045,7 @@ def graph_search_filtered(
         graph, embeddings, queries, entry_ids, beam=beam, rounds=rounds,
         metric=metric, id_col=id_col, vector_col=vector_col,
     )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    passing = embeddings.filter(pred).select(
+    passing = _apply_pred(embeddings, predicate).select(
         F.col(id_col).alias("vec_id")
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -44,14 +44,34 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField
 
 from ydb_vector_search_demo_spark.functions.vector import (
     l2_norm,
     to_double_array,
 )
+from ydb_vector_search_demo_spark.operators.ann import (
+    _IvfRouter,
+    _TreeRouter,
+    _apply_pred,
+    _batch_coarse_rescore,
+    _batch_probe_scan,
+    _coarse_rescore,
+    _collect_query_vectors,
+    _membership_df,
+    _probe_scan,
+    recall_at_k,
+)
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
 Codebooks = list[list[list[float]]]  # m × k* × (dim/m)
+
+# codec columns of a batched ADC probe's broadcast side: the query's
+# lookup table and norm (:func:`_query_lut`)
+_LUT_FIELDS = (
+    StructField("_lut", ArrayType(ArrayType(DoubleType()))),
+    StructField("_qn", DoubleType()),
+)
 
 # OPQ (r6 verdict task #2): every train/encode/LUT seam below accepts an
 # optional orthonormal ``rotation`` (operators.rotation — fit with
@@ -104,16 +124,6 @@ def _maybe_rotate_q(query_vector: Sequence[float], rotation) -> list[float]:
     from ydb_vector_search_demo_spark.operators.rotation import rotate_vector
 
     return rotate_vector(qv, rotation)
-
-
-def _apply_pred(df: DataFrame, predicate) -> DataFrame:
-    """Filtered-search seam shared with quant._apply_pred: optional
-    Column / SQL-string predicate applied inside a coarse scan (filter
-    columns must be in the store — ``keep_cols`` at encode/write time);
-    the final top-k stays exact over the filtered pool."""
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    return df if predicate is None else df.filter(predicate)
 
 
 def subspace_bounds(dim: int, m: int) -> list[tuple[int, int]]:
@@ -293,6 +303,31 @@ def adc_lut(
     return lut
 
 
+def adc_score_col(
+    codes_col: Column | str,
+    lut_col: Column,
+    metric: str,
+    qnorm_col: Column,
+    norm_col: Column | str = "vnorm",
+) -> Column:
+    """Column-LUT twin of :func:`adc_score` for batched probes: the
+    lookup table and query norm arrive as (broadcast) columns instead
+    of plan literals — same m lookups + fold, JVM-side."""
+    codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
+    nrm = F.col(norm_col) if isinstance(norm_col, str) else norm_col
+    picked = F.zip_with(
+        codes, lut_col, lambda c, row: F.element_at(row, c.cast("int") + 1)
+    )
+    total = F.aggregate(picked, F.lit(0.0), lambda acc, x: acc + x)
+    if metric in ("euclidean", "manhattan"):
+        return total
+    if metric == "inner_product":
+        return -total
+    if metric == "cosine":
+        return F.lit(1.0) - F.try_divide(total, nrm * qnorm_col)
+    raise ValueError(f"unknown metric {metric!r}")
+
+
 def adc_score(
     codes_col: Column | str,
     lut: list[list[float]],
@@ -304,22 +339,30 @@ def adc_score(
     lookups + a fold, all JVM-side. Cosine divides the reconstructed
     dot by the EXACT stored norm (NULL-lawful for zero norms, matching
     functions.vector.cosine_similarity)."""
-    codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    nrm = F.col(norm_col) if isinstance(norm_col, str) else norm_col
-    picked = F.zip_with(
-        codes,
-        F.lit([[float(x) for x in row] for row in lut]),
-        lambda c, row: F.element_at(row, c.cast("int") + 1),
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vector))
+    return adc_score_col(
+        codes_col, F.lit([[float(x) for x in row] for row in lut]), metric,
+        F.lit(qn), norm_col,
     )
-    total = F.aggregate(picked, F.lit(0.0), lambda acc, x: acc + x)
-    if metric in ("euclidean", "manhattan"):
-        return total
-    if metric == "inner_product":
-        return -total
-    if metric == "cosine":
-        qn = math.sqrt(sum(float(x) * float(x) for x in query_vector))
-        return F.lit(1.0) - F.try_divide(total, nrm * F.lit(qn))
-    raise ValueError(f"unknown metric {metric!r}")
+
+
+def _query_lut(
+    qv: list[float], codebooks: Codebooks, metric: str, rotation
+) -> tuple[list[list[float]], float]:
+    """(LUT, norm) of the query — OPQ-rotated first when ``rotation`` is
+    given: the per-query codec columns of a batched ADC probe."""
+    cq = _maybe_rotate_q(qv, rotation)
+    return adc_lut(cq, codebooks, metric), math.sqrt(sum(x * x for x in cq))
+
+
+def _adc_query_score(
+    qv: list[float], codebooks: Codebooks, metric: str, codes_col, norm_col,
+    rotation,
+) -> Column:
+    """Single-query ADC coarse score: the global LUT of the (OPQ-rotated)
+    query as a plan literal."""
+    cq = _maybe_rotate_q(qv, rotation)
+    return adc_score(codes_col, adc_lut(cq, codebooks, metric), metric, cq, norm_col)
 
 
 def pq_search(
@@ -345,21 +388,10 @@ def pq_search(
     against the rotated-space codebooks; the rescore still runs on the
     original floats with the original query."""
     qv = [float(x) for x in query_vector]
-    cq = _maybe_rotate_q(qv, rotation)
-    lut = adc_lut(cq, codebooks, metric)
-    coarse = (
-        _apply_pred(encoded, predicate).select(
-            F.col(id_col),
-            adc_score(codes_col, lut, metric, cq, norm_col).alias("pq_score"),
-        )
-        .orderBy(F.col("pq_score").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        _apply_pred(encoded, predicate),
+        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -425,31 +457,15 @@ def ivf_pq_companion_search_parquet(
     store (stream_ivf_ingest's ``pq_rotation``) — the global LUT is
     built from the rotated query; probe ranking and rescore stay in
     the original basis."""
-    from ydb_vector_search_demo_spark.operators.ann import rank_centroids
-
     qv = [float(x) for x in query_vector]
-    probes = rank_centroids(centroids, qv, metric)[:nprobe]
-    cq = _maybe_rotate_q(qv, rotation)
-    lut = adc_lut(cq, codebooks, metric)
-    coarse = (
-        _apply_pred(
-            spark.read.parquet(store_path).filter(
-                F.col("centroid_id").isin(probes)
-            ),
-            predicate,
-        )
-        .select(
-            F.col(id_col),
-            adc_score(codes_col, lut, metric, cq, norm_col).alias("pq_score"),
-        )
-        .orderBy(F.col("pq_score").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
+    coarse, _ = _probe_scan(
+        spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
+        qv, predicate,
     )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        coarse,
+        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -511,28 +527,16 @@ def tree_pq_search_parquet(
     ``predicate`` applies inside the pruned scan; ``rotation`` is the
     OPQ basis of a rotated-codebook store (LUT from the rotated
     query, probes/rescore in the original basis)."""
-    from ydb_vector_search_demo_spark.operators.ann import _tree_probe_clause
-
     qv = [float(x) for x in query_vector]
-    clause = _tree_probe_clause(
-        centroids_top, centroids_sub, qv, nprobe_top, nprobe_sub, metric
+    coarse, _ = _probe_scan(
+        spark.read.parquet(store_path),
+        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+        qv, predicate,
     )
-    cq = _maybe_rotate_q(qv, rotation)
-    lut = adc_lut(cq, codebooks, metric)
-    coarse = (
-        _apply_pred(spark.read.parquet(store_path).filter(clause), predicate)
-        .select(
-            F.col(id_col),
-            adc_score(codes_col, lut, metric, cq, norm_col).alias("pq_score"),
-        )
-        .orderBy(F.col("pq_score").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        coarse,
+        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -661,48 +665,26 @@ def ivfpq_search_parquet(
     inside the pruned scan. ``rotation``: the OPQ basis the store was
     encoded under (probe ranking and rescore stay in the original
     basis — only the per-cell LUTs rotate)."""
-    from ydb_vector_search_demo_spark.operators.ann import rank_centroids
-
     qv = [float(x) for x in query_vector]
-    probes = rank_centroids(centroids, qv, metric)[:nprobe]
+    coarse, cells = _probe_scan(
+        spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
+        qv, predicate,
+    )
+    probes = [c for (c,) in cells]
     luts = [
         _ivfpq_cell_lut(qv, centroids[t], codebooks, metric, rotation=rotation)
         for t in probes
     ]
-    base = _apply_pred(
-        spark.read.parquet(store_path).filter(
-            F.col("centroid_id").isin(probes)
-        ),
-        predicate,
-    )
     probe_idx = F.array_position(
-        F.lit([int(t) for t in probes]), F.col("centroid_id")
+        F.lit(probes), F.col("centroid_id")
     )  # 1-based index into the LUT stack
-    cell_lut = F.element_at(F.lit(luts), probe_idx.cast("int"))
-    codes = F.col(codes_col)
-    picked = F.zip_with(
-        codes, cell_lut, lambda cc, row: F.element_at(row, cc.cast("int") + 1)
+    score = adc_score_col(
+        codes_col, F.element_at(F.lit(luts), probe_idx.cast("int")), metric,
+        F.lit(math.sqrt(sum(x * x for x in qv))), norm_col,
     )
-    total = F.aggregate(picked, F.lit(0.0), lambda acc, x: acc + x)
-    if metric in ("euclidean", "manhattan"):
-        score = total
-    elif metric == "inner_product":
-        score = -total
-    elif metric == "cosine":
-        qn = math.sqrt(sum(x * x for x in qv))
-        score = F.lit(1.0) - F.try_divide(total, F.col(norm_col) * F.lit(qn))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    coarse = (
-        base.select(F.col(id_col), score.alias("pq_score"))
-        .orderBy(F.col("pq_score").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        coarse, score,
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -736,61 +718,21 @@ def ivfpq_batch_search_parquet(
     Partial-WindowGroupLimit cut, shared exact rescore. Per query
     row-identical to the single-query :func:`ivfpq_search_parquet`
     loop at equal nprobe/rescore (equality-tested)."""
-    import math as _math
+    def cell_luts(qv: list[float], cells: list[tuple]) -> list[tuple]:
+        qn = math.sqrt(sum(x * x for x in qv))
+        return [
+            (_ivfpq_cell_lut(qv, centroids[c], codebooks, metric, rotation=rotation), qn)
+            for (c,) in cells
+        ]
 
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    from ydb_vector_search_demo_spark.operators.ann import (
-        _batch_topk,
-        rank_centroids,
-    )
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    nprobe = max(1, min(int(nprobe), len(centroids)))
-    rows = []
-    for r in queries.select(query_id_col, query_vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        qn = _math.sqrt(sum(x * x for x in qv))
-        for t in rank_centroids(centroids, qv, metric)[:nprobe]:
-            lut = _ivfpq_cell_lut(
-                qv, centroids[t], codebooks, metric, rotation=rotation
-            )
-            rows.append((r[0], int(t), qv, lut, qn))
-    union_cells = sorted({t for _, t, _, _, _ in rows})
-    mem = spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField(
-                    query_id_col, queries.schema[query_id_col].dataType
-                ),
-                StructField("centroid_id", IntegerType()),
-                StructField("_qv", ArrayType(DoubleType())),
-                StructField("_lut", ArrayType(ArrayType(DoubleType()))),
-                StructField("_qn", DoubleType()),
-            ]
+    return _batch_coarse_rescore(
+        _batch_probe_scan(
+            spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
+            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
+            cell_luts,
         ),
-    )
-    pruned = _apply_pred(
-        spark.read.parquet(store_path).filter(
-            F.col("centroid_id").isin(union_cells)
-        ),
-        predicate,
-    )
-    coarse = pruned.join(F.broadcast(mem), on="centroid_id").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        adc_score_col(
-            codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col
-        ).alias("pq_score"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "pq_score", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -817,10 +759,7 @@ def ivfpq_recall(
     index, train residual codebooks, write the IVF-PQ store under
     ``tmp_path``, probe it, and report recall@k vs exact — alongside
     the bytes-per-vector of the probed store."""
-    from ydb_vector_search_demo_spark.operators.ann import (
-        get_or_build_ivf_index,
-        recall_at_k,
-    )
+    from ydb_vector_search_demo_spark.operators.ann import get_or_build_ivf_index
 
     qv = [float(x) for x in query_vector]
     exact = [
@@ -885,8 +824,6 @@ def pq_recall(
     """One-row report: recall@k of (a) the raw ADC ordering and (b)
     ADC + exact rescore, vs exact float KNN — the PQ counterpart of
     quant.quantized_recall, with the compression ratio alongside."""
-    from ydb_vector_search_demo_spark.operators.ann import recall_at_k
-
     qv = [float(x) for x in query_vector]
     exact = [
         r[0]
@@ -959,7 +896,6 @@ def opq_recall(
     Honest-reporting contract as mrl/pca_recall: near-isotropic
     synthetic corpora show small MSE gains; correlated real embeddings
     are where the rotation pays."""
-    from ydb_vector_search_demo_spark.operators.ann import recall_at_k
     from ydb_vector_search_demo_spark.operators.rotation import (
         fit_opq_rotation,
     )
@@ -1146,73 +1082,6 @@ def pq_drift_report(
 # --------------------------------------------------------------------------
 
 
-def adc_score_col(
-    codes_col: Column | str,
-    lut_col: Column,
-    metric: str,
-    qnorm_col: Column,
-    norm_col: Column | str = "vnorm",
-) -> Column:
-    """Column-LUT twin of :func:`adc_score` for batched probes: the
-    lookup table and query norm arrive as (broadcast) columns instead
-    of plan literals — same m lookups + fold, JVM-side."""
-    codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    nrm = F.col(norm_col) if isinstance(norm_col, str) else norm_col
-    picked = F.zip_with(
-        codes, lut_col, lambda c, row: F.element_at(row, c.cast("int") + 1)
-    )
-    total = F.aggregate(picked, F.lit(0.0), lambda acc, x: acc + x)
-    if metric in ("euclidean", "manhattan"):
-        return total
-    if metric == "inner_product":
-        return -total
-    if metric == "cosine":
-        return F.lit(1.0) - F.try_divide(total, nrm * qnorm_col)
-    raise ValueError(f"unknown metric {metric!r}")
-
-
-def _pq_query_batch_df(
-    queries: DataFrame,
-    codebooks: Codebooks,
-    metric: str,
-    query_id_col: str,
-    query_vec_col: str,
-    extra: dict | None = None,
-    rotation=None,
-):
-    """Broadcast side for batched ADC: (query_id, _qv, _lut, _qn
-    [, extra cell columns]) — LUTs computed driver-side over the
-    driver-resident codebooks, exactly like the single-query path
-    (``rotation``: OPQ stores — the LUT is built from the rotated
-    query, the norm and rescore vector stay original)."""
-    import math as _math
-
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    rows = []
-    for r in queries.select(query_id_col, query_vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        cq = _maybe_rotate_q(qv, rotation)
-        lut = adc_lut(cq, codebooks, metric)
-        qn = _math.sqrt(sum(x * x for x in cq))
-        if extra is None:
-            rows.append((r[0], qv, lut, qn))
-        else:
-            for cell in extra[r[0]]:
-                rows.append((r[0], int(cell), qv, lut, qn))
-    fields = [StructField(query_id_col, queries.schema[query_id_col].dataType)]
-    if extra is not None:
-        fields.append(StructField("centroid_id", IntegerType()))
-    fields += [
-        StructField("_qv", ArrayType(DoubleType())),
-        StructField("_lut", ArrayType(ArrayType(DoubleType()))),
-        StructField("_qn", DoubleType()),
-    ]
-    return queries.sparkSession.createDataFrame(rows, StructType(fields))
-
-
 def pq_batch_search(
     encoded: DataFrame,
     embeddings: DataFrame,
@@ -1235,25 +1104,15 @@ def pq_batch_search(
     Partial-WindowGroupLimit coarse cut, shared exact batch rescore.
     Per query row-identical to :func:`pq_search` at equal parameters
     (equality-tested, with and without an OPQ ``rotation``)."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    qb = _pq_query_batch_df(
-        queries, codebooks, metric, query_id_col, query_vec_col,
-        rotation=rotation,
-    )
-    coarse = _apply_pred(encoded, predicate).crossJoin(F.broadcast(qb)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        adc_score_col(
-            codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col
-        ).alias("pq_score"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "pq_score", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+    rows = [
+        (qid, qv, *_query_lut(qv, codebooks, metric, rotation))
+        for qid, qv in _collect_query_vectors(queries, query_id_col, query_vec_col)
+    ]
+    qb = _membership_df(queries, query_id_col, rows, [], _LUT_FIELDS)
+    return _batch_coarse_rescore(
+        _apply_pred(encoded, predicate).crossJoin(F.broadcast(qb)),
+        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1288,68 +1147,15 @@ def tree_pq_batch_search_parquet(
     Partial-WindowGroupLimit coarse cut, shared exact batch rescore.
     Per query row-identical to the single-query
     :func:`tree_pq_search_parquet` loop at equal nprobes/rescore."""
-    import functools
-    import math as _math
-
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    from ydb_vector_search_demo_spark.operators.ann import (
-        _batch_topk,
-        rank_centroids,
-    )
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    rows = []
-    by_top: dict[int, set[int]] = {}
-    for r in queries.select(query_id_col, query_vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        cq = _maybe_rotate_q(qv, rotation)
-        lut = adc_lut(cq, codebooks, metric)
-        qn = _math.sqrt(sum(x * x for x in cq))
-        for t in rank_centroids(centroids_top, qv, metric)[:nprobe_top]:
-            for s in rank_centroids(centroids_sub[t], qv, metric)[:nprobe_sub]:
-                rows.append((r[0], int(t), int(s), qv, lut, qn))
-                by_top.setdefault(int(t), set()).add(int(s))
-    clause = functools.reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("cell_top") == t) & F.col("cell_sub").isin(sorted(subs))
-            for t, subs in sorted(by_top.items())
-        ],
-    )
-    mem = spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField(
-                    query_id_col, queries.schema[query_id_col].dataType
-                ),
-                StructField("cell_top", IntegerType()),
-                StructField("cell_sub", IntegerType()),
-                StructField("_qv", ArrayType(DoubleType())),
-                StructField("_lut", ArrayType(ArrayType(DoubleType()))),
-                StructField("_qn", DoubleType()),
-            ]
+    return _batch_coarse_rescore(
+        _batch_probe_scan(
+            spark.read.parquet(store_path),
+            _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
+            lambda qv, cells: [_query_lut(qv, codebooks, metric, rotation)] * len(cells),
         ),
-    )
-    coarse = (
-        _apply_pred(spark.read.parquet(store_path).filter(clause), predicate)
-        .join(F.broadcast(mem), on=["cell_top", "cell_sub"])
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            adc_score_col(
-                codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col
-            ).alias("pq_score"),
-        )
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "pq_score", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1379,42 +1185,14 @@ def ivf_pq_companion_batch_search_parquet(
     single-query :func:`ivf_pq_companion_search_parquet` loop at equal
     nprobe/rescore (equality-tested, with and without an OPQ
     ``rotation``)."""
-    from ydb_vector_search_demo_spark.operators.ann import (
-        _batch_topk,
-        rank_centroids,
-    )
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    nprobe = max(1, min(int(nprobe), len(centroids)))
-    probes = {
-        r[0]: rank_centroids(
-            centroids, [float(x) for x in r[1]], metric
-        )[:nprobe]
-        for r in queries.select(query_id_col, query_vec_col).collect()
-    }
-    union_cells = sorted({c for cs in probes.values() for c in cs})
-    qb = _pq_query_batch_df(
-        queries, codebooks, metric, query_id_col, query_vec_col, extra=probes,
-        rotation=rotation,
-    )
-    pruned = _apply_pred(
-        spark.read.parquet(pq_path).filter(
-            F.col("centroid_id").isin(union_cells)
+    return _batch_coarse_rescore(
+        _batch_probe_scan(
+            spark.read.parquet(pq_path), _IvfRouter(centroids, metric, nprobe),
+            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
+            lambda qv, cells: [_query_lut(qv, codebooks, metric, rotation)] * len(cells),
         ),
-        predicate,
-    )
-    coarse = pruned.join(F.broadcast(qb), on="centroid_id").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        adc_score_col(
-            "pq_codes", F.col("_lut"), metric, F.col("_qn"), "vnorm"
-        ).alias("pq_score"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "pq_score", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        adc_score_col("pq_codes", F.col("_lut"), metric, F.col("_qn"), "vnorm"),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 

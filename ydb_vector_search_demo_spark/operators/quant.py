@@ -44,6 +44,18 @@ from ydb_vector_search_demo_spark.functions.vector import (
     distance,
     to_double_array,
 )
+from ydb_vector_search_demo_spark.operators.ann import (
+    _IvfRouter,
+    _TreeRouter,
+    _apply_pred,
+    _batch_coarse_rescore,
+    _batch_probe_scan,
+    _coarse_rescore,
+    _collect_query_vectors,
+    _membership_df,
+    _probe_scan,
+    recall_at_k,
+)
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
 BITS_PER_WORD = 32  # sign-bit packing width; see module docstring
@@ -119,10 +131,9 @@ def coarse_distance(
     """Distance of an int8-quantized vector to a float query literal.
     Cosine skips the scale (scale-invariant); other metrics dequantize
     inline inside the same expression."""
-    qv = F.lit([float(x) for x in query_vector])
-    if metric == "cosine":
-        return distance(to_double_array(q_col), qv, metric)
-    return distance(dequantize_expr(q_col, scale_col), qv, metric)
+    return coarse_distance_col(
+        q_col, scale_col, F.lit([float(x) for x in query_vector]), metric
+    )
 
 
 def quantized_search(
@@ -154,35 +165,11 @@ def quantized_search(
     time). Selecting candidates under the predicate keeps the exact
     top-k of the FILTERED set, because rescore is exact over them."""
     qv = [float(x) for x in query_vector]
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        quantized = quantized.filter(predicate)
-    coarse = (
-        quantized.select(
-            F.col(id_col),
-            coarse_distance(q_col, scale_col, qv, metric).alias("qscore"),
-        )
-        .orderBy(F.col("qscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
+    return _coarse_rescore(
+        _apply_pred(quantized, predicate),
+        coarse_distance(q_col, scale_col, qv, metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
-    )
-
-
-def _apply_pred(df: DataFrame, predicate) -> DataFrame:
-    """Shared filtered-search seam: apply an optional Column / SQL-string
-    predicate inside a coarse scan (the filter columns must be in the
-    store — ``keep_cols`` at write time). Filtering the COARSE relation
-    keeps every serving path's exactness contract: the final top-k is
-    exact over the filtered candidate pool."""
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    return df if predicate is None else df.filter(predicate)
 
 
 def write_quantized_store(
@@ -279,29 +266,14 @@ def ivf_quantized_search_parquet(
     ``rescore·k`` from the float relation. ``predicate`` applies inside
     the pruned scan (filtered probe; columns via write-time
     ``keep_cols``)."""
-    from ydb_vector_search_demo_spark.operators.ann import rank_centroids
-
     qv = [float(x) for x in query_vector]
-    probes = rank_centroids(centroids, qv, metric)[:nprobe]
-    coarse = (
-        _apply_pred(
-            spark.read.parquet(quantized_path).filter(
-                F.col("centroid_id").isin(probes)
-            ),
-            predicate,
-        )
-        .select(
-            F.col(id_col),
-            coarse_distance("qvec", "qscale", qv, metric).alias("qscore"),
-        )
-        .orderBy(F.col("qscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
+    coarse, _ = _probe_scan(
+        spark.read.parquet(quantized_path), _IvfRouter(centroids, metric, nprobe),
+        qv, predicate,
     )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        coarse, coarse_distance("qvec", "qscale", qv, metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -351,26 +323,15 @@ def tree_quantized_search_parquet(
     (two-level partition pruning × ~4× fewer bytes — the levers
     multiply), coarse top-``rescore·k``, exact rescore from the float
     relation. ``predicate`` applies inside the pruned scan."""
-    from ydb_vector_search_demo_spark.operators.ann import _tree_probe_clause
-
     qv = [float(x) for x in query_vector]
-    clause = _tree_probe_clause(
-        centroids_top, centroids_sub, qv, nprobe_top, nprobe_sub, metric
+    coarse, _ = _probe_scan(
+        spark.read.parquet(quantized_path),
+        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+        qv, predicate,
     )
-    coarse = (
-        _apply_pred(spark.read.parquet(quantized_path).filter(clause), predicate)
-        .select(
-            F.col(id_col),
-            coarse_distance("qvec", "qscale", qv, metric).alias("qscore"),
-        )
-        .orderBy(F.col("qscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        coarse, coarse_distance("qvec", "qscale", qv, metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -438,10 +399,7 @@ def pack_query_bits(query_vector: Sequence[float]) -> list[int]:
 
 def hamming_distance(b_col: Column | str, query_words: Sequence[int]) -> Column:
     """popcount(xor) summed over words — the 1-bit coarse metric."""
-    b = F.col(b_col) if isinstance(b_col, str) else b_col
-    qw = F.lit([int(w) for w in query_words])
-    per_word = F.zip_with(b, qw, lambda x, y: F.bit_count(x.bitwiseXOR(y)))
-    return F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
+    return hamming_distance_col(b_col, F.lit([int(w) for w in query_words]))
 
 
 def binary_search(
@@ -459,19 +417,9 @@ def binary_search(
     bytes), exact rescore of the top ``rescore·k``. The 1-bit code is
     far lossier than int8, so the default rescore factor is wider."""
     qv = [float(x) for x in query_vector]
-    qwords = pack_query_bits(qv)
-    coarse = (
-        binarized.select(
-            F.col(id_col), hamming_distance(b_col, qwords).alias("hdist")
-        )
-        .orderBy(F.col("hdist").asc(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        binarized, hamming_distance(b_col, pack_query_bits(qv)),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -505,42 +453,19 @@ def binary_batch_search(
     coarse cut at the wide 1-bit rescore factor; shared exact batch
     rescore. Per query row-identical to the single-query
     :func:`binary_search` loop (equality-tested)."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
+    from pyspark.sql.types import ArrayType, LongType, StructField
 
     rows = [
-        (r[0], [float(x) for x in r[1]], pack_query_bits(r[1]))
-        for r in queries.select(query_id_col, query_vec_col).collect()
+        (qid, qv, pack_query_bits(qv))
+        for qid, qv in _collect_query_vectors(queries, query_id_col, query_vec_col)
     ]
-    qb = queries.sparkSession.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField(
-                    query_id_col, queries.schema[query_id_col].dataType
-                ),
-                StructField("_qv", ArrayType(DoubleType())),
-                StructField("_qw", ArrayType(LongType())),
-            ]
-        ),
+    qb = _membership_df(
+        queries, query_id_col, rows, [], [StructField("_qw", ArrayType(LongType()))]
     )
-    coarse = (
-        _apply_pred(binarized, predicate)
-        .crossJoin(F.broadcast(qb))
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            hamming_distance_col(b_col, F.col("_qw")).alias("hdist"),
-        )
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "hdist", "hrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+    return _batch_coarse_rescore(
+        _apply_pred(binarized, predicate).crossJoin(F.broadcast(qb)),
+        hamming_distance_col(b_col, F.col("_qw")),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -566,8 +491,6 @@ def quantized_recall(
     Hamming+rescore recall at 4·``rescore`` (the 1-bit code is far
     lossier, so its candidate pool must be wider for the same recall;
     the factor used is reported in ``bin_rescore``)."""
-    from ydb_vector_search_demo_spark.operators.ann import recall_at_k
-
     qv = [float(x) for x in query_vector]
     exact = [
         r[0] for r in knn_scores(embeddings, qv, k, metric, id_col=id_col,
@@ -670,24 +593,14 @@ def mrl_search(
     Without it the prefix is sliced inline from the full column —
     same semantics, no byte saving (the in-memory/testing path)."""
     qv = [float(x) for x in query_vector]
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    base = embeddings if predicate is None else embeddings.filter(predicate)
     score = (
         distance(F.col(prefix_col), F.lit(qv[: int(dims)]), metric)
         if prefix_col is not None
         else mrl_coarse_distance(vector_col, qv, dims, metric)
     )
-    coarse = (
-        base.select(F.col(id_col), score.alias("mscore"))
-        .orderBy(F.col("mscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        _apply_pred(embeddings, predicate), score,
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -725,29 +638,13 @@ def mrl_search_parquet(
 ) -> DataFrame:
     """Serving path: coarse pass over the persisted prefix store (the
     only full scan), exact rescore against the float relation."""
-    pref = spark.read.parquet(prefix_path)
-    # join the prefix store to nothing — it IS the coarse relation; the
-    # embeddings arg supplies full-width vectors for rescore only
     qv = [float(x) for x in query_vector]
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        pref = pref.filter(predicate)
-    coarse = (
-        pref.select(
-            F.col(id_col),
-            distance(F.col("prefix"), F.lit(qv[: int(dims)]), metric).alias(
-                "mscore"
-            ),
-        )
-        .orderBy(F.col("mscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    # the prefix store IS the coarse relation; the embeddings arg
+    # supplies full-width vectors for rescore only
+    return _coarse_rescore(
+        _apply_pred(spark.read.parquet(prefix_path), predicate),
+        distance(F.col("prefix"), F.lit(qv[: int(dims)]), metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -765,8 +662,6 @@ def mrl_recall(
     """Recall@k of the prefix coarse ordering and of coarse+rescore vs
     exact KNN, one row per prefix width — the report that sizes
     (dims, rescore) for a target recall, mirroring quantized_recall."""
-    from ydb_vector_search_demo_spark.operators.ann import recall_at_k
-
     qv = [float(x) for x in query_vector]
     exact = [
         r[0]
@@ -854,27 +749,11 @@ def mrl_quantized_search_parquet(
     float relation for the exact top-k. Same coarse→rescore guarantee
     as quantized_search: the final top-k is exact over the candidate
     pool whatever the coarse loss."""
-    store = spark.read.parquet(store_path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        store = store.filter(predicate)
     qv = [float(x) for x in query_vector]
-    coarse = (
-        store.select(
-            F.col(id_col),
-            coarse_distance("qprefix", "qscale", qv[: int(dims)], metric).alias(
-                "mqscore"
-            ),
-        )
-        .orderBy(F.col("mqscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        _apply_pred(spark.read.parquet(store_path), predicate),
+        coarse_distance("qprefix", "qscale", qv[: int(dims)], metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -900,43 +779,6 @@ def coarse_distance_col(
     return distance(dequantize_expr(q_col, scale_col), qv_col, metric)
 
 
-def _batch_rescore(
-    candidates: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str,
-    query_id_col: str,
-    query_vec_col: str,
-    id_col: str,
-    vector_col: str,
-) -> DataFrame:
-    """Exact rescore of per-query candidate pools: broadcast the
-    (query_id, id) pool into the float relation, re-attach the query
-    vector, exact distance, per-query WindowGroupLimit top-k — the
-    batch twin of the coarse→rescore contract (final top-k exact over
-    each query's pool)."""
-    from pyspark.sql import Window
-
-    pool = candidates.select(query_id_col, id_col)
-    cand = embeddings.join(F.broadcast(pool), on=id_col)
-    scored = cand.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)),
-        on=query_id_col,
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        distance(vector_col, F.col(query_vec_col), metric).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def quantized_batch_search(
     quantized: DataFrame,
     embeddings: DataFrame,
@@ -957,26 +799,12 @@ def quantized_batch_search(
     top-``rescore·k`` via Partial WindowGroupLimit, then the batch
     rescore. Per query row-identical to :func:`quantized_search` at
     equal parameters (equality-tested)."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        quantized = quantized.filter(predicate)
-    coarse = quantized.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        coarse_distance_col(q_col, scale_col, F.col(query_vec_col), metric).alias(
-            "qscore"
+    return _batch_coarse_rescore(
+        _apply_pred(quantized, predicate).crossJoin(
+            F.broadcast(queries.select(query_id_col, query_vec_col))
         ),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "qscore", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        coarse_distance_col(q_col, scale_col, F.col(query_vec_col), metric),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1070,31 +898,14 @@ def tree_quantized_batch_search_parquet(
     query row-identical to the single-query
     :func:`tree_quantized_search_parquet` loop at equal
     nprobes/rescore."""
-    from ydb_vector_search_demo_spark.operators.ann import (
-        _batch_topk,
-        _tree_batch_membership,
-    )
-
-    mem, clause = _tree_batch_membership(
-        queries, query_id_col, query_vec_col, centroids_top, centroids_sub,
-        nprobe_top, nprobe_sub, metric,
-    )
-    coarse = (
-        _apply_pred(spark.read.parquet(quantized_path).filter(clause), predicate)
-        .join(F.broadcast(mem), on=["cell_top", "cell_sub"])
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            coarse_distance_col("qvec", "qscale", F.col("_qv"), metric).alias(
-                "qscore"
-            ),
-        )
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "qscore", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+    return _batch_coarse_rescore(
+        _batch_probe_scan(
+            spark.read.parquet(quantized_path),
+            _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
+            queries, query_id_col, query_vec_col, predicate,
+        ),
+        coarse_distance_col("qvec", "qscale", F.col("_qv"), metric),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1121,27 +932,16 @@ def mrl_batch_search(
     Per query row-identical to the single-query :func:`mrl_search` loop
     at equal (dims, rescore) — equality-tested; dims = d with a full
     pool degenerates to exact ``batch_knn``."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    base = embeddings if predicate is None else embeddings.filter(predicate)
-    coarse = base.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
+    return _batch_coarse_rescore(
+        _apply_pred(embeddings, predicate).crossJoin(
+            F.broadcast(queries.select(query_id_col, query_vec_col))
+        ),
         distance(
             mrl_prefix(vector_col, dims),
             F.slice(F.col(query_vec_col), 1, int(dims)),
             metric,
-        ).alias("mscore"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "mscore", "mrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        ),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1166,27 +966,14 @@ def mrl_batch_search_parquet(
     d'/d of the float bytes ONCE; full-width vectors are fetched for
     Q × rescore·k broadcast candidates only. Per query row-identical to
     the single-query :func:`mrl_search_parquet` loop."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-
-    pref = spark.read.parquet(prefix_path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        pref = pref.filter(predicate)
-    coarse = pref.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
+    return _batch_coarse_rescore(
+        _apply_pred(spark.read.parquet(prefix_path), predicate).crossJoin(
+            F.broadcast(queries.select(query_id_col, query_vec_col))
+        ),
         distance(
             F.col("prefix"), F.slice(F.col(query_vec_col), 1, int(dims)), metric
-        ).alias("mscore"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "mscore", "mrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        ),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1212,30 +999,15 @@ def mrl_quantized_batch_search_parquet(
     scores the whole batch; per-query Partial-WindowGroupLimit cut;
     shared exact rescore. Per query row-identical to the single-query
     :func:`mrl_quantized_search_parquet` loop."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-
-    store = spark.read.parquet(store_path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        store = store.filter(predicate)
-    coarse = store.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
+    return _batch_coarse_rescore(
+        _apply_pred(spark.read.parquet(store_path), predicate).crossJoin(
+            F.broadcast(queries.select(query_id_col, query_vec_col))
+        ),
         coarse_distance_col(
-            "qprefix",
-            "qscale",
-            F.slice(F.col(query_vec_col), 1, int(dims)),
+            "qprefix", "qscale", F.slice(F.col(query_vec_col), 1, int(dims)),
             metric,
-        ).alias("mqscore"),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "mqscore", "mqrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        ),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -1264,38 +1036,14 @@ def ivf_quantized_batch_search_parquet(
     row-identical to the single-query
     :func:`ivf_quantized_search_parquet` loop at equal nprobe/rescore
     (equality-tested)."""
-    from ydb_vector_search_demo_spark.operators.ann import (
-        _batch_topk,
-        _collect_query_vectors,
-        _membership_df,
-        rank_centroids,
-    )
-
-    qrows = _collect_query_vectors(queries, query_id_col, query_vec_col)
-    nprobe = max(1, min(int(nprobe), len(centroids)))
-    members = []
-    for qid, qv in qrows:
-        for c in rank_centroids(centroids, qv, metric)[:nprobe]:
-            members.append((qid, int(c), qv))
-    union_cells = sorted({m[1] for m in members})
-    mem = _membership_df(queries, query_id_col, members, ["centroid_id"])
-    pruned = _apply_pred(
-        spark.read.parquet(quantized_path).filter(
-            F.col("centroid_id").isin(union_cells)
+    return _batch_coarse_rescore(
+        _batch_probe_scan(
+            spark.read.parquet(quantized_path), _IvfRouter(centroids, metric, nprobe),
+            queries, query_id_col, query_vec_col, predicate,
         ),
-        predicate,
-    )
-    coarse = pruned.join(F.broadcast(mem), on="centroid_id").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        coarse_distance_col("qvec", "qscale", F.col("_qv"), metric).alias(
-            "qscore"
-        ),
-    )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "qscore", "qrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+        coarse_distance_col("qvec", "qscale", F.col("_qv"), metric),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
+
+

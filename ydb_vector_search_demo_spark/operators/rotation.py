@@ -37,6 +37,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance, dot
+from ydb_vector_search_demo_spark.operators.ann import (
+    _apply_pred,
+    _batch_coarse_rescore,
+    _coarse_rescore,
+    recall_at_k,
+)
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
 Rotation = list[list[float]]
@@ -206,28 +212,17 @@ def pca_prefix_search(
     learned instead of assumed."""
     qv = [float(x) for x in query_vector]
     rq = rotate_vector(qv, rotation)[: int(dims)]
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    base = embeddings if predicate is None else embeddings.filter(predicate)
-    coarse = (
-        # the rotated prefix is materialized in its OWN projection:
-        # distance() references its vector argument several times
-        # (dot + norm), and CollapseProject would otherwise inline the
-        # d'×d rotation once per reference (pq._with_rotated rationale;
-        # measured ~2.5× on the benched sf0.1 row)
-        base.withColumn("_rp", rotate_expr(vector_col, rotation, dims))
-        .select(
-            F.col(id_col),
-            distance(F.col("_rp"), F.lit(rq), metric).alias("rscore"),
-        )
-        .orderBy(F.col("rscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    # the rotated prefix is materialized in its OWN projection:
+    # distance() references its vector argument several times (dot +
+    # norm), and CollapseProject would otherwise inline the d'×d
+    # rotation once per reference (pq._with_rotated rationale; measured
+    # ~2.5× on the benched sf0.1 row)
+    return _coarse_rescore(
+        _apply_pred(embeddings, predicate).withColumn(
+            "_rp", rotate_expr(vector_col, rotation, dims)
+        ),
+        distance(F.col("_rp"), F.lit(rq), metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -312,24 +307,10 @@ def pca_search_parquet(
     rotated query for the coarse stage and the raw query for rescore."""
     qv = [float(x) for x in query_vector]
     rq = rotate_vector(qv, rotation)[: int(dims)]
-    pref = spark.read.parquet(prefix_path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        pref = pref.filter(predicate)
-    coarse = (
-        pref.select(
-            F.col(id_col),
-            distance(F.col("prefix"), F.lit(rq), metric).alias("rscore"),
-        )
-        .orderBy(F.col("rscore").asc_nulls_last(), F.col(id_col).asc())
-        .limit(int(rescore) * k)
-    )
-    candidates = embeddings.join(
-        F.broadcast(coarse.select(id_col)), on=id_col, how="inner"
-    )
-    return knn_scores(
-        candidates, qv, k=k, metric=metric, id_col=id_col, vector_col=vector_col
+    return _coarse_rescore(
+        _apply_pred(spark.read.parquet(prefix_path), predicate),
+        distance(F.col("prefix"), F.lit(rq), metric),
+        embeddings, qv, k, rescore, metric, id_col, vector_col,
     )
 
 
@@ -376,29 +357,15 @@ def pca_batch_search(
     single-query :func:`pca_prefix_search` loop at equal
     (rotation, dims, rescore); dims = d with a corpus-covering pool
     degenerates to exact ``batch_knn``."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    base = embeddings if predicate is None else embeddings.filter(predicate)
     rq = _rotated_query_prefix(queries, rotation, dims, query_id_col, query_vec_col)
     coarse = (
-        base.select(
-            F.col(id_col), rotate_expr(vector_col, rotation, dims).alias("_rp")
-        )
+        _apply_pred(embeddings, predicate)
+        .select(F.col(id_col), rotate_expr(vector_col, rotation, dims).alias("_rp"))
         .crossJoin(F.broadcast(rq))
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            distance(F.col("_rp"), F.col("_rq"), metric).alias("rscore"),
-        )
     )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "rscore", "rrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+    return _batch_coarse_rescore(
+        coarse, distance(F.col("_rp"), F.col("_rq"), metric),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -426,25 +393,13 @@ def pca_batch_search_parquet(
     candidates only. Per query row-identical to the single-query
     :func:`pca_search_parquet` loop — ``quant.mrl_batch_search_parquet``
     with the learned basis supplying the prefix."""
-    from ydb_vector_search_demo_spark.operators.ann import _batch_topk
-    from ydb_vector_search_demo_spark.operators.quant import _batch_rescore
-
-    pref = spark.read.parquet(prefix_path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    if predicate is not None:
-        pref = pref.filter(predicate)
     rq = _rotated_query_prefix(queries, rotation, dims, query_id_col, query_vec_col)
-    coarse = pref.crossJoin(F.broadcast(rq)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        distance(F.col("prefix"), F.col("_rq"), metric).alias("rscore"),
+    coarse = _apply_pred(spark.read.parquet(prefix_path), predicate).crossJoin(
+        F.broadcast(rq)
     )
-    pool = _batch_topk(
-        coarse, int(rescore) * k, query_id_col, id_col, "rscore", "rrank"
-    )
-    return _batch_rescore(
-        pool, embeddings, queries, k, metric, query_id_col, query_vec_col,
+    return _batch_coarse_rescore(
+        coarse, distance(F.col("prefix"), F.col("_rq"), metric),
+        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
         id_col, vector_col,
     )
 
@@ -602,7 +557,6 @@ def pca_recall_report(
     contract of mrl_recall / ivf_batch_recall: near-isotropic synthetic
     embeddings gain little, low-rank real embeddings gain a lot — both
     are the report's job to reveal)."""
-    from ydb_vector_search_demo_spark.operators.ann import recall_at_k
     from ydb_vector_search_demo_spark.operators.quant import (
         mrl_coarse_distance,
         mrl_search,

@@ -3583,16 +3583,17 @@ def q_ann_tree_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle: with both centroid levels PINNED, the per-row
     (cell_top, cell_sub) assignment (ann.tree_assign), the driver-side
     nested probe ranking, the OR-of-AND cell cut
-    (ann._tree_probe_clause — the same clause that partition-prunes
+    (ann._TreeRouter.clause — the same clause that partition-prunes
     the tree directory layout) and the exact top-5 rescore are all
     pure arithmetic DuckDB recomputes from the raw floats. Mirrors
     ann_ivf_fixed one directory level deeper."""
     embs = _t(spark, sf_dir, "embeddings")
     assigned = ann.tree_assign(_IVF_FIXED_CENTS, _TREE_FIXED_SUB, embs)
-    clause = ann._tree_probe_clause(
-        _IVF_FIXED_CENTS, _TREE_FIXED_SUB, QV,
-        nprobe_top=2, nprobe_sub=1, metric="euclidean",
+    router = ann._TreeRouter(
+        _IVF_FIXED_CENTS, _TREE_FIXED_SUB, "euclidean", nprobe_top=2,
+        nprobe_sub=1,
     )
+    clause = router.clause(router.ranker(QV)(router.levels[0]))
     w = Window.orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
     return (
         assigned.filter(clause)
