@@ -1,11 +1,15 @@
 """The shared ANN probe core (operators/ann.py): one probe-width rule for
-every router × codec pairing, and one locked session index cache.
+every router × codec pairing, one codec column set shared by the batch
+writers and the streaming ingest, and one locked session cache.
 
 * ``nprobe*=0`` is clamped to one cell by the router, so it returns the
   same rows as ``nprobe*=1`` on the single-query and the batch path of
   the flat, SQ8 and PQ-companion stores, under IVF and tree routing.
-* concurrent ``get_or_build_ivf_index`` callers of one key share a
-  single build.
+* the batch-written int8 and PQ tree stores hold the same codec columns
+  as the streaming ingest's companion projection.
+* concurrent callers of one key share a single build in every session
+  cache: IVF indexes, BM25 postings, normalized, rotated and graph
+  stores.
 
 The stores use pinned centroids and codebooks (cut from the corpus
 itself), so no KMeans runs here.
@@ -13,6 +17,7 @@ itself), so no KMeans runs here.
 
 from __future__ import annotations
 
+import sys
 import threading
 import time
 from types import SimpleNamespace
@@ -20,9 +25,17 @@ from types import SimpleNamespace
 import pytest
 
 from tests.conftest import SF_SMOKE
-from ydb_vector_search_demo_spark.operators import ann, pq, quant
+from ydb_vector_search_demo_spark.operators import (
+    ann,
+    knn,
+    pq,
+    quant,
+    retrieval,
+    rotation,
+)
 from ydb_vector_search_demo_spark.pipeline import rag
 from ydb_vector_search_demo_spark.sources.tables import load_table
+from ydb_vector_search_demo_spark.streaming import ingest
 
 QUERIES = ["hash join spark", "window order data", "customer query line"]
 M = 4  # PQ subspaces
@@ -130,28 +143,83 @@ def test_zero_probe_width_clamps_to_one_cell(stores, codec, router, shape):
     assert at_zero == at_one
 
 
-def test_index_cache_builds_once_for_concurrent_callers(spark, monkeypatch):
-    """Four threads asking for one key at once get one build and one
-    shared index object."""
+def test_batch_and_stream_write_the_same_codec_columns(stores):
+    """The batch-written int8 and PQ tree stores hold exactly the rows
+    of the streaming ingest's companion projection over the same tree
+    assignment: one codec column set, byte for byte."""
+    s, key = stores, ["vec_id", "cell_top", "cell_sub"]
+    cols = key + ["qvec", "qscale", "pq_codes", "vnorm"]
+    batch = s.spark.read.parquet(s.path["sq8-tree"]).join(
+        s.spark.read.parquet(s.path["pq-tree"]), on=key
+    )
+    stream = ingest._with_companions(
+        ann.tree_assign(s.tree.centroids_top, s.tree.centroids_sub, s.embs),
+        quantize=True, pq_codebooks=s.books,
+    )
+    got = sorted(map(tuple, batch.select(*cols).collect()))
+    assert got
+    assert got == sorted(map(tuple, stream.select(*cols).collect()))
+
+
+KEY = "probe-core-lock-test"
+
+# cache -> (owner module, build function attribute, cache dict attribute or
+# None for the index cache, get-or-build call)
+CACHES = {
+    "ivf-index": (
+        ann, "build_ivf_index", None,
+        lambda e: ann.get_or_build_ivf_index(e, k_clusters=4, cache_key=KEY),
+    ),
+    "bm25": (
+        retrieval, "build_bm25_index", "_BM25_CACHE",
+        lambda e: retrieval.get_or_build_bm25_index(e, KEY),
+    ),
+    "normalized-store": (
+        knn, "write_normalized_store", "_NORM_STORE_CACHE",
+        lambda e: knn.get_or_write_normalized_store(e, KEY),
+    ),
+    "rotated-store": (
+        rotation, "write_rotated_store", "_STORE_CACHE",
+        lambda e: rotation.get_or_write_rotated_store(e, [[1.0]], KEY),
+    ),
+    "graph-store": (
+        ann, "write_graph_store", "_GRAPH_STORE_CACHE",
+        lambda e: ann.get_or_write_graph_store(e, e, KEY),
+    ),
+}
+
+
+@pytest.mark.parametrize("cache", list(CACHES))
+def test_index_cache_builds_once_for_concurrent_callers(spark, monkeypatch, cache):
+    """Eight threads (more than the test session's cores) asking one
+    session cache for one key at once get one build and one shared
+    result (a counting stand-in build function, so no real index or store is
+    built)."""
+    owner, build_attr, cache_attr, get = CACHES[cache]
     embs = load_table(spark, SF_SMOKE, "embeddings")
     builds = []
 
-    def slow_build(embeddings, k_clusters=16, **_kwargs):
-        builds.append(k_clusters)
+    def slow_build(embeddings, *args, **_kwargs):
+        builds.append(1)
         time.sleep(0.5)
-        return ann.IvfIndex(embeddings, [[0.0]], "vec_id", "embedding")
+        if cache == "ivf-index":
+            return ann.IvfIndex(embeddings, [[0.0]], "vec_id", "embedding")
+        return SimpleNamespace(postings=embeddings)
 
-    monkeypatch.setattr(ann, "build_ivf_index", slow_build)
-    barrier = threading.Barrier(4, timeout=60)
-    got: list = [None] * 4
+    monkeypatch.setattr(owner, build_attr, slow_build)
+    if cache_attr is not None:
+        monkeypatch.setattr(owner, cache_attr, {})
+    n = 8
+    barrier = threading.Barrier(n, timeout=60)
+    got: list = [None] * n
 
     def client(i: int) -> None:
         barrier.wait()
-        got[i] = ann.get_or_build_ivf_index(
-            embs, k_clusters=4, cache_key="probe-core-lock-test"
-        )
+        got[i] = get(embs)
 
-    threads = [threading.Thread(target=client, args=(i,)) for i in range(4)]
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
     try:
         for t in threads:
             t.start()
@@ -162,4 +230,5 @@ def test_index_cache_builds_once_for_concurrent_callers(spark, monkeypatch):
         assert got[0] is not None
         assert all(g is got[0] for g in got)
     finally:
+        sys.setswitchinterval(interval)
         ann.clear_index_cache()

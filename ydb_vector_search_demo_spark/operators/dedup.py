@@ -333,6 +333,31 @@ def minhash_signatures(
     )
 
 
+def _band_rows(bands: int, rows_per_band: int) -> Column:
+    """One (band_idx, band_hash) row per band of a row's ``signature``:
+    xxhash64 of the band's ``rows_per_band`` min-hashes joined as text.
+    The one banding rule of :func:`lsh_candidate_pairs` and
+    :func:`minhash_incremental_pairs`."""
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda bidx: F.xxhash64(
+                F.array_join(
+                    F.transform(
+                        F.slice(
+                            F.col("signature"),
+                            bidx * rows_per_band + 1,
+                            rows_per_band,
+                        ),
+                        lambda h: h.cast("string"),
+                    ),
+                    ",",
+                )
+            ),
+        )
+    ).alias("band_idx", "band_hash")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, bands: int = 16, rows_per_band: int = 4
 ) -> DataFrame:
@@ -343,27 +368,7 @@ def lsh_candidate_pairs(
     threshold near (1/b)^(1/r). The join key is (band_idx, band_hash):
     uniform 64-bit hashes, so the shuffle is skew-free by construction.
     """
-    banded = signatures.select(
-        "sid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(
-                                F.col("signature"),
-                                bidx * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                            lambda h: h.cast("string"),
-                        ),
-                        ",",
-                    )
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
+    banded = signatures.select("sid", _band_rows(bands, rows_per_band))
     left = banded.select(F.col("sid").alias("a"), "band_idx", "band_hash")
     right = banded.select(F.col("sid").alias("b"), "band_idx", "band_hash")
     return (
@@ -1083,25 +1088,7 @@ def minhash_incremental_pairs(
 
     def banded(sigs: DataFrame, side: str) -> DataFrame:
         return sigs.select(
-            F.col("sid").alias(side),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda bidx: F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice(
-                                    F.col("signature"),
-                                    bidx * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda h: h.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ),
-                )
-            ).alias("band_idx", "band_hash"),
+            F.col("sid").alias(side), _band_rows(bands, rows_per_band)
         )
 
     cands = (

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance
+from ydb_vector_search_demo_spark.session import _get_or_write
 
 
 def _double_sql(x: float) -> str:
@@ -419,20 +420,14 @@ def get_or_write_normalized_store(
 ) -> str:
     """Session-scoped build cache for the normalized store (the
     get_or_write_rotated_store contract): the normalize-and-persist
-    pass is paid once per corpus key; probes reuse it."""
-    import hashlib
-    import tempfile
-
-    key = (cache_key, id_col, vector_col)
-    path = _NORM_STORE_CACHE.get(key)
-    if path is None:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/ydbvs_normstore_{tag}"
-        write_normalized_store(
+    pass is paid once per corpus key, however many threads ask;
+    probes reuse it."""
+    return _get_or_write(
+        _NORM_STORE_CACHE, "ydbvs_normstore", (cache_key, id_col, vector_col),
+        lambda path: write_normalized_store(
             embeddings, path, id_col=id_col, vector_col=vector_col
-        )
-        _NORM_STORE_CACHE[key] = path
-    return path
+        ),
+    )
 
 
 def knn_cosine_normalized_parquet(

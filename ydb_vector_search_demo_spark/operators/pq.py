@@ -54,12 +54,17 @@ from ydb_vector_search_demo_spark.operators.ann import (
     _IvfRouter,
     _TreeRouter,
     _apply_pred,
+    _argmin,
     _batch_coarse_rescore,
     _batch_probe_scan,
+    _cell_rows,
+    _codebook,
     _coarse_rescore,
     _collect_query_vectors,
     _membership_df,
     _probe_scan,
+    _sq_dists,
+    _write_cells,
     recall_at_k,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
@@ -227,31 +232,41 @@ def encode_expr(
     — a pure map-side expression; the codebooks travel as literals.
     With ``rotation`` the vector is rotated into the OPQ basis first
     (matching the basis the codebooks were trained under)."""
+    return F.array(*[
+        _argmin(dists).cast("tinyint")
+        for dists in _subspace_dists(vector_col, codebooks, rotation)
+    ])
+
+
+def _subspace_dists(
+    vector_col: Column | str, codebooks: Codebooks, rotation=None
+) -> list[Column]:
+    """Per subspace, the squared L2 distances of the subvector to every
+    centroid of its codebook — the one nearest-cell rule
+    (``ann._sq_dists``) that :func:`encode_expr` argmins over and
+    :func:`reconstruction_error_expr` takes the minimum of."""
     v = _maybe_rotated(vector_col, rotation)
-
-    def dist_to(sub: Column):
-        # single-arg lambda: a 2-arg function would be interpreted by
-        # PySpark's HOF protocol as (element, index)
-        def inner(c: Column) -> Column:
-            return F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        return inner
-
-    codes = []
-    start = 0
+    out, start = [], 0
     for book in codebooks:
         length = len(book[0])
-        sub = F.slice(v, start + 1, length)
-        dists = F.transform(F.array(*[F.lit(c) for c in book]), dist_to(sub))
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("tinyint")
-        )
+        out.append(_sq_dists(F.slice(v, start + 1, length), _codebook(book)))
         start += length
-    return F.array(*codes)
+    return out
+
+
+def _pq_cols(
+    df: DataFrame, src_col: str, vector_col: str, codebooks: Codebooks,
+    rotation=None, codes_col="pq_codes", norm_col="vnorm", tmp="_opq_rotated",
+) -> tuple[DataFrame, dict[str, Column]]:
+    """The PQ codec's column set: (df', {codes_col, norm_col}) — codes of
+    ``src_col`` (the vector, or the IVF-PQ residual), rotated once into
+    the OPQ basis by :func:`_with_rotated` when a ``rotation`` is given,
+    and the exact float norm of the ORIGINAL ``vector_col``."""
+    rotated, rot_col = _with_rotated(df, src_col, rotation, tmp)
+    return rotated, {
+        codes_col: encode_expr(rot_col, codebooks),
+        norm_col: l2_norm(vector_col).cast("float"),
+    }
 
 
 def pq_encode(
@@ -268,13 +283,10 @@ def pq_encode(
     norm keeps cosine exact up to the reconstructed dot product, and is
     computed on the ORIGINAL vector (a rotation preserves it anyway).
     ``keep_cols`` carries metadata columns for filtered probes."""
-    rotated, rot_col = _with_rotated(vectors, vector_col, rotation)
-    return rotated.select(
-        F.col(id_col),
-        encode_expr(rot_col, codebooks).alias(codes_col),
-        l2_norm(vector_col).cast("float").alias(norm_col),
-        *[F.col(c) for c in keep_cols],
+    rotated, cols = _pq_cols(
+        vectors, vector_col, vector_col, codebooks, rotation, codes_col, norm_col
     )
+    return _cell_rows(rotated, id_col, cols, keep_cols=keep_cols)
 
 
 def adc_lut(
@@ -484,19 +496,13 @@ def write_tree_pq(
     ``index`` is an ``ann.KMeansTreeIndex``. ``keep_cols`` carries
     metadata for filtered probes. ``rotation``: OPQ basis for
     rotated-space codebooks (materialized once per row)."""
-    rotated, rot_col = _with_rotated(index.assigned, index.vector_col, rotation)
-    (
-        rotated.select(
-            F.col(index.id_col),
-            encode_expr(rot_col, codebooks).alias(codes_col),
-            l2_norm(index.vector_col).cast("float").alias(norm_col),
-            F.col("cell_top"),
-            F.col("cell_sub"),
-            *[F.col(c) for c in keep_cols],
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell_top", "cell_sub")
-        .parquet(path)
+    rotated, cols = _pq_cols(
+        index.assigned, index.vector_col, index.vector_col, codebooks,
+        rotation, codes_col, norm_col,
+    )
+    _write_cells(
+        _cell_rows(rotated, index.id_col, cols, _TreeRouter.fields, keep_cols),
+        _TreeRouter, path,
     )
 
 
@@ -588,19 +594,20 @@ def ivfpq_encode(
     rotation=None,
 ) -> DataFrame:
     """(id, centroid_id, residual codes, exact norm) — one map-only
-    pass; written ``partitionBy("centroid_id")`` this is the full
+    pass; written by cell (:func:`write_ivfpq_store`) this is the full
     IVF-PQ store: a probe partition-prunes to nprobe directories and
     scans m bytes + 4 per vector. ``keep_cols`` carries metadata for
     filtered probes."""
     res = index.assigned.withColumn(
         "_res", _residual_expr(index.vector_col, index.centroids)
     )
-    rotated, res_col = _with_rotated(res, "_res", rotation)
+    rotated, cols = _pq_cols(
+        res, "_res", index.vector_col, codebooks, rotation, codes_col, norm_col
+    )
     return rotated.select(
         F.col(index.id_col),
         F.col("centroid_id"),
-        encode_expr(res_col, codebooks).alias(codes_col),
-        l2_norm(index.vector_col).cast("float").alias(norm_col),
+        *[col.alias(name) for name, col in cols.items()],
         *[F.col(c) for c in keep_cols],
     )
 
@@ -609,9 +616,10 @@ def write_ivfpq_store(
     index, codebooks: Codebooks, path: str, keep_cols: tuple = (),
     rotation=None,
 ) -> None:
-    ivfpq_encode(
-        index, codebooks, keep_cols=keep_cols, rotation=rotation
-    ).write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    _write_cells(
+        ivfpq_encode(index, codebooks, keep_cols=keep_cols, rotation=rotation),
+        _IvfRouter, path,
+    )
 
 
 def _ivfpq_cell_lut(
@@ -985,29 +993,11 @@ def reconstruction_error_expr(
     the error is measured in the rotated space the codes live in
     (numerically equal to the original-space error of the rotated-back
     reconstruction, since rotation preserves L2)."""
-    v = _maybe_rotated(vector_col, rotation)
-
-    def dist_to(sub: Column):
-        def inner(c: Column) -> Column:
-            return F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        return inner
-
-    total: Column | None = None
-    start = 0
-    for book in codebooks:
-        length = len(book[0])
-        sub = F.slice(v, start + 1, length)
-        dists = F.transform(F.array(*[F.lit(c) for c in book]), dist_to(sub))
-        term = F.array_min(dists)
-        total = term if total is None else total + term
-        start += length
-    assert total is not None
-    return total
+    terms = [
+        F.array_min(dists)
+        for dists in _subspace_dists(vector_col, codebooks, rotation)
+    ]
+    return sum(terms[1:], terms[0])
 
 
 def pq_quantization_mse(

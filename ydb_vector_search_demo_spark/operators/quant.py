@@ -50,10 +50,12 @@ from ydb_vector_search_demo_spark.operators.ann import (
     _apply_pred,
     _batch_coarse_rescore,
     _batch_probe_scan,
+    _cell_rows,
     _coarse_rescore,
     _collect_query_vectors,
     _membership_df,
     _probe_scan,
+    _write_cells,
     recall_at_k,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
@@ -100,6 +102,31 @@ def dequantize_expr(q_col: Column | str, scale: Column | str) -> Column:
     return F.transform(to_double_array(q_col), lambda e: e * s)
 
 
+def _int8_cols(
+    vector_col: str, q_col="qvec", scale_col="qscale", scale_type="float"
+) -> dict[str, Column]:
+    """The int8 codec's column set: the quantized vector and its scale,
+    cast to ``scale_type`` (None keeps the DOUBLE scale of the
+    quantized-prefix store)."""
+    scale = int8_scale(vector_col)
+    return {
+        q_col: quantize_expr(vector_col, scale),
+        scale_col: scale if scale_type is None else scale.cast(scale_type),
+    }
+
+
+def _prefix_cols(vector_col: str, dims: int | None, rotation=None) -> dict[str, Column]:
+    """The prefix codec's column set: the leading ``dims`` coordinates
+    (Matryoshka) or, with a ``rotation``, the first ``dims`` rotated
+    coordinates (PCA/Hadamard basis; all of them for ``dims=None``).
+    Both are named ``prefix``, so a store serves one basis."""
+    if rotation is None:
+        return {"prefix": mrl_prefix(vector_col, dims)}
+    from ydb_vector_search_demo_spark.operators.rotation import rotate_expr
+
+    return {"prefix": rotate_expr(vector_col, rotation, dims)}
+
+
 def quantize_int8(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -113,12 +140,9 @@ def quantize_int8(
     and the coarse scan thereafter reads ~4× fewer bytes than float32.
     ``keep_cols`` carries metadata columns (tenant, label, date) into
     the quantized store so filtered coarse scans can push them down."""
-    scale = int8_scale(vector_col)
-    return vectors.select(
-        F.col(id_col),
-        quantize_expr(vector_col, scale).alias(q_col),
-        scale.cast("float").alias(scale_col),
-        *keep_cols,
+    return _cell_rows(
+        vectors, id_col, _int8_cols(vector_col, q_col, scale_col),
+        keep_cols=keep_cols,
     )
 
 
@@ -230,20 +254,17 @@ def write_ivf_quantized(index, path: str, keep_cols: tuple = ()) -> None:
     them; the float store keeps serving the c·k-row rescore. This is
     the realistic 100 TB serving layout. ``keep_cols`` carries metadata
     columns for filtered probes."""
-    assigned = index.assigned
-    scale = int8_scale(index.vector_col)
-    (
-        assigned.select(
-            F.col(index.id_col),
-            quantize_expr(index.vector_col, scale).alias("qvec"),
-            scale.cast("float").alias("qscale"),
-            F.col("centroid_id"),
-            *[F.col(c) for c in keep_cols],
-        )
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
+    _write_int8_cells(index, _IvfRouter, path, keep_cols)
+
+
+def _write_int8_cells(index, router, path: str, keep_cols: tuple) -> None:
+    """(id, qvec, qscale, *cell columns, *keep_cols) of an assigned
+    index, written through the cell writer."""
+    rows = _cell_rows(
+        index.assigned, index.id_col, _int8_cols(index.vector_col),
+        router.fields, keep_cols,
     )
+    _write_cells(rows, router, path)
 
 
 def ivf_quantized_search_parquet(
@@ -284,21 +305,7 @@ def write_tree_quantized(index, path: str, keep_cols: tuple = ()) -> None:
     qvec, qscale) partitioned by (cell_top, cell_sub), so a probe
     prunes BOTH directory levels and reads ~4× fewer bytes inside the
     probed leaves. ``keep_cols`` carries metadata for filtered probes."""
-    assigned = index.assigned
-    scale = int8_scale(index.vector_col)
-    (
-        assigned.select(
-            F.col(index.id_col),
-            quantize_expr(index.vector_col, scale).alias("qvec"),
-            scale.cast("float").alias("qscale"),
-            F.col("cell_top"),
-            F.col("cell_sub"),
-            *[F.col(c) for c in keep_cols],
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell_top", "cell_sub")
-        .parquet(path)
-    )
+    _write_int8_cells(index, _TreeRouter, path, keep_cols)
 
 
 def tree_quantized_search_parquet(
@@ -616,10 +623,8 @@ def write_mrl_store(
     made physical: the coarse scan reads d'/d of the float bytes. The
     full-width store stays where it is for candidate rescore (the same
     pairing as write_quantized_store)."""
-    embeddings.select(
-        F.col(id_col),
-        mrl_prefix(vector_col, dims).alias("prefix"),
-        *[F.col(c) for c in keep_cols],
+    _cell_rows(
+        embeddings, id_col, _prefix_cols(vector_col, dims), keep_cols=keep_cols
     ).write.mode("overwrite").parquet(path)
 
 
@@ -716,17 +721,12 @@ def write_mrl_quantized_store(
     the persisted coarse store holds d'/d × 1/4 of the float bytes
     (16 of 64 dims → 16×). The coarse scan stays a pure Column scan;
     the full-width float store still serves the exact rescore."""
-    pref = embeddings.select(
-        F.col(id_col),
-        mrl_prefix(vector_col, dims).alias("prefix"),
-        *[F.col(c) for c in keep_cols],
+    pref = _cell_rows(
+        embeddings, id_col, _prefix_cols(vector_col, dims), keep_cols=keep_cols
     )
-    scale = int8_scale("prefix")
-    pref.select(
-        F.col(id_col),
-        quantize_expr("prefix", scale).alias("qprefix"),
-        scale.alias("qscale"),
-        *[F.col(c) for c in keep_cols],
+    _cell_rows(
+        pref, id_col, _int8_cols("prefix", "qprefix", scale_type=None),
+        keep_cols=keep_cols,
     ).write.mode("overwrite").parquet(path)
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.textstats import token_count, tokens
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
+from ydb_vector_search_demo_spark.session import _evict, _get_or_build
 
 RRF_K = 60
 
@@ -828,20 +829,16 @@ def get_or_build_bm25_index(
 ) -> Bm25Index:
     """Session-scoped build cache (same contract as
     ann.get_or_build_ivf_index): the postings build is paid once per
-    (corpus, analyzer) key; probes reuse it."""
+    (corpus, analyzer) key, however many threads ask; probes reuse it."""
     key = (cache_key, kwargs.get("stem", False),
            tuple(kwargs.get("stopwords") or ()))
-    idx = _BM25_CACHE.get(key)
-    if idx is None:
-        idx = build_bm25_index(docs, **kwargs)
-        _BM25_CACHE[key] = idx
-    return idx
+    return _get_or_build(
+        _BM25_CACHE, key, lambda: build_bm25_index(docs, **kwargs)
+    )
 
 
 def clear_bm25_cache() -> None:
-    for idx in _BM25_CACHE.values():
-        idx.postings.unpersist()
-    _BM25_CACHE.clear()
+    _evict(_BM25_CACHE, lambda idx: idx.postings.unpersist())
 
 
 def bm25_index_batch_topk(

@@ -40,10 +40,13 @@ from ydb_vector_search_demo_spark.functions.vector import distance, dot
 from ydb_vector_search_demo_spark.operators.ann import (
     _apply_pred,
     _batch_coarse_rescore,
+    _cell_rows,
     _coarse_rescore,
     recall_at_k,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
+from ydb_vector_search_demo_spark.operators.quant import _prefix_cols
+from ydb_vector_search_demo_spark.session import _evict, _get_or_write
 
 Rotation = list[list[float]]
 
@@ -240,10 +243,9 @@ def write_rotated_store(
     coarse scan reads d'/d of the float bytes, and the store is
     append-maintainable with the same frozen rotation (the map is
     data-independent once fitted, like the frozen IVF centroids)."""
-    embeddings.select(
-        F.col(id_col),
-        rotate_expr(vector_col, rotation, dims).alias("prefix"),
-        *[F.col(c) for c in keep_cols],
+    _cell_rows(
+        embeddings, id_col, _prefix_cols(vector_col, dims, rotation),
+        keep_cols=keep_cols,
     ).write.mode("overwrite").parquet(path)
 
 
@@ -266,24 +268,17 @@ def get_or_write_rotated_store(
     reuse it. This is the SERVING split for the rotation lever — the
     build is the periodic batch job, the store probe is the steady
     state that reads d'/d of the float bytes."""
-    import hashlib
-    import tempfile
-
-    key = (cache_key, int(dims), id_col, vector_col)
-    path = _STORE_CACHE.get(key)
-    if path is None:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/ydbvs_rotated_{tag}"
-        write_rotated_store(
+    return _get_or_write(
+        _STORE_CACHE, "ydbvs_rotated", (cache_key, int(dims), id_col, vector_col),
+        lambda path: write_rotated_store(
             embeddings, path, rotation, dims=dims, id_col=id_col,
             vector_col=vector_col,
-        )
-        _STORE_CACHE[key] = path
-    return path
+        ),
+    )
 
 
 def clear_rotated_store_cache() -> None:
-    _STORE_CACHE.clear()
+    _evict(_STORE_CACHE)
 
 
 def pca_search_parquet(

@@ -37,6 +37,7 @@ from ydb_vector_search_demo_spark.operators.knn import (
     knn_topk_per_group,
 )
 from ydb_vector_search_demo_spark.pipeline import rag
+from ydb_vector_search_demo_spark.session import _get_or_build
 from ydb_vector_search_demo_spark.sources.tables import fan_out, load_table
 from ydb_vector_search_demo_spark.streaming import events as EV
 
@@ -3131,10 +3132,10 @@ def _pinned_graph_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows price serving and maintenance, not re-building. (The append
     row builds its own graph over the corpus SPLIT, so it stays
     uncached.)"""
-    g = _PINNED_GRAPH_CACHE.get(sf_dir)
-    if g is None:
+
+    def build() -> DataFrame:
         embs = _t(spark, sf_dir, "embeddings")
-        g = (
+        return (
             ann.knn_graph_bucketed(
                 embs.withColumn("_code", _sign_code_col()), "_code",
                 k=_GRAPH_FIXED_DEGREE, metric="cosine",
@@ -3142,8 +3143,8 @@ def _pinned_graph_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst", "score")
             .localCheckpoint(eager=True)
         )
-        _PINNED_GRAPH_CACHE[sf_dir] = g
-    return g
+
+    return _get_or_build(_PINNED_GRAPH_CACHE, sf_dir, build)
 
 
 def _beam_round_ctes(score_rel: str) -> list[str]:

@@ -6,27 +6,33 @@ completion of the batch ``ivf_append``/``tree_append`` story
 (disabled) index path [API-inferred, /root/reference/app.py:37].
 
 Everything between source and sink is a stateless projection
-(``tree_assign``/``ivf_assign``/``quantize_int8`` are pure Column
+(``tree_assign``/``ivf_assign`` and the codec columns are pure Column
 expressions), so this runs as a stateless streaming query: no
 watermark, no state store, exactly-once file-sink semantics via the
 checkpoint, and each micro-batch touches only the leaf directories
 its rows route to. Index maintenance stays batch: the codebooks are
 plan literals fixed at query start, and when drift accumulates
 (`ann.tree_drift_report`) a batch `rebalance_tree` rewrites the store
-— the classic streaming-ingest / batch-reorg split."""
+— the classic streaming-ingest / batch-reorg split.
+The stream shares the batch write side (operators.ann, "Write side"):
+the routers' assignment, the codec column sets (:func:`_with_companions`)
+and one ``writeStream`` body (:func:`_stream_cells`)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ydb_vector_search_demo_spark.functions.vector import l2_norm
-from ydb_vector_search_demo_spark.operators.ann import ivf_assign, tree_assign
-from ydb_vector_search_demo_spark.operators.pq import encode_expr
+from ydb_vector_search_demo_spark.operators.ann import (
+    _IvfRouter,
+    _TreeRouter,
+    ivf_assign,
+    tree_assign,
+)
+from ydb_vector_search_demo_spark.operators.pq import _pq_cols
 from ydb_vector_search_demo_spark.operators.quant import (
-    int8_scale,
-    mrl_prefix,
-    quantize_expr,
+    _int8_cols,
+    _prefix_cols,
 )
 
 
@@ -55,49 +61,32 @@ def _with_companions(
     directly — every precision of the ladder is maintained
     incrementally. ``mrl_dims`` and ``rotation`` are mutually
     exclusive: both write the ``prefix`` column and a store can only
-    serve one basis."""
+    serve one basis. The columns are the batch writers' codec column
+    sets (``quant._int8_cols``, ``pq._pq_cols``, ``quant._prefix_cols``),
+    so a streamed store holds the bytes a batch write would."""
     if mrl_dims is not None and rotation is not None:
         raise ValueError(
             "mrl_dims and rotation both write the 'prefix' companion; "
             "a store serves one basis — pick one"
         )
     if quantize:
-        scale = int8_scale(vector_col)
-        assigned = assigned.withColumns(
-            {"qvec": quantize_expr(vector_col, scale),
-             "qscale": scale.cast("float")}
-        )
+        assigned = assigned.withColumns(_int8_cols(vector_col))
     if pq_codebooks is not None:
         # pq_rotation: the codebooks were OPQ-trained (pq.train_pq_
         # codebooks(rotation=...)); the frozen basis rotates each
         # streamed vector before encoding, materialized ONCE in its
         # own projection (pq._with_rotated rationale). The probe side
         # passes the same basis to pq_search/pq_batch_search.
-        if pq_rotation is not None:
-            from ydb_vector_search_demo_spark.operators.rotation import (
-                rotate_expr,
-            )
-
-            assigned = assigned.withColumn(
-                "_opq_rot", rotate_expr(vector_col, pq_rotation)
-            ).withColumns(
-                {"pq_codes": encode_expr("_opq_rot", pq_codebooks),
-                 "vnorm": l2_norm(vector_col).cast("float")}
-            ).drop("_opq_rot")
-        else:
-            assigned = assigned.withColumns(
-                {"pq_codes": encode_expr(vector_col, pq_codebooks),
-                 "vnorm": l2_norm(vector_col).cast("float")}
-            )
-    if mrl_dims is not None:
-        assigned = assigned.withColumn(
-            "prefix", mrl_prefix(vector_col, mrl_dims)
+        rotated, cols = _pq_cols(
+            assigned, vector_col, vector_col, pq_codebooks, pq_rotation,
+            tmp="_opq_rot",
         )
+        assigned = rotated.withColumns(cols).drop("_opq_rot")
+    if mrl_dims is not None:
+        assigned = assigned.withColumns(_prefix_cols(vector_col, mrl_dims))
     if rotation is not None:
-        from ydb_vector_search_demo_spark.operators.rotation import rotate_expr
-
-        assigned = assigned.withColumn(
-            "prefix", rotate_expr(vector_col, rotation, rotation_dims)
+        assigned = assigned.withColumns(
+            _prefix_cols(vector_col, rotation_dims, rotation)
         )
     return assigned
 
@@ -113,6 +102,27 @@ def read_embeddings_stream(
     if schema is None:
         schema = dim_hint_df.select("vec_id", "embedding").schema
     return spark.readStream.schema(schema).parquet(source_dir)
+
+
+def _stream_cells(
+    assigned: DataFrame, router, store_path: str, checkpoint_dir: str,
+    available_now: bool, **companions,
+):
+    """The one streaming cell writer: the routed stream plus its
+    companion columns (:func:`_with_companions`), appended by the file
+    sink partitioned by the router's cell columns (``router.fields``)
+    — the streaming twin of ``ann._write_cells``. Returns the started
+    StreamingQuery."""
+    writer = (
+        _with_companions(assigned, **companions)
+        .writeStream.format("parquet")
+        .option("path", store_path)
+        .option("checkpointLocation", checkpoint_dir)
+        .partitionBy(*router.fields)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_ivf_ingest(
@@ -136,20 +146,12 @@ def stream_ivf_ingest(
     quantization ladder is maintained incrementally — coarse searches
     (``pq.ivf_pq_companion_search_parquet``) run directly on the
     streamed-in store."""
-    assigned = _with_companions(
-        ivf_assign(centroids, stream), quantize, pq_codebooks,
+    return _stream_cells(
+        ivf_assign(centroids, stream), _IvfRouter, store_path, checkpoint_dir,
+        available_now, quantize=quantize, pq_codebooks=pq_codebooks,
         mrl_dims=mrl_dims, rotation=rotation, rotation_dims=rotation_dims,
         pq_rotation=pq_rotation,
     )
-    writer = (
-        assigned.writeStream.format("parquet")
-        .option("path", store_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("centroid_id")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_tree_ingest(
@@ -170,20 +172,12 @@ def stream_tree_ingest(
     map-side, appended to the two-level directory layout — with the
     same optional int8/PQ companion columns as the IVF path, so the
     tree store composes with the quantized coarse scans too."""
-    assigned = _with_companions(
-        tree_assign(centroids_top, centroids_sub, stream), quantize,
-        pq_codebooks, mrl_dims=mrl_dims, rotation=rotation,
+    return _stream_cells(
+        tree_assign(centroids_top, centroids_sub, stream), _TreeRouter,
+        store_path, checkpoint_dir, available_now, quantize=quantize,
+        pq_codebooks=pq_codebooks, mrl_dims=mrl_dims, rotation=rotation,
         rotation_dims=rotation_dims, pq_rotation=pq_rotation,
     )
-    writer = (
-        assigned.writeStream.format("parquet")
-        .option("path", store_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cell_top", "cell_sub")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_bm25_ingest(
