@@ -160,8 +160,11 @@ def test_tree_parquet_roundtrip_prunes_both_levels(spark, tmp_path):
     path = str(tmp_path / "tree_store")
     ann.write_tree_partitioned(tree, path)
 
-    result = ann.tree_search_parquet(
-        spark, path, tree.centroids_top, tree.centroids_sub, QV,
+    result = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+    ).search(
+        QV,
         k=10, nprobe_top=4, nprobe_sub=2,
     )
     plan = result._jdf.queryExecution().executedPlan().toString()
@@ -175,8 +178,11 @@ def test_tree_parquet_roundtrip_prunes_both_levels(spark, tmp_path):
     recall = len(set(exact) & set(approx)) / len(exact)
     assert recall >= 0.4, f"tree-store recall@10 {recall} too low at 1/4 scan"
 
-    allprobe = ann.tree_search_parquet(
-        spark, path, tree.centroids_top, tree.centroids_sub, QV,
+    allprobe = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+    ).search(
+        QV,
         k=10, nprobe_top=8, nprobe_sub=4,
     )
     assert [r["vec_id"] for r in allprobe.collect()] == exact
@@ -212,10 +218,10 @@ def test_tree_assign_matches_build_and_append_serves(spark, tmp_path):
     assert spark.read.parquet(path).count() == n0 + 5
 
     probe = embs.limit(1).collect()[0]
-    res = ann.tree_search_parquet(
-        spark, path, tree.centroids_top, tree.centroids_sub,
-        list(probe["embedding"]), k=2, nprobe_top=1, nprobe_sub=1,
-    ).collect()
+    res = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+    ).search(list(probe["embedding"]), k=2, nprobe_top=1, nprobe_sub=1).collect()
     assert [r["vec_id"] for r in res] == [probe["vec_id"], probe["vec_id"] + 1_000_000]
     assert res[0]["score"] == res[1]["score"]
     tree.assigned.unpersist()
@@ -297,8 +303,11 @@ def test_filtered_tree_parquet_pushes_predicate(spark, tmp_path):
     )
     path = str(tmp_path / "tree_store_meta")
     ann.write_tree_partitioned(tree, path)
-    result = ann.tree_search_parquet(
-        spark, path, tree.centroids_top, tree.centroids_sub, QV,
+    result = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+    ).search(
+        QV,
         k=5, nprobe_top=2, nprobe_sub=2, predicate="label = 1",
         min_candidates=5,
     )

@@ -140,10 +140,10 @@ def test_tree_batch_parquet_matches_in_memory(spark, tree, qdf, tmp_path):
     ann.write_tree_partitioned(tree, store)
     mem = _rows(tree.batch_search(qdf, k=5, nprobe_top=2, nprobe_sub=1))
     pq = _rows(
-        ann.tree_batch_search_parquet(
-            spark, store, tree.centroids_top, tree.centroids_sub, qdf,
-            k=5, nprobe_top=2, nprobe_sub=1,
-        )
+        ann.VectorStore(
+            spark.read.parquet(store),
+            ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+        ).batch_search(qdf, k=5, nprobe_top=2, nprobe_sub=1)
     )
     assert mem == pq
 
@@ -167,22 +167,19 @@ def test_ivf_batch_filtered_predicate(spark, embs, qdf):
 
 
 def test_quantized_batch_equals_single_query_loop(spark, embs, qdf, qvs):
-    """Batched flat-quantized search == per-query quantized_search."""
+    """Batched flat-quantized search == per-query int8 search."""
     from ydb_vector_search_demo_spark.operators import quant
 
     quantized = quant.quantize_int8(embs)
-    batch = quant.quantized_batch_search(
-        quantized, embs, qdf, k=5, rescore=4
-    ).collect()
+    store = ann.VectorStore(quantized, codec=quant.Int8Codec(), embeddings=embs)
+    batch = store.batch_search(qdf, k=5, rescore=4).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = quant.quantized_search(
-            quantized, embs, qv, k=5, rescore=4
-        ).collect()
+        single = store.search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -191,24 +188,24 @@ def test_quantized_batch_equals_single_query_loop(spark, embs, qdf, qvs):
 
 
 def test_ivf_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tmp_path):
-    """Batched pruned+quantized serving == per-query
-    ivf_quantized_search_parquet loop at equal nprobe/rescore."""
+    """Batched pruned+quantized serving == per-query int8 IVF store
+    search loop at equal nprobe/rescore."""
     from ydb_vector_search_demo_spark.operators import quant
 
     path = str(tmp_path / "ivfq")
     quant.write_ivf_quantized(ivf, path)
-    batch = quant.ivf_quantized_batch_search_parquet(
-        spark, path, embs, ivf.centroids, qdf, k=5, nprobe=4, rescore=4
-    ).collect()
+    store = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
+        quant.Int8Codec(), embs,
+    )
+    batch = store.batch_search(qdf, k=5, nprobe=4, rescore=4).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = quant.ivf_quantized_search_parquet(
-            spark, path, embs, ivf.centroids, qv, k=5, nprobe=4, rescore=4
-        ).collect()
+        single = store.search(qv, k=5, nprobe=4, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -220,29 +217,30 @@ def test_quantized_batch_plan_shape(spark, embs, qdf):
     from ydb_vector_search_demo_spark.operators import quant
 
     quantized = quant.quantize_int8(embs)
-    df = quant.quantized_batch_search(quantized, embs, qdf, k=5, rescore=4)
+    df = ann.VectorStore(
+        quantized, codec=quant.Int8Codec(), embeddings=embs
+    ).batch_search(qdf, k=5, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WindowGroupLimit" in plan
 
 
 def test_pq_batch_equals_single_query_loop(spark, embs, qdf, qvs):
-    """Batched ADC search == per-query pq_search loop."""
+    """Batched ADC search == per-query PQ search loop."""
     from ydb_vector_search_demo_spark.operators import pq
 
     dim = len(qvs[0])
     books = pq.train_pq_codebooks(embs, dim, m=8, k_star=16)
     encoded = pq.pq_encode(embs, books)
-    batch = pq.pq_batch_search(
-        encoded, embs, books, qdf, k=5, rescore=4
-    ).collect()
+    store = ann.VectorStore(encoded, codec=pq.PqCodec(books), embeddings=embs)
+    batch = store.batch_search(qdf, k=5, rescore=4).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = pq.pq_search(encoded, embs, books, qv, k=5, rescore=4).collect()
+        single = store.search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -270,19 +268,18 @@ def test_ivfpq_companion_batch_parquet_equals_loop(
         pq.pq_encode(embs, books).select("vec_id", "vnorm"), on="vec_id"
     ).write.partitionBy("centroid_id").mode("overwrite").parquet(path)
 
-    batch = pq.ivf_pq_companion_batch_search_parquet(
-        spark, path, embs, ivf.centroids, books, qdf, k=5, nprobe=4, rescore=4
-    ).collect()
+    store = _ann.VectorStore(
+        spark.read.parquet(path), _ann._IvfRouter(ivf.centroids),
+        pq.PqCodec(books), embs,
+    )
+    batch = store.batch_search(qdf, k=5, nprobe=4, rescore=4).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = pq.ivf_pq_companion_search_parquet(
-            spark, path, ivf.centroids, books, embs, qv,
-            k=5, nprobe=4, rescore=4,
-        ).collect()
+        single = store.search(qv, k=5, nprobe=4, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -291,15 +288,19 @@ def test_ivfpq_companion_batch_parquet_equals_loop(
 
 
 def test_tree_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, tmp_path):
-    """Batched int8 tree probe == per-query tree_quantized_search_parquet
+    """Batched int8 tree probe == per-query int8 tree store search
     loop — the two-level pruning × int8 bytes × batch-axis composition."""
     from ydb_vector_search_demo_spark.operators import quant
 
     path = str(tmp_path / "tree_q")
     quant.write_tree_quantized(tree, path)
-    batch = quant.tree_quantized_batch_search_parquet(
-        spark, path, embs, tree.centroids_top, tree.centroids_sub, qdf,
-        k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
+    store = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+        quant.Int8Codec(), embs,
+    )
+    batch = store.batch_search(
+        qdf, k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
     ).collect()
     got = {}
     for r in batch:
@@ -307,9 +308,8 @@ def test_tree_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, t
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = quant.tree_quantized_search_parquet(
-            spark, path, embs, tree.centroids_top, tree.centroids_sub, qv,
-            k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
+        single = store.search(
+            qv, k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
         ).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
@@ -319,15 +319,19 @@ def test_tree_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, t
 
 
 def test_tree_pq_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, tmp_path):
-    """Batched ADC tree probe == per-query tree_pq_search_parquet loop."""
+    """Batched ADC tree probe == per-query PQ tree store search loop."""
     from ydb_vector_search_demo_spark.operators import pq
 
     dim = len(qvs[0])
     books = pq.train_pq_codebooks(embs, dim, m=8, k_star=16)
     path = str(tmp_path / "tree_pq")
     pq.write_tree_pq(tree, books, path)
-    batch = pq.tree_pq_batch_search_parquet(
-        spark, path, tree.centroids_top, tree.centroids_sub, books, embs,
+    store = ann.VectorStore(
+        spark.read.parquet(path),
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+        pq.PqCodec(books), embs,
+    )
+    batch = store.batch_search(
         qdf, k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
     ).collect()
     got = {}
@@ -336,9 +340,8 @@ def test_tree_pq_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, tmp_path
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = pq.tree_pq_search_parquet(
-            spark, path, tree.centroids_top, tree.centroids_sub, books,
-            embs, qv, k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
+        single = store.search(
+            qv, k=5, nprobe_top=2, nprobe_sub=2, rescore=4,
         ).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
@@ -348,7 +351,7 @@ def test_tree_pq_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, tmp_path
 
 
 def test_ivfpq_residual_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tmp_path):
-    """Batched residual IVF-PQ probe == per-query ivfpq_search_parquet
+    """Batched residual IVF-PQ probe == per-query residual store search
     loop — per-(query, cell) residual LUTs ride the membership join."""
     from ydb_vector_search_demo_spark.operators import pq
 
@@ -356,19 +359,18 @@ def test_ivfpq_residual_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tm
     books = pq.train_ivfpq_codebooks(ivf, dim, m=8, k_star=16)
     path = str(tmp_path / "ivfpq_res")
     pq.write_ivfpq_store(ivf, books, path)
-    batch = pq.ivfpq_batch_search_parquet(
-        spark, path, ivf.centroids, books, embs, qdf, k=5, nprobe=4, rescore=4
-    ).collect()
+    store = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
+        pq.PqCodec(books, ivf.centroids), embs,
+    )
+    batch = store.batch_search(qdf, k=5, nprobe=4, rescore=4).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = pq.ivfpq_search_parquet(
-            spark, path, ivf.centroids, books, embs, qv,
-            k=5, nprobe=4, rescore=4,
-        ).collect()
+        single = store.search(qv, k=5, nprobe=4, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -377,23 +379,20 @@ def test_ivfpq_residual_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tm
 
 
 def test_binary_batch_equals_single_query_loop(spark, embs, qdf, qvs):
-    """Batched 1-bit Hamming search == per-query binary_search loop —
+    """Batched 1-bit Hamming search == per-query 1-bit search loop —
     the last precision of the ladder on the batch axis."""
     from ydb_vector_search_demo_spark.operators import quant
 
     binarized = quant.quantize_binary(embs, dim=len(qvs[0]))
-    batch = quant.binary_batch_search(
-        binarized, embs, qdf, k=5, rescore=16
-    ).collect()
+    store = ann.VectorStore(binarized, codec=quant.BinaryCodec(), embeddings=embs)
+    batch = store.batch_search(qdf, k=5, rescore=16).collect()
     got = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["vec_id"], round(r["score"], 9))
         )
     for qid, qv in enumerate(qvs):
-        single = quant.binary_search(
-            binarized, embs, qv, k=5, rescore=16
-        ).collect()
+        single = store.search(qv, k=5, rescore=16).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)

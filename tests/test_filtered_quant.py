@@ -6,6 +6,9 @@ path equals exact KNN over the filtered subset."""
 
 from __future__ import annotations
 
+import functools
+from types import SimpleNamespace
+
 import pytest
 
 from tests.conftest import SF_SMOKE
@@ -38,9 +41,11 @@ def test_filtered_ivf_quantized_parquet_exact_at_full_probe(spark, embs, ivf, tm
     path = str(tmp_path / "ivfq_f")
     quant.write_ivf_quantized(ivf, path, keep_cols=("label",))
     n = embs.count()
-    got = quant.ivf_quantized_search_parquet(
-        spark, path, embs, ivf.centroids, QV,
-        k=5, nprobe=8, rescore=(n // 5) + 1, predicate=PRED,
+    got = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
+        quant.Int8Codec(), embs,
+    ).search(
+        QV, k=5, nprobe=8, rescore=(n // 5) + 1, predicate=PRED,
     ).collect()
     want = knn_scores(embs.filter(PRED), QV, k=5).collect()
     assert _pairs(got) == _pairs(want)
@@ -52,9 +57,9 @@ def test_filtered_pq_search_exact_at_full_pool(spark, embs):
     encoded = pq.pq_encode(embs, books, keep_cols=("label",))
     assert "label" in encoded.columns
     n = embs.count()
-    got = pq.pq_search(
-        encoded, embs, books, QV, k=5, rescore=(n // 5) + 1, predicate=PRED
-    ).collect()
+    got = ann.VectorStore(
+        encoded, codec=pq.PqCodec(books), embeddings=embs
+    ).search(QV, k=5, rescore=(n // 5) + 1, predicate=PRED).collect()
     want = knn_scores(embs.filter(PRED), QV, k=5).collect()
     assert _pairs(got) == _pairs(want)
 
@@ -67,9 +72,12 @@ def test_filtered_quantized_batch_parquet_equals_filtered_loop(spark, embs, ivf,
     )
     path = str(tmp_path / "ivfq_fb")
     quant.write_ivf_quantized(ivf, path, keep_cols=("label",))
-    batch = quant.ivf_quantized_batch_search_parquet(
-        spark, path, embs, ivf.centroids, qdf,
-        k=5, nprobe=4, rescore=4, predicate=PRED,
+    store = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
+        quant.Int8Codec(), embs,
+    )
+    batch = store.batch_search(
+        qdf, k=5, nprobe=4, rescore=4, predicate=PRED,
     ).collect()
     got = {}
     for r in batch:
@@ -81,9 +89,8 @@ def test_filtered_quantized_batch_parquet_equals_filtered_loop(spark, embs, ivf,
     }
     assert all(v in labels for rows in got.values() for _, v, _ in rows)
     for qid, qv in enumerate(qvs):
-        single = quant.ivf_quantized_search_parquet(
-            spark, path, embs, ivf.centroids, qv,
-            k=5, nprobe=4, rescore=4, predicate=PRED,
+        single = store.search(
+            qv, k=5, nprobe=4, rescore=4, predicate=PRED,
         ).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
@@ -102,9 +109,12 @@ def test_filtered_tree_pq_parquet(spark, embs, tmp_path):
         path = str(tmp_path / "tree_pq_f")
         pq.write_tree_pq(tree, books, path, keep_cols=("label",))
         n = embs.count()
-        got = pq.tree_pq_search_parquet(
-            spark, path, tree.centroids_top, tree.centroids_sub, books,
-            embs, QV, k=5, nprobe_top=4, nprobe_sub=2,
+        got = ann.VectorStore(
+            spark.read.parquet(path),
+            ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+            pq.PqCodec(books), embs,
+        ).search(
+            QV, k=5, nprobe_top=4, nprobe_sub=2,
             rescore=(n // 5) + 1, predicate=PRED,
         ).collect()
         want = knn_scores(embs.filter(PRED), QV, k=5).collect()
@@ -115,7 +125,7 @@ def test_filtered_tree_pq_parquet(spark, embs, tmp_path):
 
 def test_hybrid_batch_serves_from_quantized_store(spark, embs, ivf, tmp_path):
     """The hybrid retrieval stack's vector side served from the
-    persisted int8 IVF layout via the QuantizedIvfStore adapter: at the
+    persisted int8 IVF layout through a VectorStore: at the
     degenerate point (full probe, corpus-covering rescore) the fused
     output equals the exact-batch_knn hybrid row for row."""
     from ydb_vector_search_demo_spark.operators import retrieval as R
@@ -131,12 +141,17 @@ def test_hybrid_batch_serves_from_quantized_store(spark, embs, ivf, tmp_path):
     path = str(tmp_path / "ivfq_hybrid")
     quant.write_ivf_quantized(ivf, path)
     n = embs.count()
-    store = quant.QuantizedIvfStore(
-        spark, path, ivf.centroids, embs,
-        nprobe=len(ivf.centroids), rescore=(n // 20) + 1,
+    store = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
+        quant.Int8Codec(), embs,
     )
+    # the serving configuration: full probe, corpus-covering rescore
+    serving = SimpleNamespace(batch_search=functools.partial(
+        store.batch_search, rescore=(n // 20) + 1,
+    ))
     got = R.hybrid_rrf_batch_topk(
-        docs, embs, queries, k=5, pool=20, index=store
+        docs, embs, queries, k=5, pool=20, nprobe=len(ivf.centroids),
+        index=serving,
     ).collect()
     want = R.hybrid_rrf_batch_topk(docs, embs, queries, k=5, pool=20).collect()
     assert sorted(map(tuple, got), key=lambda t: (t[0], t[-1])) == sorted(

@@ -1,5 +1,5 @@
 """Matryoshka prefix-dimension coarse search + exact rescore
-(operators.quant.mrl_search): the dimension axis of the bytes-for-recall
+(operators.quant.MrlCodec): the dimension axis of the bytes-for-recall
 ladder.
 
 Contracts under test:
@@ -17,7 +17,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_SMOKE
-from ydb_vector_search_demo_spark.operators import quant
+from ydb_vector_search_demo_spark.operators import ann, quant
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 from ydb_vector_search_demo_spark.pipeline import rag
 from ydb_vector_search_demo_spark.sources.tables import load_table
@@ -30,13 +30,37 @@ def embs(spark):
     return load_table(spark, SF_SMOKE, "embeddings")
 
 
+def _mrl(relation, dims):
+    """The inline Matryoshka store: the ``dims``-prefix sliced from the
+    float column of ``relation``, which also serves the rescore."""
+    return ann.VectorStore(
+        relation, codec=quant.MrlCodec(dims, quant.mrl_prefix("embedding", dims))
+    )
+
+
+def _prefix_store(path, embs):
+    """The persisted 16-dim prefix store, rescored from ``embs``."""
+    return ann.VectorStore(
+        embs.sparkSession.read.parquet(path), codec=quant.MrlCodec(16),
+        embeddings=embs,
+    )
+
+
+def _int8_prefix_store(path, embs):
+    """The persisted int8-quantized 16-dim prefix store."""
+    return ann.VectorStore(
+        embs.sparkSession.read.parquet(path), codec=quant.Int8Codec(dims=16),
+        embeddings=embs,
+    )
+
+
 def _ids(df):
     return [r["vec_id"] for r in df.collect()]
 
 
 def test_full_width_equals_exact(embs):
     exact = knn_scores(embs, QV, k=10).collect()
-    mrl = quant.mrl_search(embs, QV, dims=len(QV), k=10, rescore=1).collect()
+    mrl = _mrl(embs, len(QV)).search(QV, k=10, rescore=1).collect()
     assert [(r["vec_id"], round(r["score"], 9)) for r in exact] == [
         (r["vec_id"], round(r["score"], 9)) for r in mrl
     ]
@@ -46,8 +70,8 @@ def test_parquet_prefix_store_equals_inline(embs, tmp_path):
     path = str(tmp_path / "mrl_prefix")
     quant.write_mrl_store(embs, path, dims=16)
     spark = embs.sparkSession
-    inline = quant.mrl_search(embs, QV, dims=16, k=5, rescore=4).collect()
-    stored = quant.mrl_search_parquet(spark, path, embs, QV, dims=16, k=5,
+    inline = _mrl(embs, 16).search(QV, k=5, rescore=4).collect()
+    stored = _prefix_store(path, embs).search(QV, k=5,
                                       rescore=4).collect()
     assert [tuple(r) for r in inline] == [tuple(r) for r in stored]
     # the prefix store physically holds 16-wide arrays
@@ -70,15 +94,15 @@ def test_recall_report_full_width_is_one(spark, embs):
 
 
 def test_coarse_plan_shape(embs):
-    df = quant.mrl_search(embs, QV, dims=16, k=5, rescore=4)
+    df = _mrl(embs, 16).search(QV, k=5, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_predicate_filters_inside_coarse(embs):
-    out = quant.mrl_search(
-        embs, QV, dims=16, k=5, rescore=4, predicate="vec_id % 2 = 0"
+    out = _mrl(embs, 16).search(
+        QV, k=5, rescore=4, predicate="vec_id % 2 = 0"
     ).collect()
     assert len(out) == 5
     assert all(r["vec_id"] % 2 == 0 for r in out)
@@ -87,9 +111,7 @@ def test_predicate_filters_inside_coarse(embs):
     from pyspark.sql import functions as F
 
     filtered = embs.filter(F.expr("vec_id % 2 = 0"))
-    exact = quant.mrl_search(
-        filtered, QV, dims=len(QV), k=5, rescore=1
-    ).collect()
+    exact = _mrl(filtered, len(QV)).search(QV, k=5, rescore=1).collect()
     got_ids = [r["vec_id"] for r in out]
     # rescore=4 at dims=16 may differ from exact in pathological corpora;
     # assert the guaranteed part: both are subsets of the filtered corpus
@@ -112,14 +134,12 @@ def test_mrl_quantized_store_composes(embs, tmp_path):
     assert len(row["qprefix"]) == 16
     assert store.schema["qprefix"].dataType.simpleString() == "array<tinyint>"
 
-    out = quant.mrl_quantized_search_parquet(
-        spark, path, embs, QV, dims=16, k=5, rescore=4
-    ).collect()
+    out = _int8_prefix_store(path, embs).search(QV, k=5, rescore=4).collect()
     assert len(out) == 5
     # exactness at the degenerate point: rescore pool = whole corpus
     n = embs.count()
-    full = quant.mrl_quantized_search_parquet(
-        spark, path, embs, QV, dims=16, k=5, rescore=(n // 5) + 1
+    full = _int8_prefix_store(path, embs).search(
+        QV, k=5, rescore=(n // 5) + 1
     ).collect()
     exact = knn_scores(embs, QV, k=5).collect()
     assert [(r["vec_id"], round(r["score"], 9)) for r in full] == [
@@ -171,10 +191,10 @@ def _by_query(rows):
 
 def test_mrl_batch_equals_single_query_loop(embs, qdf):
     got = _by_query(
-        quant.mrl_batch_search(embs, qdf, dims=16, k=5, rescore=4).collect()
+        _mrl(embs, 16).batch_search(qdf, k=5, rescore=4).collect()
     )
     for qid, qv in enumerate(QVS_B):
-        single = quant.mrl_search(embs, qv, dims=16, k=5, rescore=4).collect()
+        single = _mrl(embs, 16).search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -187,14 +207,10 @@ def test_mrl_batch_parquet_equals_loop(embs, qdf, tmp_path):
     path = str(tmp_path / "mrl_prefix_b")
     quant.write_mrl_store(embs, path, dims=16)
     got = _by_query(
-        quant.mrl_batch_search_parquet(
-            spark, path, embs, qdf, dims=16, k=5, rescore=4
-        ).collect()
+        _prefix_store(path, embs).batch_search(qdf, k=5, rescore=4).collect()
     )
     for qid, qv in enumerate(QVS_B):
-        single = quant.mrl_search_parquet(
-            spark, path, embs, qv, dims=16, k=5, rescore=4
-        ).collect()
+        single = _prefix_store(path, embs).search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -207,14 +223,10 @@ def test_mrl_quantized_batch_parquet_equals_loop(embs, qdf, tmp_path):
     path = str(tmp_path / "mrl_q_b")
     quant.write_mrl_quantized_store(embs, path, dims=16)
     got = _by_query(
-        quant.mrl_quantized_batch_search_parquet(
-            spark, path, embs, qdf, dims=16, k=5, rescore=4
-        ).collect()
+        _int8_prefix_store(path, embs).batch_search(qdf, k=5, rescore=4).collect()
     )
     for qid, qv in enumerate(QVS_B):
-        single = quant.mrl_quantized_search_parquet(
-            spark, path, embs, qv, dims=16, k=5, rescore=4
-        ).collect()
+        single = _int8_prefix_store(path, embs).search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -229,9 +241,7 @@ def test_mrl_batch_full_width_equals_exact_batch(embs, qdf):
     n = embs.count()
     d = len(QVS_B[0])
     got = _by_query(
-        quant.mrl_batch_search(
-            embs, qdf, dims=d, k=5, rescore=(n // 5) + 1
-        ).collect()
+        _mrl(embs, d).batch_search(qdf, k=5, rescore=(n // 5) + 1).collect()
     )
     exact = _by_query(batch_knn(qdf, embs, k=5).collect())
     assert got == exact
@@ -239,7 +249,7 @@ def test_mrl_batch_full_width_equals_exact_batch(embs, qdf):
 
 def test_mrl_batch_plan_shape(embs, qdf):
     """Coarse + cut stay JVM-side: no Python nodes, WindowGroupLimit cut."""
-    df = quant.mrl_batch_search(embs, qdf, dims=16, k=5, rescore=4)
+    df = _mrl(embs, 16).batch_search(qdf, k=5, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WindowGroupLimit" in plan

@@ -509,6 +509,48 @@ def test_dedup_clusters_lsh_equals_exact_path(spark):
     assert exact == lsh
 
 
+def test_persist_scopes_in_two_threads_release_only_their_own(spark):
+    """Two threads' persist_scopes interleave (barrier-stepped): the
+    first scope to exit releases only its own relation, and a
+    release_persisted() call from another thread leaves an open scope's
+    relation cached. No job runs: persist and unpersist are lazy."""
+    import threading
+
+    from ydb_vector_search_demo_spark.operators import dedup
+
+    step = threading.Barrier(2)
+    seen: dict = {}
+
+    def first():
+        with dedup.persist_scope():
+            seen["a"] = dedup._persist(spark.range(3))
+            step.wait()  # both scopes open
+            step.wait()  # the second scope persisted
+        step.wait()  # this scope has exited
+
+    def second():
+        step.wait()
+        with dedup.persist_scope():
+            seen["b"] = dedup._persist(spark.range(4))
+            step.wait()
+            step.wait()
+            seen["b_after_other_exit"] = seen["b"].is_cached
+            dedup.release_persisted()
+            seen["b_after_release"] = seen["b"].is_cached
+        seen["b_after_own_exit"] = seen["b"].is_cached
+
+    threads = [threading.Thread(target=f) for f in (first, second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert not seen["a"].is_cached
+    assert seen["b_after_other_exit"], "the other thread's scope released it"
+    assert seen["b_after_release"], "release_persisted released a scope's relation"
+    assert not seen["b_after_own_exit"]
+    assert str(seen["b"].storageLevel) == str(seen["a"].storageLevel)
+
+
 def test_persist_scope_bounds_cache_lifetime(spark):
     """r3 verdict #8: a long-lived session running dedup operators in
     `with dedup.persist_scope():` must not accumulate pinned relations

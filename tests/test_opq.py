@@ -12,6 +12,11 @@ import pytest
 
 from ydb_vector_search_demo_spark.operators import pq
 from ydb_vector_search_demo_spark.operators import rotation as rot
+from ydb_vector_search_demo_spark.operators.ann import (
+    VectorStore,
+    _IvfRouter,
+    _TreeRouter,
+)
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
 DIM = 16
@@ -111,6 +116,9 @@ def test_opq_search_rescore_exactness_and_batch_equality(spark, corpus):
     books = pq.train_pq_codebooks(corpus, DIM, m=M, k_star=8, rotation=opq)
     encoded = pq.pq_encode(corpus, books, rotation=opq)
     encoded.persist().count()
+    store = VectorStore(
+        encoded, codec=pq.PqCodec(books, rotation=opq), embeddings=corpus
+    )
     try:
         qvs = [
             [math.sin(i * 0.7 + s) for i in range(DIM)] for s in range(3)
@@ -122,19 +130,14 @@ def test_opq_search_rescore_exactness_and_batch_equality(spark, corpus):
         ]
         got = [
             (r[0], round(r[1], 9))
-            for r in pq.pq_search(
-                encoded, corpus, books, qvs[0], k=5, rescore=48,
-                rotation=opq,
-            ).collect()
+            for r in store.search(qvs[0], k=5, rescore=48).collect()
         ]
         assert got == exact
         # (b) single vs batch equality at a tight pool
         singles = {
             qid: [
                 (r["vec_id"], round(r["score"], 9))
-                for r in pq.pq_search(
-                    encoded, corpus, books, qv, k=5, rescore=4, rotation=opq
-                ).collect()
+                for r in store.search(qv, k=5, rescore=4).collect()
             ]
             for qid, qv in enumerate(qvs)
         }
@@ -142,9 +145,7 @@ def test_opq_search_rescore_exactness_and_batch_equality(spark, corpus):
             [(i, v) for i, v in enumerate(qvs)],
             "query_id BIGINT, query_vec ARRAY<DOUBLE>",
         )
-        batch = pq.pq_batch_search(
-            encoded, corpus, books, queries, k=5, rescore=4, rotation=opq
-        ).collect()
+        batch = store.batch_search(queries, k=5, rescore=4).collect()
         got_b: dict = {}
         for r in batch:
             got_b.setdefault(r["query_id"], []).append(
@@ -166,14 +167,15 @@ def test_ivfpq_rotation_single_batch_store_equality(spark, corpus, tmp_path):
     books = pq.train_ivfpq_codebooks(index, DIM, m=M, k_star=8, rotation=opq)
     path = str(tmp_path / "ivfpq_opq")
     pq.write_ivfpq_store(index, books, path, rotation=opq)
+    store = VectorStore(
+        spark.read.parquet(path), _IvfRouter(index.centroids),
+        pq.PqCodec(books, index.centroids, opq), corpus,
+    )
     qvs = [[math.cos(i * 0.5 + s) for i in range(DIM)] for s in range(2)]
     singles = {
         qid: [
             (r["vec_id"], round(r["score"], 9))
-            for r in pq.ivfpq_search_parquet(
-                spark, path, index.centroids, books, corpus, qv,
-                k=5, nprobe=2, rescore=4, rotation=opq,
-            ).collect()
+            for r in store.search(qv, k=5, nprobe=2, rescore=4).collect()
         ]
         for qid, qv in enumerate(qvs)
     }
@@ -181,10 +183,7 @@ def test_ivfpq_rotation_single_batch_store_equality(spark, corpus, tmp_path):
         [(i, v) for i, v in enumerate(qvs)],
         "query_id BIGINT, query_vec ARRAY<DOUBLE>",
     )
-    batch = pq.ivfpq_batch_search_parquet(
-        spark, path, index.centroids, books, corpus, queries,
-        k=5, nprobe=2, rescore=4, rotation=opq,
-    ).collect()
+    batch = store.batch_search(queries, k=5, nprobe=2, rescore=4).collect()
     got_b: dict = {}
     for r in batch:
         got_b.setdefault(r["query_id"], []).append(
@@ -240,14 +239,17 @@ def test_tree_pq_rotation_write_and_probe_equality(spark, corpus, tmp_path):
     books = pq.train_pq_codebooks(corpus, DIM, m=M, k_star=8, rotation=opq)
     path = str(tmp_path / "tree_pq_opq")
     pq.write_tree_pq(index, books, path, rotation=opq)
+    store = VectorStore(
+        spark.read.parquet(path),
+        _TreeRouter(index.centroids_top, index.centroids_sub),
+        pq.PqCodec(books, rotation=opq), corpus,
+    )
     qvs = [[math.sin(i * 0.3 + s) for i in range(DIM)] for s in range(2)]
     singles = {
         qid: [
             (r["vec_id"], round(r["score"], 9))
-            for r in pq.tree_pq_search_parquet(
-                spark, path, index.centroids_top, index.centroids_sub,
-                books, corpus, qv, k=5, nprobe_top=2, nprobe_sub=1,
-                rescore=4, rotation=opq,
+            for r in store.search(
+                qv, k=5, nprobe_top=2, nprobe_sub=1, rescore=4,
             ).collect()
         ]
         for qid, qv in enumerate(qvs)
@@ -256,10 +258,8 @@ def test_tree_pq_rotation_write_and_probe_equality(spark, corpus, tmp_path):
         [(i, v) for i, v in enumerate(qvs)],
         "query_id BIGINT, query_vec ARRAY<DOUBLE>",
     )
-    batch = pq.tree_pq_batch_search_parquet(
-        spark, path, index.centroids_top, index.centroids_sub, books,
-        corpus, queries, k=5, nprobe_top=2, nprobe_sub=1, rescore=4,
-        rotation=opq,
+    batch = store.batch_search(
+        queries, k=5, nprobe_top=2, nprobe_sub=1, rescore=4,
     ).collect()
     got_b: dict = {}
     for r in batch:

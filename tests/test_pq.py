@@ -8,7 +8,7 @@ import math
 import pytest
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from ydb_vector_search_demo_spark.operators import pq
+from ydb_vector_search_demo_spark.operators import ann, pq
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 from ydb_vector_search_demo_spark.plans.catalog import QV
 from ydb_vector_search_demo_spark.sources.tables import load_table
@@ -82,7 +82,8 @@ def test_pq_store_schema_and_plan_shape(spark, tmp_path):
     assert schema["pq_codes"] == "array<tinyint>"
     assert schema["vnorm"] == "float"
 
-    df = pq.pq_search(stored, embs, books, QV, k=5, rescore=8)
+    store = ann.VectorStore(stored, codec=pq.PqCodec(books), embeddings=embs)
+    df = store.search(QV, k=5, rescore=8)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
@@ -96,7 +97,7 @@ def test_pq_store_schema_and_plan_shape(spark, tmp_path):
     big_c = stored.count() // 5 + 1
     got = [
         (r.vec_id, round(r.score, 9))
-        for r in pq.pq_search(stored, embs, books, QV, k=5, rescore=big_c).collect()
+        for r in store.search(QV, k=5, rescore=big_c).collect()
     ]
     assert got == exact
 
@@ -116,10 +117,10 @@ def test_ivfpq_full_probe_full_pool_equals_exact(spark, tmp_path):
         (r.vec_id, round(r.score, 9)) for r in knn_scores(embs, QV, k=5).collect()
     ]
     n = embs.count()
-    got_df = pq.ivfpq_search_parquet(
-        spark, path, index.centroids, books, embs, QV,
-        k=5, nprobe=4, rescore=n // 5 + 1,
-    )
+    got_df = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(index.centroids),
+        pq.PqCodec(books, index.centroids), embs,
+    ).search(QV, k=5, nprobe=4, rescore=n // 5 + 1)
     got = [(r.vec_id, round(r.score, 9)) for r in got_df.collect()]
     assert got == exact
     index.assigned.unpersist()
@@ -133,9 +134,10 @@ def test_ivfpq_plan_prunes_and_stays_jvm(spark, tmp_path):
     books = pq.train_ivfpq_codebooks(index, 64, m=4, k_star=16)
     path = str(tmp_path / "ivfpq_plan")
     pq.write_ivfpq_store(index, books, path)
-    df = pq.ivfpq_search_parquet(
-        spark, path, index.centroids, books, embs, QV, k=5, nprobe=3, rescore=4
-    )
+    df = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(index.centroids),
+        pq.PqCodec(books, index.centroids), embs,
+    ).search(QV, k=5, nprobe=3, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     pfs = [seg.split("]")[0] for seg in plan.split("PartitionFilters:")[1:]]
     assert any("centroid_id" in pf for pf in pfs), pfs

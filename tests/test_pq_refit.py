@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark import stores
 from ydb_vector_search_demo_spark.operators import pq
+from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
 DIM, M = 16, 4
@@ -89,9 +90,9 @@ def test_drift_refit_publish_cycle(spark, tmp_path):
     n = merged.count()
     got = [
         (r["vec_id"], pytest.approx(r["score"], abs=1e-9))
-        for r in pq.pq_search(
-            codes, merged, cur_books, q, k=5, rescore=(n + 4) // 5
-        ).collect()
+        for r in VectorStore(
+            codes, codec=pq.PqCodec(cur_books), embeddings=merged
+        ).search(q, k=5, rescore=(n + 4) // 5).collect()
     ]
     exact = [(r["vec_id"], r["score"]) for r in knn_scores(merged, q, k=5).collect()]
     assert [g[0] for g in got] == [e[0] for e in exact]

@@ -76,58 +76,28 @@ def stores(spark, tmp_path_factory):
     )
 
 
-def _single(s, codec: str, router: str, w: int):
-    sp, embs, qv = s.spark, s.embs, s.qv
-    ivf, tree = s.ivf, s.tree
+def _store(s, codec: str, router: str):
+    """The probed store as one object: the float index's own store, or
+    the persisted codec store routed by the index's codebooks."""
+    index = s.ivf if router == "ivf" else s.tree
     if codec == "flat":
-        if router == "ivf":
-            return ivf.search(qv, k=5, nprobe=w)
-        return tree.search(qv, k=5, nprobe_top=w, nprobe_sub=w)
-    p = s.path[f"{codec}-{router}"]
-    if codec == "sq8" and router == "ivf":
-        return quant.ivf_quantized_search_parquet(
-            sp, p, embs, ivf.centroids, qv, k=5, nprobe=w
-        )
-    if codec == "sq8":
-        return quant.tree_quantized_search_parquet(
-            sp, p, embs, tree.centroids_top, tree.centroids_sub, qv, k=5,
-            nprobe_top=w, nprobe_sub=w,
-        )
-    if router == "ivf":
-        return pq.ivf_pq_companion_search_parquet(
-            sp, p, ivf.centroids, s.books, embs, qv, k=5, nprobe=w
-        )
-    return pq.tree_pq_search_parquet(
-        sp, p, tree.centroids_top, tree.centroids_sub, s.books, embs, qv, k=5,
-        nprobe_top=w, nprobe_sub=w,
+        return index.store
+    return ann.VectorStore(
+        s.spark.read.parquet(s.path[f"{codec}-{router}"]), index.store.router,
+        quant.Int8Codec() if codec == "sq8" else pq.PqCodec(s.books), s.embs,
     )
+
+
+def _widths(router: str, w: int) -> dict:
+    return {"nprobe": w} if router == "ivf" else {"nprobe_top": w, "nprobe_sub": w}
+
+
+def _single(s, codec: str, router: str, w: int):
+    return _store(s, codec, router).search(s.qv, k=5, **_widths(router, w))
 
 
 def _batch(s, codec: str, router: str, w: int):
-    sp, embs, qdf = s.spark, s.embs, s.qdf
-    ivf, tree = s.ivf, s.tree
-    if codec == "flat":
-        if router == "ivf":
-            return ivf.batch_search(qdf, k=5, nprobe=w)
-        return tree.batch_search(qdf, k=5, nprobe_top=w, nprobe_sub=w)
-    p = s.path[f"{codec}-{router}"]
-    if codec == "sq8" and router == "ivf":
-        return quant.ivf_quantized_batch_search_parquet(
-            sp, p, embs, ivf.centroids, qdf, k=5, nprobe=w
-        )
-    if codec == "sq8":
-        return quant.tree_quantized_batch_search_parquet(
-            sp, p, embs, tree.centroids_top, tree.centroids_sub, qdf, k=5,
-            nprobe_top=w, nprobe_sub=w,
-        )
-    if router == "ivf":
-        return pq.ivf_pq_companion_batch_search_parquet(
-            sp, p, embs, ivf.centroids, s.books, qdf, k=5, nprobe=w
-        )
-    return pq.tree_pq_batch_search_parquet(
-        sp, p, tree.centroids_top, tree.centroids_sub, s.books, embs, qdf,
-        k=5, nprobe_top=w, nprobe_sub=w,
-    )
+    return _store(s, codec, router).batch_search(s.qdf, k=5, **_widths(router, w))
 
 
 @pytest.mark.parametrize("shape", ["single", "batch"])
@@ -159,6 +129,50 @@ def test_batch_and_stream_write_the_same_codec_columns(stores):
     got = sorted(map(tuple, batch.select(*cols).collect()))
     assert got
     assert got == sorted(map(tuple, stream.select(*cols).collect()))
+
+
+def test_vector_literal_binds_like_f_lit(spark):
+    """The one array binder (knn.vector_literal) reads back bit-identical
+    to F.lit with the same types: nested doubles with NaN, ±inf, -0.0,
+    a subnormal and 1e308, and integer words on both sides of 2^31."""
+    import math
+    import struct
+
+    from pyspark.sql import functions as F
+
+    doubles = [
+        [float("nan"), float("inf"), -float("inf"), -0.0],
+        [5e-324, 1e308, -1e308, 0.1],
+    ]
+    cases = {
+        "nested": (doubles, {}),
+        "flat": (doubles[1], {}),
+        "small_words": ([0, 1, 2**31 - 1, -(2**31)], {"integers": True}),
+        "wide_words": ([0, 2**31, 2**32 - 1, 2**62], {"integers": True}),
+    }
+    cols = []
+    for name, (value, kw) in cases.items():
+        cols += [
+            knn.vector_literal(value, **kw).alias(f"{name}_bound"),
+            F.lit(value).alias(f"{name}_lit"),
+        ]
+    df = spark.range(1).select(*cols)
+    row = df.first()
+
+    def bits(v):
+        if isinstance(v, list):
+            return [bits(x) for x in v]
+        if isinstance(v, float):
+            return struct.pack(">d", v)
+        return v
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+    for name in cases:
+        assert types[f"{name}_bound"] == types[f"{name}_lit"], name
+        assert bits(row[f"{name}_bound"]) == bits(row[f"{name}_lit"]), name
+    assert math.isnan(row["nested_bound"][0][0])
+    assert types["small_words_bound"].simpleString() == "array<int>"
+    assert types["wide_words_bound"].simpleString() == "array<bigint>"
 
 
 KEY = "probe-core-lock-test"

@@ -10,6 +10,7 @@ import pytest
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from ydb_vector_search_demo_spark.operators import quant
+from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 from ydb_vector_search_demo_spark.plans.catalog import QV
 from ydb_vector_search_demo_spark.sources.tables import load_table
@@ -64,7 +65,9 @@ def test_int8_rescore_matches_exact_topk(spark):
     qdf = quant.quantize_int8(embs)
     got = [
         (r.vec_id, round(r.score, 9))
-        for r in quant.quantized_search(qdf, embs, QV, k=10, rescore=4).collect()
+        for r in VectorStore(qdf, codec=quant.Int8Codec(), embeddings=embs)
+        .search(QV, k=10, rescore=4)
+        .collect()
     ]
     assert got == exact  # rescore is exact math over candidates
 
@@ -100,7 +103,9 @@ def test_serving_plan_shape(spark, tmp_path):
     embs = load_table(spark, SF_SMOKE, "embeddings")
     path = str(tmp_path / "qstore")
     quant.write_quantized_store(embs, path)
-    df = quant.quantized_search_parquet(spark, path, embs, QV, k=5, rescore=4)
+    df = VectorStore(
+        spark.read.parquet(path), codec=quant.Int8Codec(), embeddings=embs
+    ).search(QV, k=5, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
@@ -120,9 +125,11 @@ def test_ivf_quantized_store_composes_pruning_and_byte_reduction(spark, tmp_path
     qpath = str(tmp_path / "ivf_q")
     quant.write_ivf_quantized(index, qpath)
 
-    df = quant.ivf_quantized_search_parquet(
-        spark, qpath, embs, index.centroids, QV, k=5, nprobe=3, rescore=4
+    store = VectorStore(
+        spark.read.parquet(qpath), ann._IvfRouter(index.centroids),
+        quant.Int8Codec(), embs,
     )
+    df = store.search(QV, k=5, nprobe=3, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # two scans: the quantized store must partition-prune on centroid_id
     # (the float scan's PartitionFilters stays empty — it serves rescore)
@@ -138,9 +145,7 @@ def test_ivf_quantized_store_composes_pruning_and_byte_reduction(spark, tmp_path
     exact = [
         (r.vec_id, round(r.score, 9)) for r in knn_scores(embs, QV, k=5).collect()
     ]
-    full = quant.ivf_quantized_search_parquet(
-        spark, qpath, embs, index.centroids, QV, k=5, nprobe=8, rescore=8
-    )
+    full = store.search(QV, k=5, nprobe=8, rescore=8)
     got = [(r.vec_id, round(r.score, 9)) for r in full.collect()]
     assert got == exact
     index.assigned.unpersist()
@@ -158,8 +163,8 @@ def test_filtered_quantized_search_equals_filtered_exact(spark):
     ]
     got = [
         (r.vec_id, round(r.score, 9))
-        for r in quant.quantized_search(
-            qdf, embs, QV, k=5, rescore=8, predicate="label = 1"
-        ).collect()
+        for r in VectorStore(qdf, codec=quant.Int8Codec(), embeddings=embs)
+        .search(QV, k=5, rescore=8, predicate="label = 1")
+        .collect()
     ]
     assert got == exact

@@ -96,8 +96,8 @@ def test_stream_ivf_pq_companions_equal_batch_across_microbatches(
 
 def test_coarse_searches_on_streamed_store(spark, embs, ivf, books, tmp_path):
     """Both coarse search shapes run directly on the streamed-in store:
-    int8 (quant.ivf_quantized_search_parquet) and PQ companion
-    (pq.ivf_pq_companion_search_parquet). At a full probe with a
+    int8 (quant.Int8Codec) and PQ companion (pq.PqCodec), each an
+    IVF-routed ann.VectorStore. At a full probe with a
     candidate pool covering the corpus, both equal exact KNN."""
     src = tmp_path / "drops2"
     src.mkdir()
@@ -119,17 +119,21 @@ def test_coarse_searches_on_streamed_store(spark, embs, ivf, books, tmp_path):
     ]
     int8 = [
         (r.vec_id, round(r.score, 9))
-        for r in quant.ivf_quantized_search_parquet(
-            spark, store, embs, ivf.centroids, QV,
-            k=k, nprobe=len(ivf.centroids), rescore=rescore,
+        for r in ann.VectorStore(
+            spark.read.parquet(store), ann._IvfRouter(ivf.centroids),
+            quant.Int8Codec(), embs,
+        ).search(
+            QV, k=k, nprobe=len(ivf.centroids), rescore=rescore,
         ).collect()
     ]
     assert int8 == exact
     pq_res = [
         (r.vec_id, round(r.score, 9))
-        for r in pq.ivf_pq_companion_search_parquet(
-            spark, store, ivf.centroids, books, embs, QV,
-            k=k, nprobe=len(ivf.centroids), rescore=rescore,
+        for r in ann.VectorStore(
+            spark.read.parquet(store), ann._IvfRouter(ivf.centroids),
+            pq.PqCodec(books), embs,
+        ).search(
+            QV, k=k, nprobe=len(ivf.centroids), rescore=rescore,
         ).collect()
     ]
     assert pq_res == exact
@@ -155,8 +159,10 @@ def test_tree_store_quantized_companions(spark, embs, books, tmp_path):
         ]
         int8 = [
             (r.vec_id, round(r.score, 9))
-            for r in quant.tree_quantized_search_parquet(
-                spark, int8_path, embs, tree.centroids_top, tree.centroids_sub,
+            for r in ann.VectorStore(
+                spark.read.parquet(int8_path), tree.store.router,
+                quant.Int8Codec(), embs,
+            ).search(
                 QV, k=k, nprobe_top=len(tree.centroids_top),
                 nprobe_sub=k_sub_max, rescore=rescore,
             ).collect()
@@ -164,9 +170,11 @@ def test_tree_store_quantized_companions(spark, embs, books, tmp_path):
         assert int8 == exact
         pq_res = [
             (r.vec_id, round(r.score, 9))
-            for r in pq.tree_pq_search_parquet(
-                spark, pq_path, tree.centroids_top, tree.centroids_sub, books,
-                embs, QV, k=k, nprobe_top=len(tree.centroids_top),
+            for r in ann.VectorStore(
+                spark.read.parquet(pq_path), tree.store.router,
+                pq.PqCodec(books), embs,
+            ).search(
+                QV, k=k, nprobe_top=len(tree.centroids_top),
                 nprobe_sub=k_sub_max, rescore=rescore,
             ).collect()
         ]
@@ -302,13 +310,13 @@ def test_stream_ingest_mrl_prefix_companion(spark, embs, ivf, tmp_path):
     assert mism == 0
 
     n = embs.count()
-    got = quant.mrl_batch_search_parquet(
-        spark, store,
-        embs,
+    got = ann.VectorStore(
+        spark.read.parquet(store), codec=quant.MrlCodec(16), embeddings=embs
+    ).batch_search(
         spark.createDataFrame(
             [(0, QV)], "query_id INT, query_vec ARRAY<DOUBLE>"
         ),
-        dims=16, k=5, rescore=(n // 5) + 1,
+        k=5, rescore=(n // 5) + 1,
     ).collect()
     want = knn_scores(embs, QV, k=5).collect()
     assert [(r["vec_id"], round(r["score"], 9)) for r in got] == [
@@ -319,8 +327,8 @@ def test_stream_ingest_mrl_prefix_companion(spark, embs, ivf, tmp_path):
 def test_stream_ingest_rotated_prefix_companion(spark, embs, ivf, tmp_path):
     """The learned-rotation prefix companion streams too (r6): the
     prefix column equals write_rotated_store's batch rotation row for
-    row, the streamed-in store serves pca_batch_search_parquet
-    directly — exact at the degenerate point (dims=d, corpus-covering
+    row, the streamed-in store serves a batched rotation.PcaCodec
+    store directly — exact at the degenerate point (dims=d, corpus-covering
     pool) — and the mrl/rotation prefix companions are mutually
     exclusive (both write 'prefix')."""
     from ydb_vector_search_demo_spark.operators import rotation as R
@@ -351,12 +359,13 @@ def test_stream_ingest_rotated_prefix_companion(spark, embs, ivf, tmp_path):
         assert [round(x, 9) for x in r["prefix"]] == batch[r["vec_id"]]
 
     n = embs.count()
-    got = R.pca_batch_search_parquet(
-        spark, store, embs, rot,
+    got = ann.VectorStore(
+        spark.read.parquet(store), codec=R.PcaCodec(rot, 16), embeddings=embs
+    ).batch_search(
         spark.createDataFrame(
             [(0, QV)], "query_id INT, query_vec ARRAY<DOUBLE>"
         ),
-        dims=16, k=5, rescore=(n // 5) + 1,
+        k=5, rescore=(n // 5) + 1,
     ).collect()
     # dims=16 (not d) with a corpus-covering pool: the coarse stage can
     # only order the pool, the rescore is exact over ALL of it -> exact
@@ -411,21 +420,21 @@ def test_stream_ingest_opq_companion_equals_batch_and_serves(
     )
     assert got == want
 
+    opq_store = ann.VectorStore(
+        spark.read.parquet(store), ann._IvfRouter(ivf.centroids),
+        pq.PqCodec(opq_books, rotation=H), embs,
+    )
     single = [
         (r["vec_id"], round(r["score"], 9))
-        for r in pq.ivf_pq_companion_search_parquet(
-            spark, store, ivf.centroids, opq_books, embs, QV,
-            k=5, nprobe=2, rescore=4, rotation=H,
-        ).collect()
+        for r in opq_store.search(QV, k=5, nprobe=2, rescore=4).collect()
     ]
     queries = spark.createDataFrame(
         [(0, QV)], "query_id BIGINT, query_vec ARRAY<DOUBLE>"
     )
     batch_hits = [
         (r["vec_id"], round(r["score"], 9))
-        for r in pq.ivf_pq_companion_batch_search_parquet(
-            spark, store, embs, ivf.centroids, opq_books, queries,
-            k=5, nprobe=2, rescore=4, rotation=H,
+        for r in opq_store.batch_search(
+            queries, k=5, nprobe=2, rescore=4,
         ).collect()
     ]
     assert batch_hits == single

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance
 from ydb_vector_search_demo_spark.operators import rotation as R
+from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 from ydb_vector_search_demo_spark.sources.tables import load_table
 
@@ -44,6 +45,20 @@ def test_rotate_expr_matches_driver_fold(spark, sf_oracle):
         assert list(row["r"]) == expect  # bitwise: same fold order
 
 
+def _inline(embs, rot, dims):
+    """The rotated-prefix store over the float relation itself: the
+    ``dims``-prefix is rotated inline from ``embedding``."""
+    return VectorStore(embs, codec=R.PcaCodec(rot, dims, inline_col="embedding"))
+
+
+def _stored(path, embs, rot):
+    """The persisted 16-dim rotated-prefix store, rescored from ``embs``."""
+    return VectorStore(
+        embs.sparkSession.read.parquet(path), codec=R.PcaCodec(rot, 16),
+        embeddings=embs,
+    )
+
+
 def test_hadamard_is_orthonormal():
     rot = R.hadamard_rotation(64)
     n = len(rot)
@@ -57,7 +72,7 @@ def test_full_width_rotation_equals_exact_knn(spark, sf_oracle):
     embs = load_table(spark, sf_oracle, "embeddings")
     rot = R.fit_pca_rotation(embs, sample=256)
     got = _rows(
-        R.pca_prefix_search(embs, rot, QV, dims=64, k=5, rescore=4)
+        _inline(embs, rot, 64).search(QV, k=5, rescore=4)
     )
     exact = _rows(knn_scores(embs, QV, k=5))
     assert [g[0] for g in got] == [e[0] for e in exact]
@@ -124,10 +139,10 @@ def test_parquet_store_serves_same_rows(spark, sf_oracle, tmp_path):
     path = str(tmp_path / "rotstore")
     R.write_rotated_store(embs, path, rot, dims=16)
     served = _rows(
-        R.pca_search_parquet(spark, path, embs, rot, QV, dims=16, k=5, rescore=4)
+        _stored(path, embs, rot).search(QV, k=5, rescore=4)
     )
     inline = _rows(
-        R.pca_prefix_search(embs, rot, QV, dims=16, k=5, rescore=4)
+        _inline(embs, rot, 16).search(QV, k=5, rescore=4)
     )
     assert served == inline
 
@@ -175,12 +190,10 @@ def test_pca_batch_equals_single_query_loop(spark, sf_oracle, qdf):
     embs = load_table(spark, sf_oracle, "embeddings")
     rot = R.fit_pca_rotation(embs, sample=256)
     got = _by_query(
-        R.pca_batch_search(embs, rot, qdf, dims=16, k=5, rescore=4).collect()
+        _inline(embs, rot, 16).batch_search(qdf, k=5, rescore=4).collect()
     )
     for qid, qv in enumerate(QUERIES_B):
-        single = R.pca_prefix_search(
-            embs, rot, qv, dims=16, k=5, rescore=4
-        ).collect()
+        single = _inline(embs, rot, 16).search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -194,14 +207,10 @@ def test_pca_batch_parquet_equals_loop(spark, sf_oracle, qdf, tmp_path):
     path = str(tmp_path / "rotstore_b")
     R.write_rotated_store(embs, path, rot, dims=16)
     got = _by_query(
-        R.pca_batch_search_parquet(
-            spark, path, embs, rot, qdf, dims=16, k=5, rescore=4
-        ).collect()
+        _stored(path, embs, rot).batch_search(qdf, k=5, rescore=4).collect()
     )
     for qid, qv in enumerate(QUERIES_B):
-        single = R.pca_search_parquet(
-            spark, path, embs, rot, qv, dims=16, k=5, rescore=4
-        ).collect()
+        single = _stored(path, embs, rot).search(qv, k=5, rescore=4).collect()
         want = [
             (i + 1, r["vec_id"], round(r["score"], 9))
             for i, r in enumerate(single)
@@ -219,9 +228,9 @@ def test_pca_batch_full_width_equals_exact_batch(spark, sf_oracle, qdf):
     rot = R.fit_pca_rotation(embs, sample=256)
     n = embs.count()
     got = _by_query(
-        R.pca_batch_search(
-            embs, rot, qdf, dims=64, k=5, rescore=(n // 5) + 1
-        ).collect()
+        _inline(embs, rot, 64)
+        .batch_search(qdf, k=5, rescore=(n // 5) + 1)
+        .collect()
     )
     exact = _by_query(batch_knn(qdf, embs, k=5).collect())
     assert got == exact
@@ -231,7 +240,7 @@ def test_pca_batch_plan_shape(spark, sf_oracle, qdf):
     """Coarse + cut stay JVM-side: no Python nodes, WindowGroupLimit cut."""
     embs = load_table(spark, sf_oracle, "embeddings")
     rot = R.hadamard_rotation(64)
-    df = R.pca_batch_search(embs, rot, qdf, dims=16, k=5, rescore=4)
+    df = _inline(embs, rot, 16).batch_search(qdf, k=5, rescore=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WindowGroupLimit" in plan

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.operators.knn import vector_literal
+
 
 def connected_components(
     edges: DataFrame,
@@ -522,7 +524,7 @@ def connected_components_star(
 # model fine-tuning, reranker training). The anchor batch is small by
 # construction (the same contract as knn.batch_knn's broadcast side);
 # mining for EVERY corpus item is a self-join — route that through
-# dedup's banded-LSH candidates or ann.ivf_batch_search per shard.
+# dedup's banded-LSH candidates or ann.VectorStore.batch_search per shard.
 
 
 def mine_hard_negatives(
@@ -1324,7 +1326,7 @@ def classifier_score_expr(
     plus bias, through the logistic. No joins, no Python — the
     trained model IS an expression, shippable into any scan."""
     n = n_buckets or len(weights)
-    w = F.lit([float(x) for x in weights])
+    w = vector_literal([float(x) for x in weights])
     feats = _classifier_features(text_col)
     # ONE aggregate carrying (sum, count): higher-order functions are
     # CodegenFallback, so codegen subexpression elimination never sees

@@ -12,6 +12,7 @@ per-document signature computation entirely in JVM array expressions
 
 from __future__ import annotations
 
+import contextvars
 import threading
 
 from pyspark.sql import Column, DataFrame, Window
@@ -26,19 +27,30 @@ from ydb_vector_search_demo_spark.sources.tables import fan_out
 # done with a result call release_persisted() — bench.py does between
 # timed queries, and the test suite's autouse fixture does after every
 # test, so a long-lived session never accumulates pinned storage.
+# ``_PERSISTED`` holds what was persisted outside any persist_scope; an
+# open scope owns its own list through ``_SCOPE``, a context variable,
+# so concurrent requests each release only their own relations.
 _PERSISTED: list[DataFrame] = []
 _PERSISTED_LOCK = threading.Lock()
+_SCOPE: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "dedup_persist_scope", default=None
+)
 
 
 def _persist(df: DataFrame) -> DataFrame:
     out = df.persist()
+    owned = _SCOPE.get()
+    if owned is not None:
+        owned.append(out)
+        return out
     with _PERSISTED_LOCK:
         _PERSISTED.append(out)
     return out
 
 
 def release_persisted() -> None:
-    """Unpersist every relation cached by this module's operators."""
+    """Unpersist every relation this module's operators cached outside
+    a :class:`persist_scope` (an open scope keeps its own)."""
     with _PERSISTED_LOCK:
         items = _PERSISTED[:]
         _PERSISTED.clear()
@@ -57,18 +69,17 @@ class persist_scope:
 
     Scopes nest: an inner scope releases only what was persisted after
     it opened; relations persisted before the block stay cached for
-    the caller."""
+    the caller. Each scope owns its relations in the current context,
+    so scopes open at once in two threads never release each other's."""
 
     def __enter__(self) -> "persist_scope":
-        with _PERSISTED_LOCK:
-            self._mark = len(_PERSISTED)
+        self._owned: list[DataFrame] = []
+        self._token = _SCOPE.set(self._owned)
         return self
 
     def __exit__(self, *exc) -> None:
-        with _PERSISTED_LOCK:
-            items = _PERSISTED[self._mark:]
-            del _PERSISTED[self._mark:]
-        for df in items:
+        _SCOPE.reset(self._token)
+        for df in self._owned:
             df.unpersist()
 
 

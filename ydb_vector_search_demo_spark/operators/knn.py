@@ -37,21 +37,32 @@ from ydb_vector_search_demo_spark.session import _get_or_write
 
 def _double_sql(x: float) -> str:
     x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    if math.isnan(x) or math.isinf(x):
+        # a string cast is nullable; coalesce to a literal keeps the
+        # element non-nullable, the type F.lit gives
+        word = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+        return f"coalesce(CAST('{word}' AS DOUBLE), 0D)"
     return f"{x!r}D"
 
 
-def vector_literal(query_vector: Sequence[float]) -> Column:
-    """A query vector as one ``array(<x>D, ...)`` expression parsed in
-    the JVM: a single py4j call, where ``F.lit(list)`` makes one per
-    component. ``repr`` is the shortest decimal that round-trips, so
-    each component parses back to the identical double (NaN and ±inf
-    through Spark's own string casts); constant folding turns both
-    forms into the same array<double> literal."""
-    return F.expr("array(" + ", ".join(_double_sql(x) for x in query_vector) + ")")
+def _sql_literal(x, integers: bool) -> str:
+    if isinstance(x, (list, tuple)):
+        return "array(" + ", ".join(_sql_literal(e, integers) for e in x) + ")"
+    return str(int(x)) if integers else _double_sql(x)
+
+
+def vector_literal(values: Sequence, integers: bool = False) -> Column:
+    """A driver-side array as one ``array(<x>D, ...)`` expression parsed
+    in the JVM: a single py4j call, where ``F.lit(list)`` makes one per
+    element. Nested lists nest (a codebook, a LUT, a rotation matrix).
+    ``repr`` is the shortest decimal that round-trips, so each component
+    parses back to the identical double (NaN and ±inf through Spark's
+    own string casts, kept non-nullable). ``integers`` binds whole
+    numbers instead (packed bit words, cell ids): the parser types each
+    as INT when it fits and BIGINT otherwise, the rule ``F.lit`` applies
+    per element. Constant folding turns both forms into the same array
+    literal."""
+    return F.expr(_sql_literal(values, integers))
 
 
 def knn_scores(
@@ -283,13 +294,6 @@ def block_batch_knn(
         candidates.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def distance_column(
-    vector_col: str | Column, query_vector: Sequence[float], metric: str = "cosine"
-) -> Column:
-    """Convenience: distance of a vector column to a literal query vector."""
-    return distance(vector_col, vector_literal(query_vector), metric)
 
 
 def knn_page_after(

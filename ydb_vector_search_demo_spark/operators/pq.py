@@ -51,32 +51,20 @@ from ydb_vector_search_demo_spark.functions.vector import (
     to_double_array,
 )
 from ydb_vector_search_demo_spark.operators.ann import (
+    VectorStore,
+    _Codec,
     _IvfRouter,
     _TreeRouter,
-    _apply_pred,
     _argmin,
-    _batch_coarse_rescore,
-    _batch_probe_scan,
     _cell_rows,
     _codebook,
-    _coarse_rescore,
-    _collect_query_vectors,
-    _membership_df,
-    _probe_scan,
     _sq_dists,
     _write_cells,
     recall_at_k,
 )
-from ydb_vector_search_demo_spark.operators.knn import knn_scores
+from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
 
 Codebooks = list[list[list[float]]]  # m × k* × (dim/m)
-
-# codec columns of a batched ADC probe's broadcast side: the query's
-# lookup table and norm (:func:`_query_lut`)
-_LUT_FIELDS = (
-    StructField("_lut", ArrayType(ArrayType(DoubleType()))),
-    StructField("_qn", DoubleType()),
-)
 
 # OPQ (r6 verdict task #2): every train/encode/LUT seam below accepts an
 # optional orthonormal ``rotation`` (operators.rotation — fit with
@@ -353,8 +341,8 @@ def adc_score(
     functions.vector.cosine_similarity)."""
     qn = math.sqrt(sum(float(x) * float(x) for x in query_vector))
     return adc_score_col(
-        codes_col, F.lit([[float(x) for x in row] for row in lut]), metric,
-        F.lit(qn), norm_col,
+        codes_col, vector_literal([[float(x) for x in row] for row in lut]),
+        metric, F.lit(qn), norm_col,
     )
 
 
@@ -367,44 +355,67 @@ def _query_lut(
     return adc_lut(cq, codebooks, metric), math.sqrt(sum(x * x for x in cq))
 
 
-def _adc_query_score(
-    qv: list[float], codebooks: Codebooks, metric: str, codes_col, norm_col,
-    rotation,
-) -> Column:
-    """Single-query ADC coarse score: the global LUT of the (OPQ-rotated)
-    query as a plan literal."""
-    cq = _maybe_rotate_q(qv, rotation)
-    return adc_score(codes_col, adc_lut(cq, codebooks, metric), metric, cq, norm_col)
+class PqCodec(_Codec):
+    """The PQ codec: ADC over the m-byte codes and the exact norm
+    (:func:`adc_score_col`). The query's lookup table and
+    norm are its per-query driver values:
 
+    * companion codes (``centroids=None`` — :func:`pq_encode`,
+      :func:`write_tree_pq`, the IVF layout ``stream_ivf_ingest``
+      writes): one global LUT of the (OPQ-``rotation``-rotated) query,
+      shared by every cell, so a streamed-in store is searchable with
+      zero refit;
+    * residual codes (``centroids`` = the IVF codebook —
+      :func:`write_ivfpq_store`, IVF routing only): one LUT per probed
+      cell (:func:`_ivfpq_cell_lut`); a single-query probe's rows pick
+      theirs by probe index, so the literal scales with nprobe, never
+      k_clusters.
 
-def pq_search(
-    encoded: DataFrame,
-    embeddings: DataFrame,
-    codebooks: Codebooks,
-    query_vector: Sequence[float],
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """ADC coarse pass over the m-byte codes (TakeOrderedAndProject —
-    no shuffle of scored rows), broadcast the top ``rescore·k`` ids
-    into the float relation, exact rescore, exact top-k of candidates.
-    ``predicate`` applies inside the coarse scan (filtered probe).
-    ``rotation`` (OPQ stores): the LUT is built from the ROTATED query
-    against the rotated-space codebooks; the rescore still runs on the
-    original floats with the original query."""
-    qv = [float(x) for x in query_vector]
-    return _coarse_rescore(
-        _apply_pred(encoded, predicate),
-        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
+    Probe ranking and the exact rescore stay in the original basis;
+    ``rotation`` only rotates the LUTs. The store holds the ``pq_codes``
+    and ``vnorm`` columns of :func:`_pq_cols`."""
+
+    fields = (
+        StructField("_lut", ArrayType(ArrayType(DoubleType()))),
+        StructField("_qn", DoubleType()),
     )
+
+    def __init__(
+        self,
+        codebooks: Codebooks,
+        centroids: list[list[float]] | None = None,
+        rotation=None,
+    ):
+        self.books, self.centroids, self.rotation = codebooks, centroids, rotation
+
+    def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
+        if self.centroids is None:
+            return [_query_lut(qv, self.books, metric, self.rotation)] * len(cells)
+        qn = math.sqrt(sum(x * x for x in qv))
+        return [
+            (
+                _ivfpq_cell_lut(
+                    qv, self.centroids[c], self.books, metric, self.rotation
+                ),
+                qn,
+            )
+            for (c,) in cells
+        ]
+
+    def bind(self, qv: list[float], cells: list[tuple], metric: str) -> Column:
+        if self.centroids is None:
+            return super().bind(qv, cells, metric)
+        luts = [lut for lut, _ in self.values(qv, cells, metric)]
+        probe_idx = F.array_position(
+            vector_literal([c for (c,) in cells], integers=True), F.col("centroid_id")
+        )  # 1-based index into the LUT stack
+        return self.score(
+            metric, None, F.element_at(vector_literal(luts), probe_idx.cast("int")),
+            F.lit(math.sqrt(sum(x * x for x in qv))),
+        )
+
+    def score(self, metric: str, q: Column, lut: Column, qnorm: Column) -> Column:
+        return adc_score_col("pq_codes", lut, metric, qnorm, "vnorm")
 
 
 def write_pq_store(
@@ -441,46 +452,6 @@ def write_pq_store(
 # ingest can keep fresh.
 
 
-def ivf_pq_companion_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    nprobe: int = 3,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """Coarse ADC search over a centroid-partitioned store carrying
-    raw-vector PQ companion columns (the layout ``stream_ivf_ingest``
-    writes): partition-prune to ``nprobe`` cells, score m-byte codes
-    against the global LUT, exact-rescore the top ``rescore·k`` from
-    the float relation — ``quant.ivf_quantized_search_parquet``'s
-    shape at PQ compression. ``predicate`` applies inside the pruned
-    scan. ``rotation``: the OPQ basis of an OPQ-encoded companion
-    store (stream_ivf_ingest's ``pq_rotation``) — the global LUT is
-    built from the rotated query; probe ranking and rescore stay in
-    the original basis."""
-    qv = [float(x) for x in query_vector]
-    coarse, _ = _probe_scan(
-        spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
-        qv, predicate,
-    )
-    return _coarse_rescore(
-        coarse,
-        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
 def write_tree_pq(
     index,
     codebooks: Codebooks,
@@ -506,46 +477,6 @@ def write_tree_pq(
     )
 
 
-def tree_pq_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    codebooks: Codebooks,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    nprobe_top: int = 2,
-    nprobe_sub: int = 2,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """Coarse ADC search over the tree-partitioned PQ companion store:
-    two-level OR-of-AND partition pruning × m-byte codes, global LUT,
-    exact rescore — both scan levers multiply, same contract as
-    ``quant.tree_quantized_search_parquet`` at PQ compression.
-    ``predicate`` applies inside the pruned scan; ``rotation`` is the
-    OPQ basis of a rotated-codebook store (LUT from the rotated
-    query, probes/rescore in the original basis)."""
-    qv = [float(x) for x in query_vector]
-    coarse, _ = _probe_scan(
-        spark.read.parquet(store_path),
-        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
-        qv, predicate,
-    )
-    return _coarse_rescore(
-        coarse,
-        _adc_query_score(qv, codebooks, metric, codes_col, norm_col, rotation),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
 # --------------------------------------------------------------------------
 # IVF-PQ: residual-encoded codes inside the centroid-partitioned layout
 # --------------------------------------------------------------------------
@@ -557,8 +488,7 @@ def _residual_expr(
     """x − centroid[centroid_id] as a map-side expression (the centroid
     matrix is a plan literal indexed by the assignment column)."""
     v = to_double_array(vector_col)
-    cents = F.array(*[F.lit([float(x) for x in c]) for c in centroids])
-    c = F.element_at(cents, F.col(cid_col) + 1)
+    c = F.element_at(_codebook(centroids), F.col(cid_col) + 1)
     return F.zip_with(v, c, lambda x, y: x - y)
 
 
@@ -647,104 +577,6 @@ def _ivfpq_cell_lut(
     return [[x + qc for x in row] for row in lut]
 
 
-def ivfpq_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    nprobe: int = 4,
-    rescore: int = 8,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """The 100 TB ANN serving shape: partition-prune to ``nprobe``
-    cells, ADC-score m-byte residual codes against per-cell LUTs
-    (rows pick their LUT by probe index — the literal scales with
-    nprobe, never k_clusters), coarse top-``rescore·k``, broadcast
-    exact rescore from the float relation. ``predicate`` applies
-    inside the pruned scan. ``rotation``: the OPQ basis the store was
-    encoded under (probe ranking and rescore stay in the original
-    basis — only the per-cell LUTs rotate)."""
-    qv = [float(x) for x in query_vector]
-    coarse, cells = _probe_scan(
-        spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
-        qv, predicate,
-    )
-    probes = [c for (c,) in cells]
-    luts = [
-        _ivfpq_cell_lut(qv, centroids[t], codebooks, metric, rotation=rotation)
-        for t in probes
-    ]
-    probe_idx = F.array_position(
-        F.lit(probes), F.col("centroid_id")
-    )  # 1-based index into the LUT stack
-    score = adc_score_col(
-        codes_col, F.element_at(F.lit(luts), probe_idx.cast("int")), metric,
-        F.lit(math.sqrt(sum(x * x for x in qv))), norm_col,
-    )
-    return _coarse_rescore(
-        coarse, score,
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
-def ivfpq_batch_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    rescore: int = 8,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """Batched probe of the RESIDUAL-encoded IVF-PQ store
-    (:func:`write_ivfpq_store`): residual LUTs are per-(query, cell)
-    by construction, so the broadcast membership relation carries
-    (query_id, centroid_id, cell-residual LUT, query norm) rows —
-    Q × nprobe of them, driver/broadcast scale — and each pruned store
-    row joins ONLY the (query, LUT) pairs that probed its cell. One
-    m-byte coarse scan for the batch, per-query
-    Partial-WindowGroupLimit cut, shared exact rescore. Per query
-    row-identical to the single-query :func:`ivfpq_search_parquet`
-    loop at equal nprobe/rescore (equality-tested)."""
-    def cell_luts(qv: list[float], cells: list[tuple]) -> list[tuple]:
-        qn = math.sqrt(sum(x * x for x in qv))
-        return [
-            (_ivfpq_cell_lut(qv, centroids[c], codebooks, metric, rotation=rotation), qn)
-            for (c,) in cells
-        ]
-
-    return _batch_coarse_rescore(
-        _batch_probe_scan(
-            spark.read.parquet(store_path), _IvfRouter(centroids, metric, nprobe),
-            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
-            cell_luts,
-        ),
-        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
 def ivfpq_recall(
     spark: SparkSession,
     embeddings: DataFrame,
@@ -783,11 +615,10 @@ def ivfpq_recall(
     write_ivfpq_store(index, books, tmp_path)
     approx = [
         r[0]
-        for r in ivfpq_search_parquet(
-            spark, tmp_path, index.centroids, books, embeddings, qv,
-            k=k, nprobe=nprobe, rescore=rescore, metric=metric,
-            id_col=id_col, vector_col=vector_col,
-        ).collect()
+        for r in VectorStore(
+            spark.read.parquet(tmp_path), _IvfRouter(index.centroids),
+            PqCodec(books, index.centroids), embeddings, id_col, vector_col,
+        ).search(qv, k=k, nprobe=nprobe, rescore=rescore, metric=metric).collect()
     ]
     # flat IVF (exact rescan of the same probed cells) at the same
     # nprobe: the ceiling set by the coarse probe alone. recall ==
@@ -855,10 +686,10 @@ def pq_recall(
     ]
     rescored = [
         r[0]
-        for r in pq_search(
-            encoded, embeddings, books, qv, k=k, rescore=rescore, metric=metric,
-            id_col=id_col, vector_col=vector_col,
-        ).collect()
+        for r in VectorStore(
+            encoded, codec=PqCodec(books), embeddings=embeddings, id_col=id_col,
+            vector_col=vector_col,
+        ).search(qv, k=k, rescore=rescore, metric=metric).collect()
     ]
     compression = (dim * 4.0) / (m + 4.0)  # float32 bytes vs codes+norm
     return spark.createDataFrame(
@@ -942,11 +773,10 @@ def opq_recall(
         ]
         rescored = [
             r[0]
-            for r in pq_search(
-                encoded, embeddings, books, qv, k=k, rescore=rescore,
-                metric=metric, id_col=id_col, vector_col=vector_col,
-                rotation=rot,
-            ).collect()
+            for r in VectorStore(
+                encoded, codec=PqCodec(books, rotation=rot),
+                embeddings=embeddings, id_col=id_col, vector_col=vector_col,
+            ).search(qv, k=k, rescore=rescore, metric=metric).collect()
         ]
         mse = pq_quantization_mse(
             embeddings, books, vector_col=vector_col, rotation=rot
@@ -1060,130 +890,6 @@ def pq_drift_report(
         ],
         "n_batch BIGINT, batch_mse DOUBLE, baseline_mse DOUBLE, "
         "mse_ratio DOUBLE, threshold DOUBLE, refit_recommended BOOLEAN",
-    )
-
-
-# --------------------------------------------------------------------------
-# Batched ADC probes (r5): the batch discipline composed with PQ codes.
-# The per-query LUT (m × k* floats) rides the broadcast query batch as
-# a column, so ONE coarse scan of the m-byte codes serves every query —
-# the scan cost is paid once per batch at the best bytes/recall point
-# of the quantization ladder.
-# --------------------------------------------------------------------------
-
-
-def pq_batch_search(
-    encoded: DataFrame,
-    embeddings: DataFrame,
-    codebooks: Codebooks,
-    queries: DataFrame,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """Batched ADC search: ONE coarse scan of the m-byte codes scores
-    every query (per-query LUT as a broadcast column), per-query
-    Partial-WindowGroupLimit coarse cut, shared exact batch rescore.
-    Per query row-identical to :func:`pq_search` at equal parameters
-    (equality-tested, with and without an OPQ ``rotation``)."""
-    rows = [
-        (qid, qv, *_query_lut(qv, codebooks, metric, rotation))
-        for qid, qv in _collect_query_vectors(queries, query_id_col, query_vec_col)
-    ]
-    qb = _membership_df(queries, query_id_col, rows, [], _LUT_FIELDS)
-    return _batch_coarse_rescore(
-        _apply_pred(encoded, predicate).crossJoin(F.broadcast(qb)),
-        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def tree_pq_batch_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    codebooks: Codebooks,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe_top: int = 2,
-    nprobe_sub: int = 2,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """Batched ADC probe of the two-level tree PQ store
-    (:func:`write_tree_pq`): the whole batch's OR-of-AND union clause
-    prunes BOTH directory levels of ONE m-byte scan, the broadcast
-    (query_id, cell_top, cell_sub, LUT) membership join fans each leaf
-    row out only to the queries that probed its leaf, per-query
-    Partial-WindowGroupLimit coarse cut, shared exact batch rescore.
-    Per query row-identical to the single-query
-    :func:`tree_pq_search_parquet` loop at equal nprobes/rescore."""
-    return _batch_coarse_rescore(
-        _batch_probe_scan(
-            spark.read.parquet(store_path),
-            _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
-            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
-            lambda qv, cells: [_query_lut(qv, codebooks, metric, rotation)] * len(cells),
-        ),
-        adc_score_col(codes_col, F.col("_lut"), metric, F.col("_qn"), norm_col),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def ivf_pq_companion_batch_search_parquet(
-    spark: SparkSession,
-    pq_path: str,
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 3,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-    rotation=None,
-) -> DataFrame:
-    """The batched 100 TB PQ serving composition: union-of-cells
-    partition pruning on the PQ companion store × m-byte ADC scoring ×
-    broadcast (query_id, cell, LUT) membership fan-out × per-query
-    coarse cut × shared batch rescore. Per query row-identical to the
-    single-query :func:`ivf_pq_companion_search_parquet` loop at equal
-    nprobe/rescore (equality-tested, with and without an OPQ
-    ``rotation``)."""
-    return _batch_coarse_rescore(
-        _batch_probe_scan(
-            spark.read.parquet(pq_path), _IvfRouter(centroids, metric, nprobe),
-            queries, query_id_col, query_vec_col, predicate, _LUT_FIELDS,
-            lambda qv, cells: [_query_lut(qv, codebooks, metric, rotation)] * len(cells),
-        ),
-        adc_score_col("pq_codes", F.col("_lut"), metric, F.col("_qn"), "vnorm"),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
     )
 
 

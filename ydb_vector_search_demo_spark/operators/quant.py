@@ -39,26 +39,22 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField
 
 from ydb_vector_search_demo_spark.functions.vector import (
     distance,
     to_double_array,
 )
 from ydb_vector_search_demo_spark.operators.ann import (
+    VectorStore,
+    _Codec,
     _IvfRouter,
     _TreeRouter,
-    _apply_pred,
-    _batch_coarse_rescore,
-    _batch_probe_scan,
     _cell_rows,
-    _coarse_rescore,
-    _collect_query_vectors,
-    _membership_df,
-    _probe_scan,
     _write_cells,
     recall_at_k,
 )
-from ydb_vector_search_demo_spark.operators.knn import knn_scores
+from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
 
 BITS_PER_WORD = 32  # sign-bit packing width; see module docstring
 
@@ -156,43 +152,7 @@ def coarse_distance(
     Cosine skips the scale (scale-invariant); other metrics dequantize
     inline inside the same expression."""
     return coarse_distance_col(
-        q_col, scale_col, F.lit([float(x) for x in query_vector]), metric
-    )
-
-
-def quantized_search(
-    quantized: DataFrame,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    q_col: str = "qvec",
-    scale_col: str = "qscale",
-    predicate=None,
-) -> DataFrame:
-    """Coarse-scan the quantized relation for the top ``rescore·k``
-    candidates (TakeOrderedAndProject — k·c rows reach the driver-side
-    merge, nothing shuffles), broadcast those ids into the float
-    relation, exact-rescore, return the exact top-k of the candidates.
-
-    ``rescore`` is the recall knob: the int8 coarse ordering differs
-    from the exact one only within quantization-error margins, so a
-    small c (2-8) recovers recall@k ≈ 1.0 while the full-precision
-    column is read for c·k rows instead of the whole corpus.
-
-    ``predicate`` (Column or SQL string) applies inside the coarse
-    scan — the quantized filtered-search shape; the filter columns
-    must be in the quantized relation (``keep_cols`` at quantize
-    time). Selecting candidates under the predicate keeps the exact
-    top-k of the FILTERED set, because rescore is exact over them."""
-    qv = [float(x) for x in query_vector]
-    return _coarse_rescore(
-        _apply_pred(quantized, predicate),
-        coarse_distance(q_col, scale_col, qv, metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
+        q_col, scale_col, vector_literal([float(x) for x in query_vector]), metric
     )
 
 
@@ -211,34 +171,6 @@ def write_quantized_store(
     quantize_int8(
         embeddings, id_col=id_col, vector_col=vector_col, keep_cols=keep_cols
     ).write.mode("overwrite").parquet(path)
-
-
-def quantized_search_parquet(
-    spark: SparkSession,
-    quantized_path: str,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serving path: coarse pass over the persisted int8 store (the
-    only full scan — ~4× fewer bytes), exact rescore against the float
-    relation for the c·k candidates."""
-    return quantized_search(
-        spark.read.parquet(quantized_path),
-        embeddings,
-        query_vector,
-        k=k,
-        rescore=rescore,
-        metric=metric,
-        id_col=id_col,
-        vector_col=vector_col,
-        predicate=predicate,
-    )
 
 
 # --------------------------------------------------------------------------
@@ -267,37 +199,6 @@ def _write_int8_cells(index, router, path: str, keep_cols: tuple) -> None:
     _write_cells(rows, router, path)
 
 
-def ivf_quantized_search_parquet(
-    spark: SparkSession,
-    quantized_path: str,
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    query_vector: Sequence[float],
-    k: int = 5,
-    nprobe: int = 3,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serve from the quantized IVF store: rank centroids driver-side,
-    partition-prune to ``nprobe`` cells, coarse-score the int8 column
-    inside them (TakeOrderedAndProject), exact-rescore the top
-    ``rescore·k`` from the float relation. ``predicate`` applies inside
-    the pruned scan (filtered probe; columns via write-time
-    ``keep_cols``)."""
-    qv = [float(x) for x in query_vector]
-    coarse, _ = _probe_scan(
-        spark.read.parquet(quantized_path), _IvfRouter(centroids, metric, nprobe),
-        qv, predicate,
-    )
-    return _coarse_rescore(
-        coarse, coarse_distance("qvec", "qscale", qv, metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
 def write_tree_quantized(index, path: str, keep_cols: tuple = ()) -> None:
     """int8 companion of ``ann.write_tree_partitioned`` — the two-level
     analogue of :func:`write_ivf_quantized` (r4 verdict, What's-missing
@@ -308,38 +209,23 @@ def write_tree_quantized(index, path: str, keep_cols: tuple = ()) -> None:
     _write_int8_cells(index, _TreeRouter, path, keep_cols)
 
 
-def tree_quantized_search_parquet(
-    spark: SparkSession,
-    quantized_path: str,
-    embeddings: DataFrame,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    query_vector: Sequence[float],
-    k: int = 5,
-    nprobe_top: int = 2,
-    nprobe_sub: int = 2,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serve from the quantized tree store: rank top cells then only
-    the probed cells' child codebooks (driver-side), push the
-    OR-of-AND (cell_top, cell_sub) filter into the int8 scan
-    (two-level partition pruning × ~4× fewer bytes — the levers
-    multiply), coarse top-``rescore·k``, exact rescore from the float
-    relation. ``predicate`` applies inside the pruned scan."""
-    qv = [float(x) for x in query_vector]
-    coarse, _ = _probe_scan(
-        spark.read.parquet(quantized_path),
-        _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
-        qv, predicate,
-    )
-    return _coarse_rescore(
-        coarse, coarse_distance("qvec", "qscale", qv, metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
+class Int8Codec(_Codec):
+    """The int8 codec: the coarse score of the ``qvec`` codes and their
+    ``qscale`` scale (:func:`coarse_distance_col`) — the int8 store of
+    :func:`quantize_int8` / :func:`write_ivf_quantized` /
+    :func:`write_tree_quantized`, or, with ``dims``, the ``qprefix``
+    codes of :func:`write_mrl_quantized_store` (the int8-quantized
+    Matryoshka prefix), scored against the query's ``dims``-prefix."""
+
+    def __init__(self, dims: int | None = None):
+        self.dims = dims
+
+    def score(self, metric: str, q: Column, *_) -> Column:
+        if self.dims is None:
+            return coarse_distance_col("qvec", "qscale", q, metric)
+        return coarse_distance_col(
+            "qprefix", "qscale", F.slice(q, 1, int(self.dims)), metric
+        )
 
 
 # --------------------------------------------------------------------------
@@ -406,27 +292,8 @@ def pack_query_bits(query_vector: Sequence[float]) -> list[int]:
 
 def hamming_distance(b_col: Column | str, query_words: Sequence[int]) -> Column:
     """popcount(xor) summed over words — the 1-bit coarse metric."""
-    return hamming_distance_col(b_col, F.lit([int(w) for w in query_words]))
-
-
-def binary_search(
-    binarized: DataFrame,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    k: int = 5,
-    rescore: int = 16,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    b_col: str = "bvec",
-) -> DataFrame:
-    """Hamming coarse pass over packed sign bits (~32× fewer scan
-    bytes), exact rescore of the top ``rescore·k``. The 1-bit code is
-    far lossier than int8, so the default rescore factor is wider."""
-    qv = [float(x) for x in query_vector]
-    return _coarse_rescore(
-        binarized, hamming_distance(b_col, pack_query_bits(qv)),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
+    return hamming_distance_col(
+        b_col, vector_literal([int(w) for w in query_words], integers=True)
     )
 
 
@@ -438,43 +305,19 @@ def hamming_distance_col(b_col: Column | str, qwords_col: Column) -> Column:
     return F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
 
 
-def binary_batch_search(
-    binarized: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    rescore: int = 16,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    b_col: str = "bvec",
-    predicate=None,
-) -> DataFrame:
-    """Batched 1-bit Hamming search — the last precision of the ladder
-    composed with the batch axis: queries are sign-packed driver-side
-    (:func:`pack_query_bits`) and broadcast as a words column, so ONE
-    popcount(xor) scan of the packed store (~32× fewer bytes than
-    float) scores the whole batch; per-query Partial-WindowGroupLimit
-    coarse cut at the wide 1-bit rescore factor; shared exact batch
-    rescore. Per query row-identical to the single-query
-    :func:`binary_search` loop (equality-tested)."""
-    from pyspark.sql.types import ArrayType, LongType, StructField
+class BinaryCodec(_Codec):
+    """The 1-bit codec: Hamming distance of the packed sign bits
+    ``bvec`` (:func:`quantize_binary`) to the query's bits, packed on
+    the driver (:func:`pack_query_bits`). The code is far lossier than
+    int8, so callers pass a wider ``rescore`` (16)."""
 
-    rows = [
-        (qid, qv, pack_query_bits(qv))
-        for qid, qv in _collect_query_vectors(queries, query_id_col, query_vec_col)
-    ]
-    qb = _membership_df(
-        queries, query_id_col, rows, [], [StructField("_qw", ArrayType(LongType()))]
-    )
-    return _batch_coarse_rescore(
-        _apply_pred(binarized, predicate).crossJoin(F.broadcast(qb)),
-        hamming_distance_col(b_col, F.col("_qw")),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
+    fields = (StructField("_qw", ArrayType(LongType())),)
+
+    def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
+        return [(pack_query_bits(qv),)] * len(cells)
+
+    def score(self, metric: str, q: Column, qwords: Column) -> Column:
+        return hamming_distance_col("bvec", qwords)
 
 
 # --------------------------------------------------------------------------
@@ -515,20 +358,20 @@ def quantized_recall(
     ]
     rescored = [
         r[0]
-        for r in quantized_search(
-            quantized, embeddings, qv, k=k, rescore=rescore, metric=metric,
-            id_col=id_col, vector_col=vector_col,
-        ).collect()
+        for r in VectorStore(
+            quantized, codec=Int8Codec(), embeddings=embeddings, id_col=id_col,
+            vector_col=vector_col,
+        ).search(qv, k=k, rescore=rescore, metric=metric).collect()
     ]
     dim = len(qv)
     bin_rescore = 4 * int(rescore)
     binarized = quantize_binary(embeddings, dim, id_col=id_col, vector_col=vector_col)
     bin_rescored = [
         r[0]
-        for r in binary_search(
-            binarized, embeddings, qv, k=k, rescore=bin_rescore, metric=metric,
-            id_col=id_col, vector_col=vector_col,
-        ).collect()
+        for r in VectorStore(
+            binarized, codec=BinaryCodec(), embeddings=embeddings, id_col=id_col,
+            vector_col=vector_col,
+        ).search(qv, k=k, rescore=bin_rescore, metric=metric).collect()
     ]
     return spark.createDataFrame(
         [
@@ -552,7 +395,7 @@ def quantized_recall(
 # this trades the NUMBER of elements). Matryoshka-style embeddings
 # (Kusupati et al. 2022) are trained so information concentrates in the
 # leading dimensions, making the d'-prefix a usable coarse scorer; the
-# same coarse→exact-rescore discipline as quantized_search keeps the
+# same coarse→exact-rescore discipline as the int8 codec keeps the
 # final top-k exact regardless of how lossy the prefix is.
 # --------------------------------------------------------------------------
 
@@ -572,43 +415,24 @@ def mrl_coarse_distance(
     """Distance between the ``dims``-prefixes of the stored vector and
     the query — a pure slice + the shared distance expressions, JVM-side."""
     qv = [float(x) for x in query_vector][: int(dims)]
-    return distance(mrl_prefix(vector_col, dims), F.lit(qv), metric)
+    return distance(mrl_prefix(vector_col, dims), vector_literal(qv), metric)
 
 
-def mrl_search(
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    prefix_col: str | None = None,
-    predicate=None,
-) -> DataFrame:
-    """Coarse-scan on the ``dims``-prefix for the top ``rescore·k``
-    candidates (TakeOrderedAndProject — no shuffle of scored rows),
-    broadcast those ids into the float relation, exact-rescore
-    full-dimension, return the exact top-k of the candidates.
+class MrlCodec(_Codec):
+    """The Matryoshka prefix codec: distance between the stored
+    ``dims``-prefix (the ``prefix`` column of :func:`write_mrl_store`,
+    or any ``source`` column or Column — e.g. ``mrl_prefix(vector_col,
+    dims)`` to slice a float relation inline, the testing path with no
+    byte saving) and the query's ``dims``-prefix. At 100 TB the coarse
+    scan reads d'/d of the float bytes and full-width vectors are
+    fetched for the c·k rescore candidates only."""
 
-    With ``prefix_col`` set, the coarse pass reads a pre-truncated
-    prefix column (see :func:`write_mrl_store`) — at 100 TB that is the
-    point: the full corpus is scanned at d'/d of the float bytes
-    (d'=16 of 64 → 4×, multiplying with int8 on the prefix if both are
-    applied), and full-width vectors are fetched for c·k rows only.
-    Without it the prefix is sliced inline from the full column —
-    same semantics, no byte saving (the in-memory/testing path)."""
-    qv = [float(x) for x in query_vector]
-    score = (
-        distance(F.col(prefix_col), F.lit(qv[: int(dims)]), metric)
-        if prefix_col is not None
-        else mrl_coarse_distance(vector_col, qv, dims, metric)
-    )
-    return _coarse_rescore(
-        _apply_pred(embeddings, predicate), score,
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
+    def __init__(self, dims: int, source: Column | str = "prefix"):
+        self.dims = int(dims)
+        self.source = F.col(source) if isinstance(source, str) else source
+
+    def score(self, metric: str, q: Column, *_) -> Column:
+        return distance(self.source, F.slice(q, 1, self.dims), metric)
 
 
 def write_mrl_store(
@@ -626,31 +450,6 @@ def write_mrl_store(
     _cell_rows(
         embeddings, id_col, _prefix_cols(vector_col, dims), keep_cols=keep_cols
     ).write.mode("overwrite").parquet(path)
-
-
-def mrl_search_parquet(
-    spark: SparkSession,
-    prefix_path: str,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serving path: coarse pass over the persisted prefix store (the
-    only full scan), exact rescore against the float relation."""
-    qv = [float(x) for x in query_vector]
-    # the prefix store IS the coarse relation; the embeddings arg
-    # supplies full-width vectors for rescore only
-    return _coarse_rescore(
-        _apply_pred(spark.read.parquet(prefix_path), predicate),
-        distance(F.col("prefix"), F.lit(qv[: int(dims)]), metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
 
 
 def mrl_recall(
@@ -688,10 +487,10 @@ def mrl_recall(
         ]
         rescored = [
             r[0]
-            for r in mrl_search(
-                embeddings, qv, dims=dims, k=k, rescore=rescore, metric=metric,
+            for r in VectorStore(
+                embeddings, codec=MrlCodec(dims, mrl_prefix(vector_col, dims)),
                 id_col=id_col, vector_col=vector_col,
-            ).collect()
+            ).search(qv, k=k, rescore=rescore, metric=metric).collect()
         ]
         rows.append(
             (
@@ -730,36 +529,9 @@ def write_mrl_quantized_store(
     ).write.mode("overwrite").parquet(path)
 
 
-def mrl_quantized_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    embeddings: DataFrame,
-    query_vector: Sequence[float],
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serving path over the int8-quantized prefix store: the ONLY full
-    scan reads ~16× fewer bytes than float full-width (4× dims × 4×
-    precision at the 16-of-64 default); candidates broadcast into the
-    float relation for the exact top-k. Same coarse→rescore guarantee
-    as quantized_search: the final top-k is exact over the candidate
-    pool whatever the coarse loss."""
-    qv = [float(x) for x in query_vector]
-    return _coarse_rescore(
-        _apply_pred(spark.read.parquet(store_path), predicate),
-        coarse_distance("qprefix", "qscale", qv[: int(dims)], metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
 # --------------------------------------------------------------------------
 # Batched quantized probes — the r5 composition of the batched-ANN
-# discipline (one scan for a whole query batch, ann.ivf_batch_search)
+# discipline (one scan for a whole query batch, VectorStore.batch_search)
 # with the quantized coarse stores: the single coarse scan reads the
 # pruned, int8 bytes ONCE for every query, and only the per-query
 # rescore touches float vectors (Q × rescore·k rows).
@@ -777,273 +549,3 @@ def coarse_distance_col(
     if metric == "cosine":
         return distance(to_double_array(q_col), qv_col, metric)
     return distance(dequantize_expr(q_col, scale_col), qv_col, metric)
-
-
-def quantized_batch_search(
-    quantized: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    q_col: str = "qvec",
-    scale_col: str = "qscale",
-    predicate=None,
-) -> DataFrame:
-    """Batched flat-quantized search: ONE int8 coarse scan scores every
-    query (broadcast crossJoin of the batch), per-query coarse
-    top-``rescore·k`` via Partial WindowGroupLimit, then the batch
-    rescore. Per query row-identical to :func:`quantized_search` at
-    equal parameters (equality-tested)."""
-    return _batch_coarse_rescore(
-        _apply_pred(quantized, predicate).crossJoin(
-            F.broadcast(queries.select(query_id_col, query_vec_col))
-        ),
-        coarse_distance_col(q_col, scale_col, F.col(query_vec_col), metric),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-class QuantizedIvfStore:
-    """Serving-store adapter: makes the PERSISTED int8 IVF layout
-    (:func:`write_ivf_quantized` + the float relation for rescore)
-    pluggable wherever an in-memory ``ann.IvfIndex`` is accepted —
-    notably ``retrieval.hybrid_rrf_batch_topk(index=...)``, so the
-    hybrid retrieval stack can serve its vector side from the 100 TB
-    store layout (partition pruning × int8 bytes × one scan per batch)
-    instead of an in-memory assignment. Probe width and rescore are
-    fixed at construction (the serving configuration); ``search`` /
-    ``batch_search`` mirror the IvfIndex method shapes."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        centroids: list[list[float]],
-        embeddings: DataFrame,
-        nprobe: int = 4,
-        rescore: int = 4,
-        id_col: str = "vec_id",
-        vector_col: str = "embedding",
-        predicate=None,
-    ):
-        self.spark = spark
-        self.path = path
-        self.centroids = centroids
-        self.embeddings = embeddings
-        self.nprobe = int(nprobe)
-        self.rescore = int(rescore)
-        self.id_col = id_col
-        self.vector_col = vector_col
-        self.predicate = predicate
-
-    def search(
-        self, query_vector: Sequence[float], k: int = 5, metric: str = "cosine",
-        **kwargs,
-    ) -> DataFrame:
-        return ivf_quantized_search_parquet(
-            self.spark, self.path, self.embeddings, self.centroids,
-            query_vector, k=k, nprobe=self.nprobe, rescore=self.rescore,
-            metric=metric, id_col=self.id_col, vector_col=self.vector_col,
-            predicate=self.predicate,
-        )
-
-    def batch_search(
-        self,
-        queries: DataFrame,
-        k: int = 5,
-        metric: str = "cosine",
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        **kwargs,
-    ) -> DataFrame:
-        return ivf_quantized_batch_search_parquet(
-            self.spark, self.path, self.embeddings, self.centroids, queries,
-            k=k, nprobe=self.nprobe, rescore=self.rescore, metric=metric,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-            id_col=self.id_col, vector_col=self.vector_col,
-            predicate=self.predicate,
-        )
-
-
-def tree_quantized_batch_search_parquet(
-    spark: SparkSession,
-    quantized_path: str,
-    embeddings: DataFrame,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    queries: DataFrame,
-    k: int = 5,
-    nprobe_top: int = 2,
-    nprobe_sub: int = 2,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched probe of the int8 TREE store
-    (:func:`write_tree_quantized`): the whole batch's OR-of-AND union
-    clause prunes BOTH directory levels of ONE int8 scan; the broadcast
-    (query_id, cell_top, cell_sub, query_vec) membership join fans each
-    leaf row out only to the queries that probed its leaf; per-query
-    Partial-WindowGroupLimit coarse cut; shared exact rescore. Per
-    query row-identical to the single-query
-    :func:`tree_quantized_search_parquet` loop at equal
-    nprobes/rescore."""
-    return _batch_coarse_rescore(
-        _batch_probe_scan(
-            spark.read.parquet(quantized_path),
-            _TreeRouter(centroids_top, centroids_sub, metric, nprobe_top, nprobe_sub),
-            queries, query_id_col, query_vec_col, predicate,
-        ),
-        coarse_distance_col("qvec", "qscale", F.col("_qv"), metric),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def mrl_batch_search(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched Matryoshka prefix search — the DIMENSION lever composed
-    with the batched-probe discipline: ONE coarse scan over the
-    ``dims``-prefixes scores every query in the batch (broadcast
-    crossJoin, both sides sliced inside whole-stage codegen), per-query
-    coarse top-``rescore·k`` via Partial WindowGroupLimit, then the
-    shared batch exact rescore (float reads = Q × rescore·k rows).
-    Per query row-identical to the single-query :func:`mrl_search` loop
-    at equal (dims, rescore) — equality-tested; dims = d with a full
-    pool degenerates to exact ``batch_knn``."""
-    return _batch_coarse_rescore(
-        _apply_pred(embeddings, predicate).crossJoin(
-            F.broadcast(queries.select(query_id_col, query_vec_col))
-        ),
-        distance(
-            mrl_prefix(vector_col, dims),
-            F.slice(F.col(query_vec_col), 1, int(dims)),
-            metric,
-        ),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def mrl_batch_search_parquet(
-    spark: SparkSession,
-    prefix_path: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched serving path over the persisted prefix store
-    (:func:`write_mrl_store`): the whole batch's only full scan reads
-    d'/d of the float bytes ONCE; full-width vectors are fetched for
-    Q × rescore·k broadcast candidates only. Per query row-identical to
-    the single-query :func:`mrl_search_parquet` loop."""
-    return _batch_coarse_rescore(
-        _apply_pred(spark.read.parquet(prefix_path), predicate).crossJoin(
-            F.broadcast(queries.select(query_id_col, query_vec_col))
-        ),
-        distance(
-            F.col("prefix"), F.slice(F.col(query_vec_col), 1, int(dims)), metric
-        ),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def mrl_quantized_batch_search_parquet(
-    spark: SparkSession,
-    store_path: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Both byte levers × the batch axis: one coarse scan over the
-    int8-quantized ``dims``-prefix store
-    (:func:`write_mrl_quantized_store` — d'/d × 1/4 of the float bytes)
-    scores the whole batch; per-query Partial-WindowGroupLimit cut;
-    shared exact rescore. Per query row-identical to the single-query
-    :func:`mrl_quantized_search_parquet` loop."""
-    return _batch_coarse_rescore(
-        _apply_pred(spark.read.parquet(store_path), predicate).crossJoin(
-            F.broadcast(queries.select(query_id_col, query_vec_col))
-        ),
-        coarse_distance_col(
-            "qprefix", "qscale", F.slice(F.col(query_vec_col), 1, int(dims)),
-            metric,
-        ),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def ivf_quantized_batch_search_parquet(
-    spark: SparkSession,
-    quantized_path: str,
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 3,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """The full 100 TB batched serving composition: union-of-cells
-    partition pruning (the whole batch reads at most |union|/k_clusters
-    of the quantized directory tree ONCE) × int8 bytes × broadcast
-    (query_id, cell, query_vec) membership fan-out × per-query Partial
-    WindowGroupLimit coarse cut × batch exact rescore. Per query
-    row-identical to the single-query
-    :func:`ivf_quantized_search_parquet` loop at equal nprobe/rescore
-    (equality-tested)."""
-    return _batch_coarse_rescore(
-        _batch_probe_scan(
-            spark.read.parquet(quantized_path), _IvfRouter(centroids, metric, nprobe),
-            queries, query_id_col, query_vec_col, predicate,
-        ),
-        coarse_distance_col("qvec", "qscale", F.col("_qv"), metric),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-

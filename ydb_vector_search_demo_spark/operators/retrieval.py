@@ -362,7 +362,7 @@ def hybrid_rrf_topk(
 # per query. The corpus-side work (token explode, tf, df, stats, BM25
 # term contributions) is QUERY-INDEPENDENT and computed once; queries
 # attach via a broadcast (query_id, term) membership join, exactly the
-# shape ann.ivf_batch_search uses for cells. The query batch is small
+# shape ann.VectorStore.batch_search uses for cells. The query batch is small
 # by construction (same contract as ann._collect_query_vectors); a
 # batch too large to broadcast is a similarity join, not retrieval.
 
@@ -552,14 +552,14 @@ def hybrid_rrf_batch_topk(
     vector top-``pool`` fused by RRF, per query, in ONE pass per system
     — the composition of :func:`hybrid_rrf_topk` (reference search,
     /root/reference/app.py:117-138, + lexical recall) with the batch
-    discipline of ann.ivf_batch_search / knn.batch_knn.
+    discipline of ann.VectorStore.batch_search / knn.batch_knn.
 
     Vector side: exact ``batch_knn`` by default; pass ``index`` (an
-    ann.IvfIndex or ann.KMeansTreeIndex) to route the batch through one
-    pruned ANN scan instead (``nprobe`` forwarded) — same fused shape,
-    sub-linear scan. Per query the result is row-identical to the
-    single-query :func:`hybrid_rrf_topk` at equal pool/k (equality-
-    tested); ID-SPACE CONTRACT as documented there.
+    ann.IvfIndex, ann.KMeansTreeIndex or ann.VectorStore) to route the
+    batch through one pruned ANN scan instead (``nprobe`` forwarded) —
+    same fused shape, sub-linear scan. Per query the result is
+    row-identical to the single-query :func:`hybrid_rrf_topk` at equal
+    pool/k (equality-tested); ID-SPACE CONTRACT as documented there.
 
     Output: (query_id, doc_id, rrf, lex_rank, vec_rank, rank) — rank is
     the per-query fused position, 1-based."""
@@ -589,12 +589,10 @@ def hybrid_rrf_batch_topk(
     qvecs = queries.select(query_id_col, query_vec_col)
     if index is not None:
         # the index carries its own id/vector column names; only route
-        # the batch and probe width through
+        # the batch and probe width through (a tree router ignores nprobe)
         vec = index.batch_search(
             qvecs, k=pool, metric=metric, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, **(
-                {"nprobe": nprobe} if type(index).__name__ == "IvfIndex" else {}
-            ),
+            query_vec_col=query_vec_col, nprobe=nprobe,
         )
         vec_id_col = getattr(index, "id_col", vec_id_col)
     else:

@@ -35,16 +35,16 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField
 
 from ydb_vector_search_demo_spark.functions.vector import distance, dot
 from ydb_vector_search_demo_spark.operators.ann import (
-    _apply_pred,
-    _batch_coarse_rescore,
+    VectorStore,
+    _Codec,
     _cell_rows,
-    _coarse_rescore,
     recall_at_k,
 )
-from ydb_vector_search_demo_spark.operators.knn import knn_scores
+from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
 from ydb_vector_search_demo_spark.operators.quant import _prefix_cols
 from ydb_vector_search_demo_spark.session import _evict, _get_or_write
 
@@ -190,43 +190,43 @@ def rotate_expr(
     Only the evaluated rows of the matrix enter the plan: the coarse
     stage at d'=16 of 64 costs a 16×64 multiply-add, not 64×64."""
     rows = rotation if dims is None else rotation[: int(dims)]
-    mat = F.array(*[F.lit([float(v) for v in r]) for r in rows])
+    mat = vector_literal([[float(v) for v in r] for r in rows])
     vec = F.col(vector_col) if isinstance(vector_col, str) else vector_col
     return F.transform(mat, lambda row: dot(row, vec))
 
 
-def pca_prefix_search(
-    embeddings: DataFrame,
-    rotation: Rotation,
-    query_vector: Sequence[float],
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Coarse top ``rescore·k`` by distance between the d'-prefixes of
-    the ROTATED stored vectors and the rotated query
-    (TakeOrderedAndProject over pure Column arithmetic), broadcast the
-    candidate ids, exact full-width rescore from the ORIGINAL float
-    column. Same contract as ``quant.mrl_search`` with the basis
-    learned instead of assumed."""
-    qv = [float(x) for x in query_vector]
-    rq = rotate_vector(qv, rotation)[: int(dims)]
-    # the rotated prefix is materialized in its OWN projection:
-    # distance() references its vector argument several times (dot +
-    # norm), and CollapseProject would otherwise inline the d'×d
-    # rotation once per reference (pq._with_rotated rationale; measured
-    # ~2.5× on the benched sf0.1 row)
-    return _coarse_rescore(
-        _apply_pred(embeddings, predicate).withColumn(
-            "_rp", rotate_expr(vector_col, rotation, dims)
-        ),
-        distance(F.col("_rp"), F.lit(rq), metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
+class PcaCodec(_Codec):
+    """The learned-rotation prefix codec: distance between the d'-prefix
+    of the ROTATED stored vector and the rotated query prefix, rotated
+    on the driver (:func:`rotate_vector`, the fold order of
+    :func:`rotate_expr`, so a batch scores bit-identically to the
+    single-query loop) — ``quant.MrlCodec`` with the basis learned
+    instead of assumed. The coarse relation holds the ``prefix`` column
+    of :func:`write_rotated_store`; with ``inline_col`` the prefix is
+    instead rotated from that float column in its OWN projection
+    (``_rp``): ``distance`` references its vector argument several
+    times (dot + norm), and CollapseProject would otherwise inline the
+    d'×d rotation once per reference (pq._with_rotated rationale;
+    measured ~2.5× on the benched sf0.1 row)."""
+
+    fields = (StructField("_rq", ArrayType(DoubleType())),)
+
+    def __init__(self, rotation: Rotation, dims: int, inline_col: str | None = None):
+        self.rotation, self.dims, self.inline_col = rotation, int(dims), inline_col
+
+    def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
+        return [(rotate_vector(qv, self.rotation[: self.dims]),)] * len(cells)
+
+    def view(self, df: DataFrame) -> DataFrame:
+        if self.inline_col is None:
+            return df
+        return df.withColumn(
+            "_rp", rotate_expr(self.inline_col, self.rotation, self.dims)
+        )
+
+    def score(self, metric: str, q: Column, rq: Column) -> Column:
+        prefix = "prefix" if self.inline_col is None else "_rp"
+        return distance(F.col(prefix), rq, metric)
 
 
 def write_rotated_store(
@@ -264,10 +264,10 @@ def get_or_write_rotated_store(
     ann.get_or_build_ivf_index / retrieval.get_or_build_bm25_index
     contract): the rotate-and-persist pass is paid once per
     (corpus, basis, dims) key under a deterministic /tmp path; probes
-    (:func:`pca_search_parquet` / :func:`pca_batch_search_parquet`)
-    reuse it. This is the SERVING split for the rotation lever — the
-    build is the periodic batch job, the store probe is the steady
-    state that reads d'/d of the float bytes."""
+    (a ``VectorStore`` with :class:`PcaCodec`) reuse it. This is the
+    SERVING split for the rotation lever — the build is the periodic
+    batch job, the store probe is the steady state that reads d'/d of
+    the float bytes."""
     return _get_or_write(
         _STORE_CACHE, "ydbvs_rotated", (cache_key, int(dims), id_col, vector_col),
         lambda path: write_rotated_store(
@@ -279,124 +279,6 @@ def get_or_write_rotated_store(
 
 def clear_rotated_store_cache() -> None:
     _evict(_STORE_CACHE)
-
-
-def pca_search_parquet(
-    spark: SparkSession,
-    prefix_path: str,
-    embeddings: DataFrame,
-    rotation: Rotation,
-    query_vector: Sequence[float],
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Serving path over the persisted rotated-prefix store: the coarse
-    pass scans only the prefix parquet (the rotated query is the
-    driver-side literal), the float relation is touched for the
-    broadcast candidates only — ``quant.mrl_search_parquet`` with a
-    rotated query for the coarse stage and the raw query for rescore."""
-    qv = [float(x) for x in query_vector]
-    rq = rotate_vector(qv, rotation)[: int(dims)]
-    return _coarse_rescore(
-        _apply_pred(spark.read.parquet(prefix_path), predicate),
-        distance(F.col("prefix"), F.lit(rq), metric),
-        embeddings, qv, k, rescore, metric, id_col, vector_col,
-    )
-
-
-def _rotated_query_prefix(
-    queries: DataFrame,
-    rotation: Rotation,
-    dims: int,
-    query_id_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """(query_id, rotated d'-prefix) for the broadcast side of a batched
-    coarse scan. The rotation runs in-plan over the bounded query batch
-    (Q rows, d'·d multiply-adds each); because ``rotate_expr`` folds in
-    the same order as the driver-side ``rotate_vector``, the batch
-    coarse scores are bit-identical to the single-query loop's."""
-    return queries.select(
-        F.col(query_id_col),
-        rotate_expr(query_vec_col, rotation, dims).alias("_rq"),
-    )
-
-
-def pca_batch_search(
-    embeddings: DataFrame,
-    rotation: Rotation,
-    queries: DataFrame,
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched learned-rotation prefix search — the PCA basis lever
-    composed with the batched-probe discipline (the rotation analogue
-    of ``quant.mrl_batch_search``): each corpus row is rotated ONCE
-    into its d'-prefix, the bounded query batch is rotated in-plan and
-    broadcast, one coarse scan scores every query, per-query coarse
-    top-``rescore·k`` via Partial WindowGroupLimit, then the shared
-    exact full-width rescore from the ORIGINAL float column (float
-    reads = Q × rescore·k rows). Per query row-identical to the
-    single-query :func:`pca_prefix_search` loop at equal
-    (rotation, dims, rescore); dims = d with a corpus-covering pool
-    degenerates to exact ``batch_knn``."""
-    rq = _rotated_query_prefix(queries, rotation, dims, query_id_col, query_vec_col)
-    coarse = (
-        _apply_pred(embeddings, predicate)
-        .select(F.col(id_col), rotate_expr(vector_col, rotation, dims).alias("_rp"))
-        .crossJoin(F.broadcast(rq))
-    )
-    return _batch_coarse_rescore(
-        coarse, distance(F.col("_rp"), F.col("_rq"), metric),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
-
-
-def pca_batch_search_parquet(
-    spark: SparkSession,
-    prefix_path: str,
-    embeddings: DataFrame,
-    rotation: Rotation,
-    queries: DataFrame,
-    dims: int = 16,
-    k: int = 5,
-    rescore: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched serving path over the persisted rotated-prefix store
-    (:func:`write_rotated_store`): the whole batch's only full scan
-    reads the d'-wide rotated parquet ONCE (d'/d of the float bytes);
-    full-width vectors are fetched for the Q × rescore·k broadcast
-    candidates only. Per query row-identical to the single-query
-    :func:`pca_search_parquet` loop — ``quant.mrl_batch_search_parquet``
-    with the learned basis supplying the prefix."""
-    rq = _rotated_query_prefix(queries, rotation, dims, query_id_col, query_vec_col)
-    coarse = _apply_pred(spark.read.parquet(prefix_path), predicate).crossJoin(
-        F.broadcast(rq)
-    )
-    return _batch_coarse_rescore(
-        coarse, distance(F.col("prefix"), F.col("_rq"), metric),
-        embeddings, queries, k, rescore, metric, query_id_col, query_vec_col,
-        id_col, vector_col,
-    )
 
 
 # ---------------------------------------------------------------------
@@ -553,8 +435,9 @@ def pca_recall_report(
     embeddings gain little, low-rank real embeddings gain a lot — both
     are the report's job to reveal)."""
     from ydb_vector_search_demo_spark.operators.quant import (
+        MrlCodec,
         mrl_coarse_distance,
-        mrl_search,
+        mrl_prefix,
     )
 
     qv = [float(x) for x in query_vector]
@@ -584,23 +467,23 @@ def pca_recall_report(
         pca_coarse = coarse_ids(
             distance(
                 rotate_expr(vector_col, rotation, dims),
-                F.lit(rq_full[: int(dims)]),
+                vector_literal(rq_full[: int(dims)]),
                 metric,
             )
         )
         plain_rescored = [
             r[0]
-            for r in mrl_search(
-                embeddings, qv, dims=dims, k=k, rescore=rescore, metric=metric,
+            for r in VectorStore(
+                embeddings, codec=MrlCodec(dims, mrl_prefix(vector_col, dims)),
                 id_col=id_col, vector_col=vector_col,
-            ).collect()
+            ).search(qv, k=k, rescore=rescore, metric=metric).collect()
         ]
         pca_rescored = [
             r[0]
-            for r in pca_prefix_search(
-                embeddings, rotation, qv, dims=dims, k=k, rescore=rescore,
-                metric=metric, id_col=id_col, vector_col=vector_col,
-            ).collect()
+            for r in VectorStore(
+                embeddings, codec=PcaCodec(rotation, dims, inline_col=vector_col),
+                id_col=id_col, vector_col=vector_col,
+            ).search(qv, k=k, rescore=rescore, metric=metric).collect()
         ]
         rows.append(
             (

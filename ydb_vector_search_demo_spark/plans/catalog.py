@@ -3590,11 +3590,9 @@ def q_ann_tree_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivf_fixed one directory level deeper."""
     embs = _t(spark, sf_dir, "embeddings")
     assigned = ann.tree_assign(_IVF_FIXED_CENTS, _TREE_FIXED_SUB, embs)
-    router = ann._TreeRouter(
-        _IVF_FIXED_CENTS, _TREE_FIXED_SUB, "euclidean", nprobe_top=2,
-        nprobe_sub=1,
-    )
-    clause = router.clause(router.ranker(QV)(router.levels[0]))
+    router = ann._TreeRouter(_IVF_FIXED_CENTS, _TREE_FIXED_SUB)
+    level = router.levels(nprobe_top=2, nprobe_sub=1)[0]
+    clause = router.clause(router.ranker(QV, "euclidean")(level))
     w = Window.orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
     return (
         assigned.filter(clause)
@@ -3713,7 +3711,7 @@ def _ivf_batch_fixed_branch_sql(qid: int, qv: list[float]) -> str:
     probed = ", ".join(
         str(int(t))
         # the batched probe ranks centroids under the SEARCH metric
-        # (cosine here) — ann.ivf_batch_search's rule, mirrored exactly
+        # (cosine here) — ann.VectorStore.batch_search's rule, mirrored exactly
         for t in ann.rank_centroids(_IVF_FIXED_CENTS, qv, metric="cosine")[:2]
     )
     return f"""
@@ -3740,7 +3738,7 @@ def _ivf_batch_fixed_branch_sql(qid: int, qv: list[float]) -> str:
     + "\nORDER BY query_id, rank",
 )
 def q_ann_ivf_batch_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BATCHED IVF probe machinery (ann.ivf_batch_search — the
+    """The BATCHED IVF probe machinery (ann.VectorStore.batch_search — the
     100 TB batch-serving shape: union-of-cells pruning, broadcast
     (query_id, cell, query_vec) membership fan-out, per-query Partial
     WindowGroupLimit cut) against a full DuckDB oracle, with the
@@ -3754,10 +3752,9 @@ def q_ann_ivf_batch_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, v) for i, v in enumerate(BATCH_QVS)],
         "query_id long, query_vec array<double>",
     )
-    out = ann.ivf_batch_search(
-        ann.ivf_assign(_IVF_FIXED_CENTS, embs), _IVF_FIXED_CENTS, queries,
-        k=5, nprobe=2, metric="cosine",
-    )
+    out = ann.VectorStore(
+        ann.ivf_assign(_IVF_FIXED_CENTS, embs), ann._IvfRouter(_IVF_FIXED_CENTS)
+    ).batch_search(queries, k=5, nprobe=2, metric="cosine")
     return out.select(
         "query_id", "vec_id",
         F.round("score", 6).alias("score"),
@@ -3902,7 +3899,7 @@ def q_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The residual IVF-PQ SERVING path end to end against a full
     DuckDB oracle: pinned centroids partition the store
     (write_ivfpq_store — actually written and probed through
-    ivfpq_search_parquet, the real parquet serving function),
+    a VectorStore with pq.PqCodec, the real parquet serving path),
     residual codes from pinned codebooks, nprobe=2 partition pruning,
     per-cell LUT ADC over 4 bytes + norm per vector, coarse
     top-(rescore·k), exact euclidean rescore — every stage of the
@@ -3922,10 +3919,10 @@ def q_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     path = f"/tmp/spark_graft_ivfpq_fixed_{tag}"
     pq.write_ivfpq_store(index, _IVFPQ_FIXED_BOOKS, path)
-    out = pq.ivfpq_search_parquet(
-        spark, path, _IVF_FIXED_CENTS, _IVFPQ_FIXED_BOOKS, embs, QV,
-        k=5, nprobe=2, rescore=4, metric="euclidean",
-    )
+    out = ann.VectorStore(
+        spark.read.parquet(path), ann._IvfRouter(_IVF_FIXED_CENTS),
+        pq.PqCodec(_IVFPQ_FIXED_BOOKS, _IVF_FIXED_CENTS), embs,
+    ).search(QV, k=5, nprobe=2, rescore=4, metric="euclidean")
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
@@ -4226,7 +4223,7 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_batch_recall")
 def q_ann_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched ANN probe (operators.ann.ivf_batch_search): the whole
+    """Batched ANN probe (operators.ann.VectorStore.batch_search): the whole
     query batch through ONE pruned scan — union of probed cells as a
     single partition-pruning IN filter, broadcast membership join, the
     same Partial-WindowGroupLimit per-query cut as batch_knn_cosine —
@@ -4384,7 +4381,7 @@ _MRL_POOL = 20  # rescore(4) × k(5)
     """,
 )
 def q_mrl_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka prefix-dimension search (operators.quant.mrl_search,
+    """Matryoshka prefix-dimension search (operators.quant.MrlCodec,
     Kusupati et al. 2022): coarse top-20 by cosine over the leading 16
     of 64 dims (a TakeOrderedAndProject over a slice — at scale the
     persisted prefix store reads 4× fewer float bytes), exact full-dim
@@ -4394,7 +4391,9 @@ def q_mrl_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ydb_vector_search_demo_spark.operators import quant
 
     embs = _t(spark, sf_dir, "embeddings")
-    out = quant.mrl_search(embs, QV, dims=_MRL_DIMS, k=5, rescore=4)
+    out = ann.VectorStore(
+        embs, codec=quant.MrlCodec(_MRL_DIMS, quant.mrl_prefix("embedding", _MRL_DIMS))
+    ).search(QV, k=5, rescore=4)
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
@@ -4997,7 +4996,7 @@ def q_events_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mrl_batch_branch_sql(qid: int, qv: list[float]) -> str:
     """One query's prefix-coarse → exact-rescore top-5 as a
     self-contained subquery — the oracle twin of one query_id slice of
-    operators.quant.mrl_batch_search."""
+    a batched operators.quant.MrlCodec store."""
     return f"""
     SELECT {qid}::BIGINT AS query_id, r.* FROM (
       WITH coarse AS (
@@ -5027,15 +5026,15 @@ def _mrl_batch_branch_sql(qid: int, qv: list[float]) -> str:
     + "\nORDER BY query_id, rank",
 )
 def q_mrl_batch_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched Matryoshka search (operators.quant.mrl_batch_search):
+    """Batched Matryoshka search (a batched operators.quant.MrlCodec store):
     the DIMENSION byte lever composed with the batched-probe discipline
     — ONE coarse scan over the 16-of-64-dim prefixes scores the whole
     query batch (both sides sliced inside whole-stage codegen),
     per-query coarse top-20 via Partial WindowGroupLimit, shared exact
     full-width rescore (float reads = Q × 20 broadcast candidate rows).
     Completes the batch matrix's dims axis alongside
-    quantized_batch_search / pq_batch_search. Fully oracle-checked;
-    per-query rows equal the single-query mrl_search loop
+    the int8 and PQ batch probes. Fully oracle-checked;
+    per-query rows equal the single-query MrlCodec loop
     (equality-tested in tests/test_mrl.py)."""
     from ydb_vector_search_demo_spark.operators import quant
 
@@ -5044,7 +5043,9 @@ def q_mrl_batch_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, v) for i, v in enumerate(BATCH_QVS)],
         "query_id long, query_vec array<double>",
     )
-    out = quant.mrl_batch_search(embs, queries, dims=_MRL_DIMS, k=5, rescore=4)
+    out = ann.VectorStore(
+        embs, codec=quant.MrlCodec(_MRL_DIMS, quant.mrl_prefix("embedding", _MRL_DIMS))
+    ).batch_search(queries, k=5, rescore=4)
     return out.select(
         "query_id", "vec_id",
         F.round("score", 6).alias("score"),
@@ -7144,7 +7145,7 @@ def q_rotation_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rotation_rescore_sql() -> str:
-    """DuckDB twin of rotation.pca_prefix_search under the pinned
+    """DuckDB twin of the rotation.PcaCodec search under the pinned
     Hadamard basis: every matrix entry is ±1/8 (exactly representable),
     so the rotated coordinates are bit-identical double sums in both
     engines, and the coarse cosine + exact rescore reuse the proven
@@ -7193,7 +7194,9 @@ def q_rotation_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = _t(spark, sf_dir, "embeddings")
     rot = _rot.hadamard_rotation(64)
-    out = _rot.pca_prefix_search(embs, rot, QV, dims=16, k=5, rescore=4)
+    out = ann.VectorStore(
+        embs, codec=_rot.PcaCodec(rot, 16, inline_col="embedding")
+    ).search(QV, k=5, rescore=4)
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
@@ -7216,9 +7219,9 @@ def q_rotation_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _rot.get_or_write_rotated_store(
         embs, rot, cache_key=sf_dir, dims=16
     )
-    out = _rot.pca_search_parquet(
-        spark, path, embs, rot, QV, dims=16, k=5, rescore=4
-    )
+    out = ann.VectorStore(
+        spark.read.parquet(path), codec=_rot.PcaCodec(rot, 16), embeddings=embs
+    ).search(QV, k=5, rescore=4)
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
@@ -7265,7 +7268,7 @@ def _rotation_batch_branch_sql(i: int, qv: list[float]) -> str:
     + "\nORDER BY query_id, rank",
 )
 def q_rotation_batch_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched rotated-prefix search (rotation.pca_batch_search — the
+    """Batched rotated-prefix search (batched rotation.PcaCodec store — the
     r6 completion of the batch matrix\'s learned-basis lever): each
     corpus row is rotated ONCE into its 16-of-64 Hadamard prefix, the
     3-query batch is rotated in-plan (bit-identical to the driver-side
@@ -7282,7 +7285,9 @@ def q_rotation_batch_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, v) for i, v in enumerate(BATCH_QVS)],
         "query_id long, query_vec array<double>",
     )
-    out = _rot.pca_batch_search(embs, rot, queries, dims=16, k=5, rescore=4)
+    out = ann.VectorStore(
+        embs, codec=_rot.PcaCodec(rot, 16, inline_col="embedding")
+    ).batch_search(queries, k=5, rescore=4)
     return out.select(
         "query_id", "vec_id",
         F.round("score", 6).alias("score"),

@@ -317,22 +317,6 @@ def streaming_hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> Da
     )
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, mode: str = "append"
-) -> "object":
-    """Drive a streaming plan into an in-memory sink until all available
-    input is processed (test/bench harness)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def multi_batch_events_dir(
     spark: SparkSession, sf_dir: str, n_batches: int = 3
 ) -> str:

@@ -55,10 +55,9 @@ def _with_companions(
     literals exactly like the codebooks) — the ingest stays refit-free;
     codebook/basis refresh is the batch rebalance job's concern,
     exactly like the centroids. With the prefix column the streamed-in
-    store serves MRL coarse searches (``quant.mrl_search_parquet`` /
-    ``mrl_batch_search_parquet``) or rotated-prefix searches
-    (``rotation.pca_search_parquet`` / ``pca_batch_search_parquet``)
-    directly — every precision of the ladder is maintained
+    store serves MRL coarse searches (``quant.MrlCodec``) or
+    rotated-prefix searches (``rotation.PcaCodec``) through
+    ``ann.VectorStore`` directly — every precision of the ladder is maintained
     incrementally. ``mrl_dims`` and ``rotation`` are mutually
     exclusive: both write the ``prefix`` column and a store can only
     serve one basis. The columns are the batch writers' codec column
@@ -76,7 +75,7 @@ def _with_companions(
         # codebooks(rotation=...)); the frozen basis rotates each
         # streamed vector before encoding, materialized ONCE in its
         # own projection (pq._with_rotated rationale). The probe side
-        # passes the same basis to pq_search/pq_batch_search.
+        # passes the same basis to pq.PqCodec.
         rotated, cols = _pq_cols(
             assigned, vector_col, vector_col, pq_codebooks, pq_rotation,
             tmp="_opq_rot",
@@ -144,7 +143,7 @@ def stream_ivf_ingest(
     store. Returns the started StreamingQuery (caller awaits). With
     ``pq_codebooks`` set, the best bytes/recall point of the r4
     quantization ladder is maintained incrementally — coarse searches
-    (``pq.ivf_pq_companion_search_parquet``) run directly on the
+    (``ann.VectorStore`` with ``pq.PqCodec``) run directly on the
     streamed-in store."""
     return _stream_cells(
         ivf_assign(centroids, stream), _IvfRouter, store_path, checkpoint_dir,
