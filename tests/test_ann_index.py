@@ -158,7 +158,7 @@ def test_tree_parquet_roundtrip_prunes_both_levels(spark, tmp_path):
     embs = load_table(spark, SF_SMOKE, "embeddings")
     tree = ann.build_kmeans_tree_index(embs, k_top=8, k_sub=4)
     path = str(tmp_path / "tree_store")
-    ann.write_tree_partitioned(tree, path)
+    ann.write_store(tree.assigned, path, tree.store.router)
 
     result = ann.VectorStore(
         spark.read.parquet(path),
@@ -209,12 +209,15 @@ def test_tree_assign_matches_build_and_append_serves(spark, tmp_path):
     assert expr == built
 
     path = str(tmp_path / "tree_store")
-    ann.write_tree_partitioned(tree, path)
+    ann.write_store(tree.assigned, path, tree.store.router)
     n0 = spark.read.parquet(path).count()
     new = embs.limit(5).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    ann.tree_append(tree.centroids_top, tree.centroids_sub, new, path)
+    ann.write_store(
+        new, path, ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+        mode="append",
+    )
     assert spark.read.parquet(path).count() == n0 + 5
 
     probe = embs.limit(1).collect()[0]
@@ -302,7 +305,9 @@ def test_filtered_tree_parquet_pushes_predicate(spark, tmp_path):
         embs, k_top=4, k_sub=2, keep_cols=("label",)
     )
     path = str(tmp_path / "tree_store_meta")
-    ann.write_tree_partitioned(tree, path)
+    ann.write_store(
+        tree.assigned, path, tree.store.router, keep_cols=("label",)
+    )
     result = ann.VectorStore(
         spark.read.parquet(path),
         ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
@@ -328,7 +333,7 @@ def test_tree_drift_detection_and_rebalance(spark, tmp_path):
     embs = load_table(spark, SF_SMOKE, "embeddings")
     tree = ann.build_kmeans_tree_index(embs, k_top=4, k_sub=2)
     path = str(tmp_path / "tree_drift")
-    ann.write_tree_partitioned(tree, path)
+    ann.write_store(tree.assigned, path, tree.store.router)
     balanced = ann.tree_drift_report(spark, path).collect()[0]
 
     # skewed append: clone ONE leaf's vectors 6x with fresh ids — they
@@ -346,7 +351,11 @@ def test_tree_drift_detection_and_rebalance(spark, tmp_path):
         clones = one_leaf.select(
             (F.col("vec_id") + 100000 * (i + 1)).alias("vec_id"), "embedding"
         )
-        ann.tree_append(tree.centroids_top, tree.centroids_sub, clones, path)
+        ann.write_store(
+            clones, path,
+            ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+            mode="append",
+        )
 
     drifted = ann.tree_drift_report(spark, path).collect()[0]
     assert drifted.skew_ratio > balanced.skew_ratio
@@ -414,14 +423,18 @@ def test_compact_partitioned_store_preserves_layout_and_rows(spark, tmp_path):
     embs = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
     tree = ann.build_kmeans_tree_index(embs, k_top=2, k_sub=2)
     path = str(tmp_path / "frag")
-    ann.write_tree_partitioned(tree, path)
+    ann.write_store(tree.assigned, path, tree.store.router)
     for i in range(5):  # fragment: 5 small appends
         from pyspark.sql import functions as F
 
         clones = embs.limit(20).select(
             (F.col("vec_id") + 1000 * (i + 1)).alias("vec_id"), "embedding"
         )
-        ann.tree_append(tree.centroids_top, tree.centroids_sub, clones, path)
+        ann.write_store(
+            clones, path,
+            ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+            mode="append",
+        )
 
     before = len(glob.glob(path + "/**/*.parquet", recursive=True))
     out = str(tmp_path / "compacted")
@@ -948,3 +961,27 @@ def test_power_iteration_gram_matches_reference(spark):
     # spectral law: the planted axis dominates the direction
     mags = {d: abs(u[0]) for d, u in got.items()}
     assert mags[3] == max(mags.values())  # dim is 1-based; axis 2 -> dim 3
+
+
+def test_ivf_append_carries_keep_cols_to_filtered_probes(spark, tmp_path):
+    """An append carries the store's metadata columns: a row appended
+    with a new label is returned by a probe filtered on that label. At
+    the old append the new row's label read NULL and the filtered probe
+    found nothing. Pinned centroids, so no KMeans runs."""
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    schema = "vec_id BIGINT, embedding ARRAY<FLOAT>, label STRING"
+    base = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0, 0.0], "a") for i in range(4)]
+        + [(10 + i, [0.1 * i, 1.0, 0.0, 0.0], "a") for i in range(4)],
+        schema,
+    )
+    path = str(tmp_path / "ivf_meta")
+    ann.write_store(base, path, ann._IvfRouter(cents), keep_cols=("label",))
+    new = spark.createDataFrame([(99, [0.9, 0.2, 0.0, 0.0], "b")], schema)
+    ann.ivf_append(cents, new, path, keep_cols=("label",))
+    got = ann.ivf_search_parquet(
+        spark, path, cents, [1.0, 0.0, 0.0, 0.0], k=5, nprobe=1,
+        predicate="label = 'b'",
+    ).collect()
+    assert [r["vec_id"] for r in got] == [99]
+    assert spark.read.parquet(path).filter("label IS NULL").count() == 0

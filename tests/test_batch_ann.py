@@ -137,7 +137,7 @@ def test_batch_probe_plan_shape(spark, ivf, qdf, tmp_path):
 
 def test_tree_batch_parquet_matches_in_memory(spark, tree, qdf, tmp_path):
     store = str(tmp_path / "tree_store")
-    ann.write_tree_partitioned(tree, store)
+    ann.write_store(tree.assigned, store, tree.store.router)
     mem = _rows(tree.batch_search(qdf, k=5, nprobe_top=2, nprobe_sub=1))
     pq = _rows(
         ann.VectorStore(
@@ -170,7 +170,7 @@ def test_quantized_batch_equals_single_query_loop(spark, embs, qdf, qvs):
     """Batched flat-quantized search == per-query int8 search."""
     from ydb_vector_search_demo_spark.operators import quant
 
-    quantized = quant.quantize_int8(embs)
+    quantized = ann.store_rows(embs, codecs=(quant.Int8Codec(),))
     store = ann.VectorStore(quantized, codec=quant.Int8Codec(), embeddings=embs)
     batch = store.batch_search(qdf, k=5, rescore=4).collect()
     got = {}
@@ -193,7 +193,7 @@ def test_ivf_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tmp
     from ydb_vector_search_demo_spark.operators import quant
 
     path = str(tmp_path / "ivfq")
-    quant.write_ivf_quantized(ivf, path)
+    ann.write_store(ivf.assigned, path, ivf.store.router, (quant.Int8Codec(),))
     store = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
         quant.Int8Codec(), embs,
@@ -216,7 +216,7 @@ def test_ivf_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tmp
 def test_quantized_batch_plan_shape(spark, embs, qdf):
     from ydb_vector_search_demo_spark.operators import quant
 
-    quantized = quant.quantize_int8(embs)
+    quantized = ann.store_rows(embs, codecs=(quant.Int8Codec(),))
     df = ann.VectorStore(
         quantized, codec=quant.Int8Codec(), embeddings=embs
     ).batch_search(qdf, k=5, rescore=4)
@@ -231,7 +231,7 @@ def test_pq_batch_equals_single_query_loop(spark, embs, qdf, qvs):
 
     dim = len(qvs[0])
     books = pq.train_pq_codebooks(embs, dim, m=8, k_star=16)
-    encoded = pq.pq_encode(embs, books)
+    encoded = ann.store_rows(embs, codecs=(pq.PqCodec(books),))
     store = ann.VectorStore(encoded, codec=pq.PqCodec(books), embeddings=embs)
     batch = store.batch_search(qdf, k=5, rescore=4).collect()
     got = {}
@@ -260,12 +260,15 @@ def test_ivfpq_companion_batch_parquet_equals_loop(
     dim = len(qvs[0])
     books = pq.train_pq_codebooks(embs, dim, m=8, k_star=16)
     path = str(tmp_path / "ivfpq_comp")
-    # the layout stream_ivf_ingest writes: cell + PQ companion columns
+    # the layout a PQ companion stream writes: cell + PQ companion columns
     _ann.ivf_assign(ivf.centroids, embs).select(
         "vec_id", "centroid_id",
         pq.encode_expr("embedding", books).alias("pq_codes"),
     ).join(
-        pq.pq_encode(embs, books).select("vec_id", "vnorm"), on="vec_id"
+        _ann.store_rows(embs, codecs=(pq.PqCodec(books),)).select(
+            "vec_id", "vnorm"
+        ),
+        on="vec_id",
     ).write.partitionBy("centroid_id").mode("overwrite").parquet(path)
 
     store = _ann.VectorStore(
@@ -293,7 +296,7 @@ def test_tree_quantized_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, t
     from ydb_vector_search_demo_spark.operators import quant
 
     path = str(tmp_path / "tree_q")
-    quant.write_tree_quantized(tree, path)
+    ann.write_store(tree.assigned, path, tree.store.router, (quant.Int8Codec(),))
     store = ann.VectorStore(
         spark.read.parquet(path),
         ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
@@ -325,7 +328,7 @@ def test_tree_pq_batch_parquet_equals_loop(spark, embs, qdf, qvs, tree, tmp_path
     dim = len(qvs[0])
     books = pq.train_pq_codebooks(embs, dim, m=8, k_star=16)
     path = str(tmp_path / "tree_pq")
-    pq.write_tree_pq(tree, books, path)
+    ann.write_store(tree.assigned, path, tree.store.router, (pq.PqCodec(books),))
     store = ann.VectorStore(
         spark.read.parquet(path),
         ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
@@ -358,7 +361,9 @@ def test_ivfpq_residual_batch_parquet_equals_loop(spark, embs, qdf, qvs, ivf, tm
     dim = len(qvs[0])
     books = pq.train_ivfpq_codebooks(ivf, dim, m=8, k_star=16)
     path = str(tmp_path / "ivfpq_res")
-    pq.write_ivfpq_store(ivf, books, path)
+    ann.write_store(
+        ivf.assigned, path, ivf.store.router, (pq.PqCodec(books, ivf.centroids),),
+    )
     store = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
         pq.PqCodec(books, ivf.centroids), embs,
@@ -383,7 +388,7 @@ def test_binary_batch_equals_single_query_loop(spark, embs, qdf, qvs):
     the last precision of the ladder on the batch axis."""
     from ydb_vector_search_demo_spark.operators import quant
 
-    binarized = quant.quantize_binary(embs, dim=len(qvs[0]))
+    binarized = ann.store_rows(embs, codecs=(quant.BinaryCodec(len(qvs[0])),))
     store = ann.VectorStore(binarized, codec=quant.BinaryCodec(), embeddings=embs)
     batch = store.batch_search(qdf, k=5, rescore=16).collect()
     got = {}

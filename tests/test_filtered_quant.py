@@ -39,7 +39,10 @@ def _pairs(rows):
 
 def test_filtered_ivf_quantized_parquet_exact_at_full_probe(spark, embs, ivf, tmp_path):
     path = str(tmp_path / "ivfq_f")
-    quant.write_ivf_quantized(ivf, path, keep_cols=("label",))
+    ann.write_store(
+        ivf.assigned, path, ivf.store.router, (quant.Int8Codec(),),
+        keep_cols=("label",),
+    )
     n = embs.count()
     got = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
@@ -54,7 +57,7 @@ def test_filtered_ivf_quantized_parquet_exact_at_full_probe(spark, embs, ivf, tm
 def test_filtered_pq_search_exact_at_full_pool(spark, embs):
     dim = len(QV)
     books = pq.train_pq_codebooks(embs, dim, m=4, k_star=8)
-    encoded = pq.pq_encode(embs, books, keep_cols=("label",))
+    encoded = ann.store_rows(embs, codecs=(pq.PqCodec(books),), keep_cols=("label",))
     assert "label" in encoded.columns
     n = embs.count()
     got = ann.VectorStore(
@@ -71,7 +74,10 @@ def test_filtered_quantized_batch_parquet_equals_filtered_loop(spark, embs, ivf,
         "query_id INT, query_vec ARRAY<DOUBLE>",
     )
     path = str(tmp_path / "ivfq_fb")
-    quant.write_ivf_quantized(ivf, path, keep_cols=("label",))
+    ann.write_store(
+        ivf.assigned, path, ivf.store.router, (quant.Int8Codec(),),
+        keep_cols=("label",),
+    )
     store = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(ivf.centroids),
         quant.Int8Codec(), embs,
@@ -107,7 +113,10 @@ def test_filtered_tree_pq_parquet(spark, embs, tmp_path):
         dim = len(QV)
         books = pq.train_pq_codebooks(embs, dim, m=4, k_star=8)
         path = str(tmp_path / "tree_pq_f")
-        pq.write_tree_pq(tree, books, path, keep_cols=("label",))
+        ann.write_store(
+            tree.assigned, path, tree.store.router, (pq.PqCodec(books),),
+            keep_cols=("label",),
+        )
         n = embs.count()
         got = ann.VectorStore(
             spark.read.parquet(path),
@@ -139,7 +148,7 @@ def test_hybrid_batch_serves_from_quantized_store(spark, embs, ivf, tmp_path):
         "query_id long, query_text string, query_vec array<double>",
     )
     path = str(tmp_path / "ivfq_hybrid")
-    quant.write_ivf_quantized(ivf, path)
+    ann.write_store(ivf.assigned, path, ivf.store.router, (quant.Int8Codec(),))
     n = embs.count()
     store = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(ivf.centroids),

@@ -68,7 +68,7 @@ def test_full_width_equals_exact(embs):
 
 def test_parquet_prefix_store_equals_inline(embs, tmp_path):
     path = str(tmp_path / "mrl_prefix")
-    quant.write_mrl_store(embs, path, dims=16)
+    ann.write_store(embs, path, codecs=(quant.MrlCodec(16),))
     spark = embs.sparkSession
     inline = _mrl(embs, 16).search(QV, k=5, rescore=4).collect()
     stored = _prefix_store(path, embs).search(QV, k=5,
@@ -128,7 +128,7 @@ def test_mrl_quantized_store_composes(embs, tmp_path):
     exact KNN (the coarse->rescore guarantee survives both losses)."""
     spark = embs.sparkSession
     path = str(tmp_path / "mrl_q16")
-    quant.write_mrl_quantized_store(embs, path, dims=16)
+    ann.write_store(embs, path, codecs=(quant.Int8Codec(dims=16),))
     store = spark.read.parquet(path)
     row = store.first()
     assert len(row["qprefix"]) == 16
@@ -155,7 +155,7 @@ def test_mrl_quantized_bytes_are_smaller(embs, tmp_path):
     fl = str(tmp_path / "float_store")
     qp = str(tmp_path / "mrl_q_store")
     embs.select("vec_id", "embedding").write.parquet(fl)
-    quant.write_mrl_quantized_store(embs, qp, dims=16)
+    ann.write_store(embs, qp, codecs=(quant.Int8Codec(dims=16),))
 
     def du(p):
         return sum(
@@ -205,7 +205,7 @@ def test_mrl_batch_equals_single_query_loop(embs, qdf):
 def test_mrl_batch_parquet_equals_loop(embs, qdf, tmp_path):
     spark = embs.sparkSession
     path = str(tmp_path / "mrl_prefix_b")
-    quant.write_mrl_store(embs, path, dims=16)
+    ann.write_store(embs, path, codecs=(quant.MrlCodec(16),))
     got = _by_query(
         _prefix_store(path, embs).batch_search(qdf, k=5, rescore=4).collect()
     )
@@ -221,7 +221,7 @@ def test_mrl_batch_parquet_equals_loop(embs, qdf, tmp_path):
 def test_mrl_quantized_batch_parquet_equals_loop(embs, qdf, tmp_path):
     spark = embs.sparkSession
     path = str(tmp_path / "mrl_q_b")
-    quant.write_mrl_quantized_store(embs, path, dims=16)
+    ann.write_store(embs, path, codecs=(quant.Int8Codec(dims=16),))
     got = _by_query(
         _int8_prefix_store(path, embs).batch_search(qdf, k=5, rescore=4).collect()
     )

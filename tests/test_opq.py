@@ -10,7 +10,7 @@ import math
 
 import pytest
 
-from ydb_vector_search_demo_spark.operators import pq
+from ydb_vector_search_demo_spark.operators import ann, pq
 from ydb_vector_search_demo_spark.operators import rotation as rot
 from ydb_vector_search_demo_spark.operators.ann import (
     VectorStore,
@@ -114,7 +114,7 @@ def test_opq_search_rescore_exactness_and_batch_equality(spark, corpus):
     per-query row-identical to the single-query loop."""
     opq = rot.fit_opq_rotation(corpus, m=M, sample=240)
     books = pq.train_pq_codebooks(corpus, DIM, m=M, k_star=8, rotation=opq)
-    encoded = pq.pq_encode(corpus, books, rotation=opq)
+    encoded = ann.store_rows(corpus, codecs=(pq.PqCodec(books, rotation=opq),))
     encoded.persist().count()
     store = VectorStore(
         encoded, codec=pq.PqCodec(books, rotation=opq), embeddings=corpus
@@ -166,7 +166,10 @@ def test_ivfpq_rotation_single_batch_store_equality(spark, corpus, tmp_path):
     opq = rot.fit_opq_rotation(corpus, m=M, sample=240)
     books = pq.train_ivfpq_codebooks(index, DIM, m=M, k_star=8, rotation=opq)
     path = str(tmp_path / "ivfpq_opq")
-    pq.write_ivfpq_store(index, books, path, rotation=opq)
+    ann.write_store(
+        index.assigned, path, index.store.router,
+        (pq.PqCodec(books, index.centroids, opq),),
+    )
     store = VectorStore(
         spark.read.parquet(path), _IvfRouter(index.centroids),
         pq.PqCodec(books, index.centroids, opq), corpus,
@@ -192,7 +195,10 @@ def test_ivfpq_rotation_single_batch_store_equality(spark, corpus, tmp_path):
     assert got_b == singles
     # encode determinism: re-encoding the store's source equals the store
     back = spark.read.parquet(path)
-    fresh = pq.ivfpq_encode(index, books, rotation=opq)
+    fresh = ann.store_rows(
+        index.assigned, index.store.router,
+        (pq.PqCodec(books, index.centroids, opq),),
+    )
     a = sorted((r["vec_id"], tuple(r["pq_codes"])) for r in back.collect())
     b = sorted((r["vec_id"], tuple(r["pq_codes"])) for r in fresh.collect())
     assert a == b
@@ -231,14 +237,17 @@ def test_refit_pq_threads_rotation_through_gate_and_reencode(spark, corpus, tmp_
 
 def test_tree_pq_rotation_write_and_probe_equality(spark, corpus, tmp_path):
     """OPQ on the tree companion layout: rotated-codebook store via
-    write_tree_pq(rotation=), single probe == batch probe per query."""
+    ann.write_store with pq.PqCodec(rotation=), single probe == batch
+    probe per query."""
     from ydb_vector_search_demo_spark.operators.ann import build_kmeans_tree_index
 
     index = build_kmeans_tree_index(corpus, k_top=2, k_sub=2, seed=3)
     opq = rot.fit_opq_rotation(corpus, m=M, sample=240)
     books = pq.train_pq_codebooks(corpus, DIM, m=M, k_star=8, rotation=opq)
     path = str(tmp_path / "tree_pq_opq")
-    pq.write_tree_pq(index, books, path, rotation=opq)
+    ann.write_store(
+        index.assigned, path, index.store.router, (pq.PqCodec(books, rotation=opq),),
+    )
     store = VectorStore(
         spark.read.parquet(path),
         _TreeRouter(index.centroids_top, index.centroids_sub),

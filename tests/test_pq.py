@@ -35,7 +35,7 @@ def test_encode_and_adc_match_driver_side_math(spark):
     )
     got = {
         r.vec_id: (list(r.pq_codes), r.vnorm)
-        for r in pq.pq_encode(df, FIXED_BOOKS).collect()
+        for r in ann.store_rows(df, codecs=(pq.PqCodec(FIXED_BOOKS),)).collect()
     }
     q = [0.3] * 16
     lut = pq.adc_lut(q, FIXED_BOOKS, "euclidean")
@@ -43,7 +43,7 @@ def test_encode_and_adc_match_driver_side_math(spark):
 
     scores = {
         r.vec_id: r.s
-        for r in pq.pq_encode(df, FIXED_BOOKS)
+        for r in ann.store_rows(df, codecs=(pq.PqCodec(FIXED_BOOKS),))
         .select("vec_id", pq.adc_score("pq_codes", lut, "euclidean", q).alias("s"))
         .collect()
     }
@@ -76,7 +76,7 @@ def test_pq_store_schema_and_plan_shape(spark, tmp_path):
     embs = load_table(spark, SF_SMOKE, "embeddings")
     books = pq.train_pq_codebooks(embs, 64, m=4, k_star=16)
     path = str(tmp_path / "pq_store")
-    pq.write_pq_store(embs, books, path)
+    ann.write_store(embs, path, codecs=(pq.PqCodec(books),))
     stored = spark.read.parquet(path)
     schema = {f.name: f.dataType.simpleString() for f in stored.schema.fields}
     assert schema["pq_codes"] == "array<tinyint>"
@@ -111,7 +111,9 @@ def test_ivfpq_full_probe_full_pool_equals_exact(spark, tmp_path):
     index = ann.build_ivf_index(embs, k_clusters=4)
     books = pq.train_ivfpq_codebooks(index, 64, m=4, k_star=16)
     path = str(tmp_path / "ivfpq")
-    pq.write_ivfpq_store(index, books, path)
+    ann.write_store(
+        index.assigned, path, index.store.router, (pq.PqCodec(books, index.centroids),),
+    )
 
     exact = [
         (r.vec_id, round(r.score, 9)) for r in knn_scores(embs, QV, k=5).collect()
@@ -133,7 +135,9 @@ def test_ivfpq_plan_prunes_and_stays_jvm(spark, tmp_path):
     index = ann.build_ivf_index(embs, k_clusters=8)
     books = pq.train_ivfpq_codebooks(index, 64, m=4, k_star=16)
     path = str(tmp_path / "ivfpq_plan")
-    pq.write_ivfpq_store(index, books, path)
+    ann.write_store(
+        index.assigned, path, index.store.router, (pq.PqCodec(books, index.centroids),),
+    )
     df = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(index.centroids),
         pq.PqCodec(books, index.centroids), embs,

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark import stores
-from ydb_vector_search_demo_spark.operators import pq
+from ydb_vector_search_demo_spark.operators import ann, pq
 from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
@@ -31,7 +31,7 @@ def test_save_load_roundtrip_is_exact(spark, tmp_path):
     corpus = _corpus(spark)
     books = pq.train_pq_codebooks(corpus, dim=DIM, m=M, k_star=8)
     path = str(tmp_path / "v1")
-    pq.write_pq_store(corpus, books, path)
+    ann.write_store(corpus, path, codecs=(pq.PqCodec(books),))
     base = pq.pq_quantization_mse(corpus, books)
     pq.save_codebooks(spark, path, books, base)
     got_books, got_base = pq.load_codebooks(spark, path)
@@ -59,7 +59,7 @@ def test_drift_refit_publish_cycle(spark, tmp_path):
     books = pq.train_pq_codebooks(corpus, dim=DIM, m=M, k_star=8)
     base = pq.pq_quantization_mse(corpus, books)
     v1 = str(tmp_path / "v1")
-    pq.write_pq_store(corpus, books, v1)
+    ann.write_store(corpus, v1, codecs=(pq.PqCodec(books),))
     pq.save_codebooks(spark, v1, books, base)
     stores.publish_store(spark, root, v1)
 
@@ -143,7 +143,7 @@ def test_maintenance_cycle_append_then_refit(spark, tmp_path):
     books = pq.train_pq_codebooks(corpus, dim=DIM, m=M, k_star=8)
     base = pq.pq_quantization_mse(corpus, books)
     v1 = str(tmp_path / "v1")
-    pq.write_pq_store(corpus, books, v1)
+    ann.write_store(corpus, v1, codecs=(pq.PqCodec(books),))
     pq.save_codebooks(spark, v1, books, base)
     stores.publish_store(spark, root, v1)
 

@@ -59,13 +59,19 @@ def stores(spark, tmp_path_factory):
     )
     root = tmp_path_factory.mktemp("probe_core")
     path = {name: str(root / name) for name in ("sq8-ivf", "sq8-tree", "pq-ivf", "pq-tree")}
-    quant.write_ivf_quantized(ivf, path["sq8-ivf"])
-    quant.write_tree_quantized(tree, path["sq8-tree"])
-    # the layout stream_ivf_ingest writes: cell + PQ companion columns
-    pq.pq_encode(embs, books).join(
+    ann.write_store(
+        ivf.assigned, path["sq8-ivf"], ivf.store.router, (quant.Int8Codec(),),
+    )
+    ann.write_store(
+        tree.assigned, path["sq8-tree"], tree.store.router, (quant.Int8Codec(),),
+    )
+    # the layout a PQ companion stream writes: cell + PQ companion columns
+    ann.store_rows(embs, codecs=(pq.PqCodec(books),)).join(
         ivf.assigned.select("vec_id", "centroid_id"), on="vec_id"
     ).write.partitionBy("centroid_id").mode("overwrite").parquet(path["pq-ivf"])
-    pq.write_tree_pq(tree, books, path["pq-tree"])
+    ann.write_store(
+        tree.assigned, path["pq-tree"], tree.store.router, (pq.PqCodec(books),),
+    )
     qvs = [rag.embed_query_stub(q) for q in QUERIES]
     qdf = spark.createDataFrame(
         [(i, v) for i, v in enumerate(qvs)], "query_id INT, query_vec ARRAY<DOUBLE>"
@@ -122,9 +128,9 @@ def test_batch_and_stream_write_the_same_codec_columns(stores):
     batch = s.spark.read.parquet(s.path["sq8-tree"]).join(
         s.spark.read.parquet(s.path["pq-tree"]), on=key
     )
-    stream = ingest._with_companions(
+    stream = ann.store_rows(
         ann.tree_assign(s.tree.centroids_top, s.tree.centroids_sub, s.embs),
-        quantize=True, pq_codebooks=s.books,
+        s.tree.store.router, (None, quant.Int8Codec(), pq.PqCodec(s.books)),
     )
     got = sorted(map(tuple, batch.select(*cols).collect()))
     assert got
@@ -193,7 +199,7 @@ CACHES = {
         lambda e: knn.get_or_write_normalized_store(e, KEY),
     ),
     "rotated-store": (
-        rotation, "write_rotated_store", "_STORE_CACHE",
+        rotation, "write_store", "_STORE_CACHE",
         lambda e: rotation.get_or_write_rotated_store(e, [[1.0]], KEY),
     ),
     "graph-store": (

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import re
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -215,14 +216,14 @@ def test_quantize_total_on_degenerate_vectors(vecs):
     elements quantizes without an ANSI cast/divide error, every code
     stays in [-127, 127], and finite well-scaled vectors roundtrip
     within scale/2 per element."""
-    from ydb_vector_search_demo_spark.operators import quant
+    from ydb_vector_search_demo_spark.operators import ann, quant
 
     spark = _get_spark()
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    rows = quant.quantize_int8(df).collect()  # must not raise
+    rows = ann.store_rows(df, codecs=(quant.Int8Codec(),)).collect()  # must not raise
     assert len(rows) == len(vecs)
     for r in rows:
         assert all(-127 <= c <= 127 for c in r.qvec), r
@@ -239,7 +240,7 @@ def test_quantize_total_on_degenerate_vectors(vecs):
 def test_binary_packing_total_and_matches_driver(vecs):
     """quantize_binary is total on degenerate inputs and always equals
     the driver-side packing rule (NaN > 0 is False in both)."""
-    from ydb_vector_search_demo_spark.operators import quant
+    from ydb_vector_search_demo_spark.operators import ann, quant
 
     spark = _get_spark()
     dim = max(len(v) for v in vecs)
@@ -248,7 +249,10 @@ def test_binary_packing_total_and_matches_driver(vecs):
         [(i, v) for i, v in enumerate(padded)],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    got = {r.vec_id: list(r.bvec) for r in quant.quantize_binary(df, dim).collect()}
+    got = {
+        r.vec_id: list(r.bvec)
+        for r in ann.store_rows(df, codecs=(quant.BinaryCodec(dim),)).collect()
+    }
     for i, v in enumerate(padded):
         assert got[i] == quant.pack_query_bits(v), (i, v)
 
@@ -259,7 +263,7 @@ def test_pq_encode_total_on_degenerate_vectors(vecs):
     """pq_encode must be total: degenerate elements may land in any
     cell (NaN distances), but every code stays a valid codebook index
     and nothing raises."""
-    from ydb_vector_search_demo_spark.operators import pq
+    from ydb_vector_search_demo_spark.operators import ann, pq
 
     spark = _get_spark()
     dim = 8
@@ -272,7 +276,7 @@ def test_pq_encode_total_on_degenerate_vectors(vecs):
         [(i, v) for i, v in enumerate(padded)],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    rows = pq.pq_encode(df, books).collect()  # must not raise
+    rows = ann.store_rows(df, codecs=(pq.PqCodec(books),)).collect()  # must not raise
     assert len(rows) == len(padded)
     for r in rows:
         assert len(r.pq_codes) == 2
@@ -508,3 +512,46 @@ def test_zvalue_column_matches_reference_randomized(xy, bits):
     for i, (x, y) in enumerate(xy):
         want = layout.zvalue_py([x, y], [(0.0, 255.0), (0.0, 255.0)], bits=bits)
         assert got[i] == want, (i, x, y, bits)
+
+
+@pytest.mark.parametrize("router", ["ivf", "tree"])
+def test_stored_vector_finds_itself_at_one_probe(spark, tmp_path, router):
+    """Index invariant: every vector of a float store, written by the one
+    write and then grown by the one append, is among the score-0 rows of
+    its own ``nprobe=1`` (tree ``1/1``) euclidean probe. Cells are
+    assigned by L2 and euclidean ranks centroids by L2, so a vector's
+    own cell is always the first one probed. Cosine is left out on
+    purpose: ``rank_centroids`` ranks the un-normalised centroids by
+    cosine while cells are assigned by L2, so 1.15% of stored vectors
+    miss their own cell (ROADMAP item 3). Pinned codebooks cut from the
+    corpus, so no KMeans runs; one batch probe per store."""
+    from tests.conftest import SF_SMOKE
+    from ydb_vector_search_demo_spark.operators import ann
+    from ydb_vector_search_demo_spark.sources.tables import load_table
+
+    embs = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    pins = [
+        [float(x) for x in r["embedding"]]
+        for r in embs.orderBy("vec_id").limit(6).collect()
+    ]
+    if router == "ivf":
+        cells = ann._IvfRouter(pins[:4])
+    else:
+        cells = ann._TreeRouter(pins[:2], [pins[2:4], pins[4:6]])
+    path = str(tmp_path / router)
+    ann.write_store(embs.filter("vec_id % 2 = 0"), path, cells)
+    ann.write_store(embs.filter("vec_id % 2 = 1"), path, cells, mode="append")
+    stored = spark.read.parquet(path)
+    queries = stored.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+    found: dict = {}
+    for r in ann.VectorStore(stored, cells).batch_search(
+        queries, k=5, nprobe=1, nprobe_top=1, nprobe_sub=1, metric="euclidean"
+    ).collect():
+        if r["score"] == 0.0:
+            found.setdefault(r["query_id"], set()).add(r["vec_id"])
+    ids = [r["vec_id"] for r in embs.select("vec_id").collect()]
+    assert len(ids) == 500
+    assert [i for i in ids if i not in found.get(i, set())] == []

@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from ydb_vector_search_demo_spark.operators import quant
+from ydb_vector_search_demo_spark.operators import ann, quant
 from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 from ydb_vector_search_demo_spark.plans.catalog import QV
@@ -35,7 +35,7 @@ def test_roundtrip_error_bounded_by_half_scale(spark):
 
 def test_quantized_store_schema_is_tinyint(spark):
     embs = load_table(spark, SF_SMOKE, "embeddings")
-    qdf = quant.quantize_int8(embs)
+    qdf = ann.store_rows(embs, codecs=(quant.Int8Codec(),))
     schema = dict((f.name, f.dataType.simpleString()) for f in qdf.schema.fields)
     assert schema["qvec"] == "array<tinyint>"
     assert schema["qscale"] == "float"
@@ -48,7 +48,10 @@ def test_zero_vector_is_lawful(spark):
         [(1, [0.0, 0.0, 0.0, 0.0]), (2, [1.0, -2.0, 0.5, 4.0])],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    rows = {r.vec_id: r for r in quant.quantize_int8(df).collect()}
+    rows = {
+        r.vec_id: r
+        for r in ann.store_rows(df, codecs=(quant.Int8Codec(),)).collect()
+    }
     assert rows[1].qvec == [0, 0, 0, 0]
     assert rows[1].qscale == 0.0
     assert rows[2].qvec[3] == 127  # max element maps to full range
@@ -62,7 +65,7 @@ def test_int8_rescore_matches_exact_topk(spark):
         (r.vec_id, round(r.score, 9))
         for r in knn_scores(embs, QV, k=10).collect()
     ]
-    qdf = quant.quantize_int8(embs)
+    qdf = ann.store_rows(embs, codecs=(quant.Int8Codec(),))
     got = [
         (r.vec_id, round(r.score, 9))
         for r in VectorStore(qdf, codec=quant.Int8Codec(), embeddings=embs)
@@ -91,7 +94,10 @@ def test_binary_packing_matches_driver_side_rule(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     )
-    got = {r.vec_id: list(r.bvec) for r in quant.quantize_binary(df, 64).collect()}
+    got = {
+        r.vec_id: list(r.bvec)
+        for r in ann.store_rows(df, codecs=(quant.BinaryCodec(64),)).collect()
+    }
     for i, v in enumerate(vecs):
         assert got[i] == quant.pack_query_bits(v), i
 
@@ -102,7 +108,7 @@ def test_serving_plan_shape(spark, tmp_path):
     the c*k candidate side; no Python eval anywhere."""
     embs = load_table(spark, SF_SMOKE, "embeddings")
     path = str(tmp_path / "qstore")
-    quant.write_quantized_store(embs, path)
+    ann.write_store(embs, path, codecs=(quant.Int8Codec(),))
     df = VectorStore(
         spark.read.parquet(path), codec=quant.Int8Codec(), embeddings=embs
     ).search(QV, k=5, rescore=4)
@@ -123,7 +129,7 @@ def test_ivf_quantized_store_composes_pruning_and_byte_reduction(spark, tmp_path
     embs = load_table(spark, SF_SMOKE, "embeddings")
     index = ann.build_ivf_index(embs, k_clusters=8)
     qpath = str(tmp_path / "ivf_q")
-    quant.write_ivf_quantized(index, qpath)
+    ann.write_store(index.assigned, qpath, index.store.router, (quant.Int8Codec(),))
 
     store = VectorStore(
         spark.read.parquet(qpath), ann._IvfRouter(index.centroids),
@@ -155,7 +161,7 @@ def test_filtered_quantized_search_equals_filtered_exact(spark):
     """Predicate inside the coarse scan + exact rescore == exact
     filtered top-k (when the coarse pool is wide enough)."""
     embs = load_table(spark, SF_ORACLE, "embeddings")
-    qdf = quant.quantize_int8(embs, keep_cols=("label",))
+    qdf = ann.store_rows(embs, codecs=(quant.Int8Codec(),), keep_cols=("label",))
     assert "label" in qdf.columns
     exact = [
         (r.vec_id, round(r.score, 9))

@@ -69,9 +69,9 @@ def test_stream_ivf_pq_companions_equal_batch_across_microbatches(
         stream = ingest.read_embeddings_stream(
             spark, str(src) + "/*", dim_hint_df=embs
         )
-        q = ingest.stream_ivf_ingest(
-            stream, ivf.centroids, store, ckpt,
-            quantize=True, pq_codebooks=books,
+        q = ingest.stream_ingest(
+            stream, ann._IvfRouter(ivf.centroids), store, ckpt,
+            (None, quant.Int8Codec(), pq.PqCodec(books)),
         )
         q.awaitTermination(120)
 
@@ -80,8 +80,9 @@ def test_stream_ivf_pq_companions_equal_batch_across_microbatches(
     second.write.parquet(str(src / "batch2"))
     run()
 
-    batch = ingest._with_companions(
-        ann.ivf_assign(ivf.centroids, embs), quantize=True, pq_codebooks=books
+    batch = ann.store_rows(
+        ann.ivf_assign(ivf.centroids, embs), ann._IvfRouter(ivf.centroids),
+        (None, quant.Int8Codec(), pq.PqCodec(books)),
     )
     got = _store_rows(
         spark.read.parquet(store).select(
@@ -104,9 +105,10 @@ def test_coarse_searches_on_streamed_store(spark, embs, ivf, books, tmp_path):
     store = str(tmp_path / "stream_store2")
     ckpt = str(tmp_path / "ckpt2")
     embs.write.parquet(str(src / "all"))
-    q = ingest.stream_ivf_ingest(
+    q = ingest.stream_ingest(
         ingest.read_embeddings_stream(spark, str(src) + "/*", dim_hint_df=embs),
-        ivf.centroids, store, ckpt, quantize=True, pq_codebooks=books,
+        ann._IvfRouter(ivf.centroids), store, ckpt,
+        (None, quant.Int8Codec(), pq.PqCodec(books)),
     )
     q.awaitTermination(120)
 
@@ -146,8 +148,10 @@ def test_tree_store_quantized_companions(spark, embs, books, tmp_path):
     try:
         int8_path = str(tmp_path / "tree_int8")
         pq_path = str(tmp_path / "tree_pq")
-        quant.write_tree_quantized(tree, int8_path)
-        pq.write_tree_pq(tree, books, pq_path)
+        ann.write_store(
+            tree.assigned, int8_path, tree.store.router, (quant.Int8Codec(),),
+        )
+        ann.write_store(tree.assigned, pq_path, tree.store.router, (pq.PqCodec(books),))
 
         n = embs.count()
         k = 5
@@ -193,19 +197,19 @@ def test_stream_tree_ingest_with_companions(spark, embs, books, tmp_path):
         store = str(tmp_path / "tree_stream_store")
         ckpt = str(tmp_path / "tckpt")
         embs.write.parquet(str(src / "all"))
-        q = ingest.stream_tree_ingest(
+        q = ingest.stream_ingest(
             ingest.read_embeddings_stream(spark, str(src) + "/*", dim_hint_df=embs),
-            tree.centroids_top, tree.centroids_sub, store, ckpt,
-            quantize=True, pq_codebooks=books,
+            ann._TreeRouter(tree.centroids_top, tree.centroids_sub), store,
+            ckpt, (None, quant.Int8Codec(), pq.PqCodec(books)),
         )
         q.awaitTermination(120)
         got = sorted(
             (r.vec_id, r.cell_top, r.cell_sub, tuple(r.qvec), tuple(r.pq_codes))
             for r in spark.read.parquet(store).collect()
         )
-        batch = ingest._with_companions(
+        batch = ann.store_rows(
             ann.tree_assign(tree.centroids_top, tree.centroids_sub, embs),
-            quantize=True, pq_codebooks=books,
+            tree.store.router, (None, quant.Int8Codec(), pq.PqCodec(books)),
         )
         want = sorted(
             (r.vec_id, r.cell_top, r.cell_sub, tuple(r.qvec), tuple(r.pq_codes))
@@ -226,7 +230,7 @@ def test_pq_train_degenerate_corpus_does_not_abort(spark):
     books = pq.train_pq_codebooks(df, DIM, m=4, k_star=8)
     assert len(books) == 4
     # every subspace got SOME codebook; encoding works end to end
-    encoded = pq.pq_encode(df, books)
+    encoded = ann.store_rows(df, codecs=(pq.PqCodec(books),))
     assert encoded.count() == 10
     # ADC over the degenerate codebook still reproduces the exact
     # distance for the constant corpus (codes reconstruct perfectly)
@@ -292,8 +296,9 @@ def test_stream_ingest_mrl_prefix_companion(spark, embs, ivf, tmp_path):
     stream = ingest.read_embeddings_stream(
         spark, str(src) + "/*", dim_hint_df=embs
     )
-    q = ingest.stream_ivf_ingest(
-        stream, ivf.centroids, store, ckpt, mrl_dims=16
+    q = ingest.stream_ingest(
+        stream, ann._IvfRouter(ivf.centroids), store, ckpt,
+        (None, quant.MrlCodec(16)),
     )
     q.awaitTermination(120)
 
@@ -326,7 +331,7 @@ def test_stream_ingest_mrl_prefix_companion(spark, embs, ivf, tmp_path):
 
 def test_stream_ingest_rotated_prefix_companion(spark, embs, ivf, tmp_path):
     """The learned-rotation prefix companion streams too (r6): the
-    prefix column equals write_rotated_store's batch rotation row for
+    prefix column equals the batch rotation (rotation.rotate_expr) row for
     row, the streamed-in store serves a batched rotation.PcaCodec
     store directly — exact at the degenerate point (dims=d, corpus-covering
     pool) — and the mrl/rotation prefix companions are mutually
@@ -342,8 +347,9 @@ def test_stream_ingest_rotated_prefix_companion(spark, embs, ivf, tmp_path):
     stream = ingest.read_embeddings_stream(
         spark, str(src) + "/*", dim_hint_df=embs
     )
-    q = ingest.stream_ivf_ingest(
-        stream, ivf.centroids, store, ckpt, rotation=rot, rotation_dims=16
+    q = ingest.stream_ingest(
+        stream, ann._IvfRouter(ivf.centroids), store, ckpt,
+        (None, R.PcaCodec(rot, 16)),
     )
     q.awaitTermination(120)
 
@@ -375,9 +381,9 @@ def test_stream_ingest_rotated_prefix_companion(spark, embs, ivf, tmp_path):
     ]
 
     with pytest.raises(ValueError, match="prefix"):
-        ingest.stream_ivf_ingest(
-            stream, ivf.centroids, store, ckpt, mrl_dims=16,
-            rotation=rot, rotation_dims=16,
+        ingest.stream_ingest(
+            stream, ann._IvfRouter(ivf.centroids), store, ckpt,
+            (None, quant.MrlCodec(16), R.PcaCodec(rot, 16)),
         )
 
 
@@ -385,7 +391,7 @@ def test_stream_ingest_opq_companion_equals_batch_and_serves(
     spark, embs, ivf, tmp_path
 ):
     """pq_rotation (r7): the streamed PQ companion is OPQ-encoded with
-    a frozen basis — codes equal the batch pq_encode(rotation=) of the
+    a frozen basis — codes equal the batch PqCodec(rotation=) encode of the
     same rows, and the streamed-in store serves the rotated companion
     probe (single == batch, oracle-grade rounding)."""
     from ydb_vector_search_demo_spark.operators import rotation as rot
@@ -398,15 +404,15 @@ def test_stream_ingest_opq_companion_equals_batch_and_serves(
     ckpt = str(tmp_path / "ckpt_opq")
     embs.write.parquet(str(src / "batch1"))
     stream = ingest.read_embeddings_stream(spark, str(src) + "/*", dim_hint_df=embs)
-    q = ingest.stream_ivf_ingest(
-        stream, ivf.centroids, store, ckpt,
-        pq_codebooks=opq_books, pq_rotation=H,
+    q = ingest.stream_ingest(
+        stream, ann._IvfRouter(ivf.centroids), store, ckpt,
+        (None, pq.PqCodec(opq_books, rotation=H)),
     )
     q.awaitTermination(120)
 
-    batch = pq.pq_encode(
-        ann.ivf_assign(ivf.centroids, embs), opq_books,
-        keep_cols=("centroid_id",), rotation=H,
+    batch = ann.store_rows(
+        ann.ivf_assign(ivf.centroids, embs),
+        codecs=(pq.PqCodec(opq_books, rotation=H),), keep_cols=("centroid_id",),
     )
     got = sorted(
         (r.vec_id, tuple(r.pq_codes), round(r.vnorm, 5))

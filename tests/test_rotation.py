@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ydb_vector_search_demo_spark.functions.vector import distance
+from ydb_vector_search_demo_spark.operators import ann
 from ydb_vector_search_demo_spark.operators import rotation as R
 from ydb_vector_search_demo_spark.operators.ann import VectorStore
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
@@ -137,7 +138,7 @@ def test_parquet_store_serves_same_rows(spark, sf_oracle, tmp_path):
     embs = load_table(spark, sf_oracle, "embeddings")
     rot = R.fit_pca_rotation(embs, sample=256)
     path = str(tmp_path / "rotstore")
-    R.write_rotated_store(embs, path, rot, dims=16)
+    ann.write_store(embs, path, codecs=(R.PcaCodec(rot, 16),))
     served = _rows(
         _stored(path, embs, rot).search(QV, k=5, rescore=4)
     )
@@ -205,7 +206,7 @@ def test_pca_batch_parquet_equals_loop(spark, sf_oracle, qdf, tmp_path):
     embs = load_table(spark, sf_oracle, "embeddings")
     rot = R.hadamard_rotation(64)
     path = str(tmp_path / "rotstore_b")
-    R.write_rotated_store(embs, path, rot, dims=16)
+    ann.write_store(embs, path, codecs=(R.PcaCodec(rot, 16),))
     got = _by_query(
         _stored(path, embs, rot).batch_search(qdf, k=5, rescore=4).collect()
     )

@@ -184,8 +184,9 @@ def test_streaming_tree_ingest_matches_batch_assignment(spark, tmp_path):
     first.write.parquet(str(src / "batch1"))
 
     stream = ingest.read_embeddings_stream(spark, str(src) + "/*", dim_hint_df=embs)
-    q = ingest.stream_tree_ingest(
-        stream, tree.centroids_top, tree.centroids_sub, store, ckpt
+    q = ingest.stream_ingest(
+        stream, ann._TreeRouter(tree.centroids_top, tree.centroids_sub),
+        store, ckpt,
     )
     q.awaitTermination(120)
 
@@ -193,9 +194,9 @@ def test_streaming_tree_ingest_matches_batch_assignment(spark, tmp_path):
     assert got1.count() == first.count()
 
     second.write.parquet(str(src / "batch2"))
-    q2 = ingest.stream_tree_ingest(
+    q2 = ingest.stream_ingest(
         ingest.read_embeddings_stream(spark, str(src) + "/*", dim_hint_df=embs),
-        tree.centroids_top, tree.centroids_sub, store, ckpt,
+        ann._TreeRouter(tree.centroids_top, tree.centroids_sub), store, ckpt,
     )
     q2.awaitTermination(120)
 

@@ -46,12 +46,16 @@ read is one router × one codec score → one coarse→rescore tail:
   exact per-query top-k). Float stores need no tail: their coarse score
   is already exact.
 
-**Write side.** One nearest-cell rule (:func:`_sq_dists` +
-:func:`_argmin`; the routers' ``cell`` columns are the assignment of
+**Write side.** Every write — batch overwrite, append and stream — is
+one row projection, :func:`store_rows`: (id, the store's formats in
+order, ``keep_cols``, the router's cell columns). Each codec owns its
+stored columns beside its score (``columns``); ``None`` is the float
+vector. Rows are routed by one nearest-cell rule (:func:`_sq_dists` +
+:func:`_argmin`; the routers' ``assign``, also behind
 :func:`ivf_assign` / :func:`tree_assign`, and PQ encodes each subspace
-with it), one cell writer (:func:`_write_cells`, partitioned by the
-router's ``fields``; ``streaming.ingest`` has its ``writeStream`` twin)
-and one column set per codec, laid out by :func:`_cell_rows`.
+with it) and written by one cell writer (:func:`_write_cells`,
+partitioned by the router's ``fields``) behind :func:`write_store`;
+``streaming.ingest.stream_ingest`` is its ``writeStream`` twin.
 
 The module also holds MLlib LSH and kNN-graph search, and the graph
 analytics built on the kNN graph.
@@ -164,13 +168,10 @@ def _nearest_cell(vector_col: str, codebook: Column) -> Column:
 class _IvfRouter:
     """Flat IVF routing over ``centroid_id``: cells nearest-first by
     :func:`rank_centroids`; :meth:`levels` widens by doubling ``nprobe``.
-    :meth:`cell` is the assignment rule :func:`ivf_assign` projects."""
+    :meth:`assign` is the assignment rule of :func:`ivf_assign` and of
+    every IVF store write."""
 
     fields = ("centroid_id",)
-
-    @staticmethod
-    def cell(centroids: list[list[float]], vector_col: str) -> Column:
-        return _nearest_cell(vector_col, _codebook(centroids)).alias("centroid_id")
 
     def __init__(self, centroids: list[list[float]]):
         self.centroids = centroids
@@ -190,19 +191,24 @@ class _IvfRouter:
         """IN filter on ``centroid_id`` — partition pruning on disk."""
         return F.col("centroid_id").isin([c for (c,) in cells])
 
+    def assign(self, df: DataFrame, vector_col: str) -> DataFrame:
+        """``df`` plus the ``centroid_id`` of its L2-nearest centroid,
+        map-side."""
+        return df.select(
+            "*",
+            _nearest_cell(vector_col, _codebook(self.centroids)).alias("centroid_id"),
+        )
+
 
 class _TreeRouter:
     """Two-level k-means tree routing over (``cell_top``, ``cell_sub``):
     rank the top cells, then only the probed cells' child codebooks
     (sub-linear in the cell count); :meth:`levels` is
-    :func:`_tree_probe_levels`. :meth:`top_cell` then :meth:`sub_cell`
-    is the assignment rule of :func:`tree_assign` and the tree build."""
+    :func:`_tree_probe_levels`. :meth:`assign` is the assignment rule
+    of :func:`tree_assign` and every tree store write; the tree build
+    shares its second level, :meth:`sub_cell`."""
 
     fields = ("cell_top", "cell_sub")
-
-    @staticmethod
-    def top_cell(centroids_top: list[list[float]], vector_col: str) -> Column:
-        return _nearest_cell(vector_col, _codebook(centroids_top)).alias("cell_top")
 
     @staticmethod
     def sub_cell(centroids_sub: list[list[list[float]]], vector_col: str) -> Column:
@@ -263,6 +269,13 @@ class _TreeRouter:
                 for t, subs in by_top.items()
             ],
         )
+
+    def assign(self, df: DataFrame, vector_col: str) -> DataFrame:
+        """``df`` plus (``cell_top``, ``cell_sub``), map-side: the child
+        codebook is picked by the just-computed ``cell_top``, so the two
+        levels are two projections."""
+        top = _nearest_cell(vector_col, _codebook(self.top)).alias("cell_top")
+        return df.select("*", top).select("*", self.sub_cell(self.sub, vector_col))
 
 
 def _probe_scan(
@@ -370,8 +383,12 @@ def _bind_literal(value, field) -> Column:
 
 
 class _Codec:
-    """One store format's coarse score, written once:
-    ``score(metric, q, *vals)`` over a query Column ``q`` (the query
+    """One store format, written once on each side. Write side:
+    ``columns(df, vector_col)`` returns ``(df', {name: Column})``, the
+    format's stored column set over the float ``vector_col`` (``df'``
+    adds any helper column that must be computed once in its own
+    projection). Read side: ``score(metric, q, *vals)``, the coarse
+    score of those columns against a query Column ``q`` (the query
     vector as a plan literal in a single-query probe, the ``_qv`` or
     query-vector column in a batch) and one Column per entry of
     ``fields`` — the codec's per-query driver values (a rotated prefix,
@@ -770,33 +787,88 @@ def get_or_build_ivf_index(
     )
 
 
-def _cell_rows(
-    df: DataFrame, id_col: str, codec: dict[str, Column],
-    fields: Sequence[str] = (), keep_cols: Sequence[str] = (),
+def store_rows(
+    vectors: DataFrame,
+    router=None,
+    codecs: Sequence = (None,),
+    id_col: str = "vec_id",
+    vector_col: str = "embedding",
+    keep_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """The column order of every companion store: (id, *codec columns,
-    *cell columns, *keep_cols). ``codec`` is one codec's column set
-    (``quant._int8_cols``, ``pq._pq_cols``, ``quant._prefix_cols``);
-    ``keep_cols`` carries metadata for filtered probes."""
-    return df.select(
-        F.col(id_col),
-        *[col.alias(name) for name, col in codec.items()],
-        *[F.col(c) for c in (*fields, *keep_cols)],
-    )
+    """The one row projection of every vector-store write: (id, each
+    format's stored columns in ``codecs`` order, *keep_cols, *the
+    router's cell columns). A format is ``None``, the float vector
+    itself, or a :class:`_Codec`, which owns its column set
+    (``columns``). Rows that lack the router's cell columns are routed
+    map-side (the router's ``assign``); rows that carry them (an
+    index's ``assigned``) keep their build-time cells. Without a router
+    this is the in-memory encoder of a format. ``keep_cols`` carries
+    metadata for filtered probes. Two formats writing one column is a
+    ``ValueError``."""
+    fields = () if router is None else router.fields
+    if router is not None and not set(fields) <= set(vectors.columns):
+        vectors = router.assign(vectors, vector_col)
+    df, names = vectors, []
+    for codec in codecs:
+        if codec is None:
+            names.append(vector_col)
+            continue
+        df, cols = codec.columns(df, vector_col)
+        df = df.withColumns(cols)
+        names += cols
+    clash = sorted({n for n in names if names.count(n) > 1})
+    if clash:
+        raise ValueError(
+            f"two formats write the same column {clash}: a store holds one "
+            "format per column — pick one"
+        )
+    return df.select(id_col, *names, *keep_cols, *fields)
 
 
 def _write_cells(df: DataFrame, router, path: str, mode: str = "overwrite") -> None:
     """The one batch cell writer: ``df`` partitioned by the router's
-    cell columns (``router.fields``), so a probe's cell filter becomes
-    Parquet partition pruning. ``mode="append"`` adds files to the
-    touched cells only; existing data is never rewritten."""
-    df.write.mode(mode).partitionBy(*router.fields).parquet(path)
+    cell columns (``router.fields``; unpartitioned without a router), so
+    a probe's cell filter becomes Parquet partition pruning.
+    ``mode="append"`` adds files to the touched cells only; existing
+    data is never rewritten."""
+    fields = () if router is None else router.fields
+    df.write.mode(mode).partitionBy(*fields).parquet(path)
+
+
+def write_store(
+    vectors: DataFrame,
+    path: str,
+    router=None,
+    codecs: Sequence = (None,),
+    mode: str = "overwrite",
+    id_col: str = "vec_id",
+    vector_col: str = "embedding",
+    keep_cols: Sequence[str] = (),
+) -> None:
+    """The one vector-store write — batch overwrite, or with
+    ``mode="append"`` the store's append: :func:`store_rows` through
+    the one cell writer (:func:`_write_cells`). ``router`` is ``None``,
+    an :class:`_IvfRouter` or a :class:`_TreeRouter`; ``codecs`` lists
+    the store's formats (``None`` for the float vector, e.g.
+    ``(quant.Int8Codec(),)`` for an int8 companion store)."""
+    _write_cells(
+        store_rows(vectors, router, codecs, id_col, vector_col, keep_cols),
+        router, path, mode,
+    )
 
 
 def write_ivf_partitioned(index: IvfIndex, path: str) -> None:
     """Persist the assigned corpus partitioned by centroid_id — queries
-    that filter on centroid_id then hit Parquet partition pruning."""
-    _write_cells(index.assigned, _IvfRouter, path)
+    that filter on centroid_id then hit Parquet partition pruning. The
+    metadata columns the build carried stay in the store."""
+    write_store(
+        index.assigned, path, index.store.router, id_col=index.id_col,
+        vector_col=index.vector_col,
+        keep_cols=[
+            c for c in index.assigned.columns
+            if c not in (index.id_col, index.vector_col, "centroid_id")
+        ],
+    )
 
 
 def ivf_assign(
@@ -811,10 +883,9 @@ def ivf_assign(
     join the index WITHOUT a KMeans refit. The centroid matrix travels
     as plan literals (k × dim floats); no shuffle, no MLlib model
     object, identical assignment rule to KMeans.transform. ``keep_cols``
-    carries metadata for filtered probes, as in the companion writers."""
-    return vectors.select(
-        F.col(id_col), F.col(vector_col), _IvfRouter.cell(centroids, vector_col),
-        *[F.col(c) for c in keep_cols],
+    carries metadata for filtered probes, as in every store write."""
+    return _IvfRouter(centroids).assign(
+        vectors.select(id_col, vector_col, *keep_cols), vector_col
     )
 
 
@@ -824,14 +895,18 @@ def ivf_append(
     path: str,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
+    keep_cols: Sequence[str] = (),
 ) -> None:
     """Incremental index maintenance: route new vectors to their cells
     and append to the centroid-partitioned store — only the touched
     partitions gain files; existing data is never rewritten. Periodic
     re-clustering (build_ivf_index + write_ivf_partitioned) rebalances
-    when cell sizes drift."""
-    assigned = ivf_assign(centroids, new_vectors, id_col, vector_col)
-    _write_cells(assigned, _IvfRouter, path, mode="append")
+    when cell sizes drift. ``keep_cols`` carries the store's metadata
+    columns onto the new rows, so filtered probes see them."""
+    write_store(
+        new_vectors, path, _IvfRouter(centroids), mode="append",
+        id_col=id_col, vector_col=vector_col, keep_cols=keep_cols,
+    )
 
 
 def recall_at_k(exact_ids: list, ann_ids: list) -> float:
@@ -1109,15 +1184,6 @@ def get_or_build_kmeans_tree(
     )
 
 
-def write_tree_partitioned(index: KMeansTreeIndex, path: str) -> None:
-    """Persist the tree-assigned corpus partitioned by (cell_top,
-    cell_sub) — the two-level directory layout under which the probe
-    filter becomes Parquet partition pruning at BOTH levels: a
-    nprobe_top×nprobe_sub probe lists only those directories out of
-    k_top×k_sub."""
-    _write_cells(index.assigned, _TreeRouter, path)
-
-
 def tree_assign(
     centroids_top: list[list[float]],
     centroids_sub: list[list[list[float]]],
@@ -1132,37 +1198,17 @@ def tree_assign(
     codebook is selected per row by the just-computed ``cell_top`` —
     no shuffle, no MLlib model object, same Euclidean rule as
     KMeans.transform at each level."""
-    return vectors.select(
-        F.col(id_col), F.col(vector_col),
-        _TreeRouter.top_cell(centroids_top, vector_col),
-    ).select(
-        id_col, vector_col, "cell_top", _TreeRouter.sub_cell(centroids_sub, vector_col)
+    return _TreeRouter(centroids_top, centroids_sub).assign(
+        vectors.select(id_col, vector_col), vector_col
     )
-
-
-def tree_append(
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> None:
-    """Incremental tree maintenance: route new vectors to their
-    (cell_top, cell_sub) and append to the two-level store — only the
-    touched leaf directories gain files; existing data is never
-    rewritten. Drift is *measured*, not guessed: :func:`tree_drift_report`
-    tracks per-leaf row/byte skew and :func:`rebalance_tree` rebuilds
-    once the documented threshold is crossed."""
-    assigned = tree_assign(centroids_top, centroids_sub, new_vectors, id_col, vector_col)
-    _write_cells(assigned, _TreeRouter, path, mode="append")
 
 
 def tree_leaf_stats(spark: SparkSession, path: str) -> DataFrame:
     """Per-leaf (cell_top, cell_sub) row AND byte counts for a persisted
     two-level store — the measurement half of the incremental-ingest
-    maintenance story (r3 verdict #5): :func:`tree_append` routes new
-    vectors into existing leaves without refitting, so popular leaves
+    maintenance story (r3 verdict #5): an append (:func:`write_store`,
+    ``mode="append"``) routes new vectors into existing leaves without
+    refitting, so popular leaves
     fatten over time and probe cost skews. Row counts come from one
     aggregation over the store (partition-column-only scan — the
     parquet reader materializes cell_top/cell_sub from directory names,
@@ -1271,11 +1317,14 @@ def rebalance_tree(
         spark, path, skew_threshold
     ).collect()[0].needs_rebalance:
         return None
+    build = _rebuild_input(spark, path, _TreeRouter, id_col, vector_col)
     index = build_kmeans_tree_index(
-        **_rebuild_input(spark, path, _TreeRouter, id_col, vector_col),
-        k_top=k_top, k_sub=k_sub, **build_kwargs,
+        **build, k_top=k_top, k_sub=k_sub, **build_kwargs
     )
-    write_tree_partitioned(index, out_path)
+    write_store(
+        index.assigned, out_path, index.store.router, id_col=id_col,
+        vector_col=vector_col, keep_cols=build["keep_cols"],
+    )
     return index
 
 
@@ -2689,7 +2738,7 @@ def graph_append(
     vector_col: str = "embedding",
 ) -> DataFrame:
     """Incremental kNN-graph maintenance — the graph member of the
-    ingest family next to :func:`ivf_append` / :func:`tree_append`
+    ingest family next to :func:`ivf_append` / :func:`write_store`
     (and the HNSW insert rule re-expressed as batch dataflow): each
     NEW vector finds its ``degree`` nearest reachable nodes by beam
     search against the FROZEN graph (one :func:`graph_search` for the

@@ -54,13 +54,12 @@ from ydb_vector_search_demo_spark.operators.ann import (
     VectorStore,
     _Codec,
     _IvfRouter,
-    _TreeRouter,
     _argmin,
-    _cell_rows,
     _codebook,
     _sq_dists,
-    _write_cells,
     recall_at_k,
+    store_rows,
+    write_store,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
 
@@ -242,41 +241,6 @@ def _subspace_dists(
     return out
 
 
-def _pq_cols(
-    df: DataFrame, src_col: str, vector_col: str, codebooks: Codebooks,
-    rotation=None, codes_col="pq_codes", norm_col="vnorm", tmp="_opq_rotated",
-) -> tuple[DataFrame, dict[str, Column]]:
-    """The PQ codec's column set: (df', {codes_col, norm_col}) — codes of
-    ``src_col`` (the vector, or the IVF-PQ residual), rotated once into
-    the OPQ basis by :func:`_with_rotated` when a ``rotation`` is given,
-    and the exact float norm of the ORIGINAL ``vector_col``."""
-    rotated, rot_col = _with_rotated(df, src_col, rotation, tmp)
-    return rotated, {
-        codes_col: encode_expr(rot_col, codebooks),
-        norm_col: l2_norm(vector_col).cast("float"),
-    }
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: Codebooks,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    keep_cols: tuple = (),
-    rotation=None,
-) -> DataFrame:
-    """Ingest-side encoding: (id, m-byte codes, exact float norm). The
-    norm keeps cosine exact up to the reconstructed dot product, and is
-    computed on the ORIGINAL vector (a rotation preserves it anyway).
-    ``keep_cols`` carries metadata columns for filtered probes."""
-    rotated, cols = _pq_cols(
-        vectors, vector_col, vector_col, codebooks, rotation, codes_col, norm_col
-    )
-    return _cell_rows(rotated, id_col, cols, keep_cols=keep_cols)
-
-
 def adc_lut(
     query_vector: Sequence[float], codebooks: Codebooks, metric: str = "cosine"
 ) -> list[list[float]]:
@@ -356,24 +320,27 @@ def _query_lut(
 
 
 class PqCodec(_Codec):
-    """The PQ codec: ADC over the m-byte codes and the exact norm
-    (:func:`adc_score_col`). The query's lookup table and
-    norm are its per-query driver values:
+    """The PQ codec: the m-byte ``pq_codes`` of each vector (or of its
+    IVF residual) and the exact float norm ``vnorm`` of the ORIGINAL
+    vector (a rotation preserves it anyway), scored by ADC
+    (:func:`adc_score_col`). The query's lookup table and norm are its
+    per-query driver values:
 
-    * companion codes (``centroids=None`` — :func:`pq_encode`,
-      :func:`write_tree_pq`, the IVF layout ``stream_ivf_ingest``
-      writes): one global LUT of the (OPQ-``rotation``-rotated) query,
-      shared by every cell, so a streamed-in store is searchable with
-      zero refit;
-    * residual codes (``centroids`` = the IVF codebook —
-      :func:`write_ivfpq_store`, IVF routing only): one LUT per probed
+    * companion codes (``centroids=None``; any router, or none): codes
+      of the raw vector and one global LUT of the
+      (OPQ-``rotation``-rotated) query, shared by every cell, so a
+      streamed-in store is searchable with zero refit — the columns an
+      incremental ingest keeps fresh with frozen codebooks;
+    * residual codes (``centroids`` = the IVF codebook; IVF routing
+      only): codes of x − centroid[centroid_id] and one LUT per probed
       cell (:func:`_ivfpq_cell_lut`); a single-query probe's rows pick
       theirs by probe index, so the literal scales with nprobe, never
-      k_clusters.
+      k_clusters. The better bytes/recall point for a batch-built store.
 
-    Probe ranking and the exact rescore stay in the original basis;
-    ``rotation`` only rotates the LUTs. The store holds the ``pq_codes``
-    and ``vnorm`` columns of :func:`_pq_cols`."""
+    With a ``rotation`` the encoded vector is rotated into the OPQ
+    basis once, in its own projection (:func:`_with_rotated`). Probe
+    ranking and the exact rescore stay in the original basis;
+    ``rotation`` only rotates the codes and the LUTs."""
 
     fields = (
         StructField("_lut", ArrayType(ArrayType(DoubleType()))),
@@ -387,6 +354,17 @@ class PqCodec(_Codec):
         rotation=None,
     ):
         self.books, self.centroids, self.rotation = codebooks, centroids, rotation
+
+    def columns(self, df: DataFrame, vector_col: str):
+        src = vector_col
+        if self.centroids is not None:
+            src = "_res"
+            df = df.withColumn(src, _residual_expr(vector_col, self.centroids))
+        df, src = _with_rotated(df, src, self.rotation)
+        return df, {
+            "pq_codes": encode_expr(src, self.books),
+            "vnorm": l2_norm(vector_col).cast("float"),
+        }
 
     def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
         if self.centroids is None:
@@ -416,65 +394,6 @@ class PqCodec(_Codec):
 
     def score(self, metric: str, q: Column, lut: Column, qnorm: Column) -> Column:
         return adc_score_col("pq_codes", lut, metric, qnorm, "vnorm")
-
-
-def write_pq_store(
-    vectors: DataFrame,
-    codebooks: Codebooks,
-    path: str,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    keep_cols: tuple = (),
-    rotation=None,
-) -> None:
-    """Persist the PQ companion store (id, codes, norm). Composes with
-    the IVF layout exactly like quant.write_ivf_quantized — add the
-    centroid_id column before writing and partition by it."""
-    pq_encode(
-        vectors, codebooks, id_col=id_col, vector_col=vector_col,
-        keep_cols=keep_cols, rotation=rotation,
-    ).write.mode("overwrite").parquet(path)
-
-
-# --------------------------------------------------------------------------
-# PQ companions on the partitioned layouts (raw-vector codes, global LUT)
-# --------------------------------------------------------------------------
-#
-# These are the COMPANION-column compositions (r4 verdict, What's-missing
-# #3): PQ codes over the RAW vectors, carried alongside the cell
-# assignment in the IVF / tree directory layouts — the exact columns the
-# streaming ingest (streaming.ingest, pq_codebooks=...) maintains
-# incrementally with frozen codebooks. One global LUT serves every cell
-# (unlike the residual-encoded IVF-PQ store below, whose LUT is
-# per-probed-cell), so a streamed-in store is searchable with zero
-# refit. Residual IVF-PQ stays the better bytes/recall point for a
-# batch-built store; the companion variant is the one an incremental
-# ingest can keep fresh.
-
-
-def write_tree_pq(
-    index,
-    codebooks: Codebooks,
-    path: str,
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    keep_cols: tuple = (),
-    rotation=None,
-) -> None:
-    """PQ companion on the two-level tree layout: (id, codes, norm,
-    cell_top, cell_sub) partitioned by both cell levels — the tree
-    store's first quantized companion (r4 verdict, What's-missing #3).
-    ``index`` is an ``ann.KMeansTreeIndex``. ``keep_cols`` carries
-    metadata for filtered probes. ``rotation``: OPQ basis for
-    rotated-space codebooks (materialized once per row)."""
-    rotated, cols = _pq_cols(
-        index.assigned, index.vector_col, index.vector_col, codebooks,
-        rotation, codes_col, norm_col,
-    )
-    _write_cells(
-        _cell_rows(rotated, index.id_col, cols, _TreeRouter.fields, keep_cols),
-        _TreeRouter, path,
-    )
 
 
 # --------------------------------------------------------------------------
@@ -513,43 +432,6 @@ def train_ivfpq_codebooks(
     )
     return train_pq_codebooks(residuals, dim, m=m, k_star=k_star,
                               vector_col="_res", **train_kwargs)
-
-
-def ivfpq_encode(
-    index,
-    codebooks: Codebooks,
-    codes_col: str = "pq_codes",
-    norm_col: str = "vnorm",
-    keep_cols: tuple = (),
-    rotation=None,
-) -> DataFrame:
-    """(id, centroid_id, residual codes, exact norm) — one map-only
-    pass; written by cell (:func:`write_ivfpq_store`) this is the full
-    IVF-PQ store: a probe partition-prunes to nprobe directories and
-    scans m bytes + 4 per vector. ``keep_cols`` carries metadata for
-    filtered probes."""
-    res = index.assigned.withColumn(
-        "_res", _residual_expr(index.vector_col, index.centroids)
-    )
-    rotated, cols = _pq_cols(
-        res, "_res", index.vector_col, codebooks, rotation, codes_col, norm_col
-    )
-    return rotated.select(
-        F.col(index.id_col),
-        F.col("centroid_id"),
-        *[col.alias(name) for name, col in cols.items()],
-        *[F.col(c) for c in keep_cols],
-    )
-
-
-def write_ivfpq_store(
-    index, codebooks: Codebooks, path: str, keep_cols: tuple = (),
-    rotation=None,
-) -> None:
-    _write_cells(
-        ivfpq_encode(index, codebooks, keep_cols=keep_cols, rotation=rotation),
-        _IvfRouter, path,
-    )
 
 
 def _ivfpq_cell_lut(
@@ -612,7 +494,11 @@ def ivfpq_recall(
         embeddings, k_clusters=k_clusters, cache_key=cache_key
     )
     books = train_ivfpq_codebooks(index, dim, m=m, k_star=k_star, **train_kwargs)
-    write_ivfpq_store(index, books, tmp_path)
+    write_store(
+        index.assigned, tmp_path, index.store.router,
+        (PqCodec(books, index.centroids),), id_col=index.id_col,
+        vector_col=index.vector_col,
+    )
     approx = [
         r[0]
         for r in VectorStore(
@@ -673,7 +559,10 @@ def pq_recall(
     books = train_pq_codebooks(
         embeddings, dim, m=m, k_star=k_star, vector_col=vector_col, **train_kwargs
     )
-    encoded = pq_encode(embeddings, books, id_col=id_col, vector_col=vector_col)
+    encoded = store_rows(
+        embeddings, codecs=(PqCodec(books),), id_col=id_col,
+        vector_col=vector_col,
+    )
     lut = adc_lut(qv, books, metric)
     coarse_only = [
         r[0]
@@ -756,9 +645,9 @@ def opq_recall(
             embeddings, dim, m=m, k_star=k_star, seed=seed,
             vector_col=vector_col, rotation=rot, **train_kwargs,
         )
-        encoded = pq_encode(
-            embeddings, books, id_col=id_col, vector_col=vector_col,
-            rotation=rot,
+        encoded = store_rows(
+            embeddings, codecs=(PqCodec(books, rotation=rot),), id_col=id_col,
+            vector_col=vector_col,
         )
         cq = _maybe_rotate_q(qv, rot)
         lut = adc_lut(cq, books, metric)
@@ -1005,9 +894,9 @@ def refit_pq(
         vectors, dim=dim, m=m, k_star=k_star, seed=seed,
         vector_col=vector_col, rotation=rotation, **train_kwargs,
     )
-    write_pq_store(
-        vectors, new_books, out_path, id_col=id_col, vector_col=vector_col,
-        keep_cols=keep_cols, rotation=rotation,
+    write_store(
+        vectors, out_path, codecs=(PqCodec(new_books, rotation=rotation),),
+        id_col=id_col, vector_col=vector_col, keep_cols=keep_cols,
     )
     new_baseline = pq_quantization_mse(
         vectors, new_books, vector_col=vector_col, rotation=rotation
@@ -1092,9 +981,9 @@ def pq_maintenance_cycle(
         action = "refit_reencode"
     else:
         codes.unionByName(
-            pq_encode(
-                batch, books, id_col=id_col, vector_col=vector_col,
-                keep_cols=keep_cols,
+            store_rows(
+                batch, codecs=(PqCodec(books),), id_col=id_col,
+                vector_col=vector_col, keep_cols=keep_cols,
             )
         ).write.mode("overwrite").parquet(version_path)
         save_codebooks(spark, version_path, books, baseline)

@@ -48,11 +48,8 @@ from ydb_vector_search_demo_spark.functions.vector import (
 from ydb_vector_search_demo_spark.operators.ann import (
     VectorStore,
     _Codec,
-    _IvfRouter,
-    _TreeRouter,
-    _cell_rows,
-    _write_cells,
     recall_at_k,
+    store_rows,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
 
@@ -98,50 +95,6 @@ def dequantize_expr(q_col: Column | str, scale: Column | str) -> Column:
     return F.transform(to_double_array(q_col), lambda e: e * s)
 
 
-def _int8_cols(
-    vector_col: str, q_col="qvec", scale_col="qscale", scale_type="float"
-) -> dict[str, Column]:
-    """The int8 codec's column set: the quantized vector and its scale,
-    cast to ``scale_type`` (None keeps the DOUBLE scale of the
-    quantized-prefix store)."""
-    scale = int8_scale(vector_col)
-    return {
-        q_col: quantize_expr(vector_col, scale),
-        scale_col: scale if scale_type is None else scale.cast(scale_type),
-    }
-
-
-def _prefix_cols(vector_col: str, dims: int | None, rotation=None) -> dict[str, Column]:
-    """The prefix codec's column set: the leading ``dims`` coordinates
-    (Matryoshka) or, with a ``rotation``, the first ``dims`` rotated
-    coordinates (PCA/Hadamard basis; all of them for ``dims=None``).
-    Both are named ``prefix``, so a store serves one basis."""
-    if rotation is None:
-        return {"prefix": mrl_prefix(vector_col, dims)}
-    from ydb_vector_search_demo_spark.operators.rotation import rotate_expr
-
-    return {"prefix": rotate_expr(vector_col, rotation, dims)}
-
-
-def quantize_int8(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    q_col: str = "qvec",
-    scale_col: str = "qscale",
-    keep_cols: tuple = (),
-) -> DataFrame:
-    """Ingest-side int8 quantization: (id, ARRAY<TINYINT>, float scale).
-    One map-only pass; write the result with :func:`write_quantized_store`
-    and the coarse scan thereafter reads ~4× fewer bytes than float32.
-    ``keep_cols`` carries metadata columns (tenant, label, date) into
-    the quantized store so filtered coarse scans can push them down."""
-    return _cell_rows(
-        vectors, id_col, _int8_cols(vector_col, q_col, scale_col),
-        keep_cols=keep_cols,
-    )
-
-
 def coarse_distance(
     q_col: Column | str,
     scale_col: Column | str,
@@ -156,69 +109,30 @@ def coarse_distance(
     )
 
 
-def write_quantized_store(
-    embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    keep_cols: tuple = (),
-) -> None:
-    """Persist the int8 companion store. The float store stays where it
-    is — the pair (quantized store for the coarse scan, float store for
-    candidate rescore) is the serving layout. ``keep_cols`` carries
-    metadata columns so filtered coarse scans can push predicates into
-    the store."""
-    quantize_int8(
-        embeddings, id_col=id_col, vector_col=vector_col, keep_cols=keep_cols
-    ).write.mode("overwrite").parquet(path)
-
-
-# --------------------------------------------------------------------------
-# Composition with IVF: quantized centroid-partitioned store
-# --------------------------------------------------------------------------
-
-
-def write_ivf_quantized(index, path: str, keep_cols: tuple = ()) -> None:
-    """Quantized companion of ``ann.write_ivf_partitioned``: (id, qvec,
-    qscale, centroid_id) partitioned by ``centroid_id``. The two scan
-    levers MULTIPLY at the coarse stage — a probe reads
-    nprobe/k_clusters of the directories AND ~4× fewer bytes inside
-    them; the float store keeps serving the c·k-row rescore. This is
-    the realistic 100 TB serving layout. ``keep_cols`` carries metadata
-    columns for filtered probes."""
-    _write_int8_cells(index, _IvfRouter, path, keep_cols)
-
-
-def _write_int8_cells(index, router, path: str, keep_cols: tuple) -> None:
-    """(id, qvec, qscale, *cell columns, *keep_cols) of an assigned
-    index, written through the cell writer."""
-    rows = _cell_rows(
-        index.assigned, index.id_col, _int8_cols(index.vector_col),
-        router.fields, keep_cols,
-    )
-    _write_cells(rows, router, path)
-
-
-def write_tree_quantized(index, path: str, keep_cols: tuple = ()) -> None:
-    """int8 companion of ``ann.write_tree_partitioned`` — the two-level
-    analogue of :func:`write_ivf_quantized` (r4 verdict, What's-missing
-    #3: the tree store previously had no quantized companion): (id,
-    qvec, qscale) partitioned by (cell_top, cell_sub), so a probe
-    prunes BOTH directory levels and reads ~4× fewer bytes inside the
-    probed leaves. ``keep_cols`` carries metadata for filtered probes."""
-    _write_int8_cells(index, _TreeRouter, path, keep_cols)
-
-
 class Int8Codec(_Codec):
-    """The int8 codec: the coarse score of the ``qvec`` codes and their
-    ``qscale`` scale (:func:`coarse_distance_col`) — the int8 store of
-    :func:`quantize_int8` / :func:`write_ivf_quantized` /
-    :func:`write_tree_quantized`, or, with ``dims``, the ``qprefix``
-    codes of :func:`write_mrl_quantized_store` (the int8-quantized
-    Matryoshka prefix), scored against the query's ``dims``-prefix."""
+    """The int8 codec: the ``qvec`` codes of each vector and their
+    ``qscale`` scale (FLOAT), scored by :func:`coarse_distance_col`;
+    or, with ``dims``, the ``qprefix`` codes of the vector's
+    ``dims``-prefix and their DOUBLE ``qscale`` (the int8-quantized
+    Matryoshka prefix: d'/d × 1/4 of the float bytes, 16 of 64 dims →
+    16×), scored against the query's ``dims``-prefix. The prefix is
+    sliced once in its own projection before it is quantized."""
 
     def __init__(self, dims: int | None = None):
         self.dims = dims
+
+    def columns(self, df: DataFrame, vector_col: str):
+        if self.dims is None:
+            scale = int8_scale(vector_col)
+            return df, {
+                "qvec": quantize_expr(vector_col, scale),
+                "qscale": scale.cast("float"),
+            }
+        df = df.withColumn("_qprefix_src", mrl_prefix(vector_col, self.dims))
+        scale = int8_scale("_qprefix_src")
+        return df, {
+            "qprefix": quantize_expr("_qprefix_src", scale), "qscale": scale,
+        }
 
     def score(self, metric: str, q: Column, *_) -> Column:
         if self.dims is None:
@@ -231,49 +145,6 @@ class Int8Codec(_Codec):
 # --------------------------------------------------------------------------
 # 1-bit (sign) quantization: Hamming coarse pass
 # --------------------------------------------------------------------------
-
-
-def quantize_binary(
-    vectors: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    b_col: str = "bvec",
-) -> DataFrame:
-    """Sign-bit quantization: bit i of word w is 1 iff
-    ``x[w*32 + i] > 0``. Packed 32 bits per BIGINT word via an
-    ANSI-safe ``acc*2 + bit`` fold (no shiftleft-by-column, no sign-bit
-    overflow). ``dim`` is required — like the bucketed-cosine op, the
-    packing width is part of the schema and must not be probed from
-    data with a driver-side ``first()``."""
-    n_words = (int(dim) + BITS_PER_WORD - 1) // BITS_PER_WORD
-    v = to_double_array(vector_col)
-
-    def word(w: int) -> Column:
-        # bits folded high→low so bit index i lands at weight 2^i;
-        # F.get is 0-based and NULL out of range (tail word of a dim
-        # that is not a multiple of 32 pads with 0-bits). nanvl: Spark
-        # SQL orders NaN ABOVE every number (NaN > 0 is true, unlike
-        # IEEE/Python), so NaN elements must be normalized to 0 before
-        # the sign test or the packed bits diverge from
-        # pack_query_bits' driver-side rule (hypothesis-caught).
-        return F.aggregate(
-            F.sequence(F.lit(BITS_PER_WORD - 1), F.lit(0), F.lit(-1)),
-            F.lit(0).cast("bigint"),
-            lambda acc, i: acc * 2
-            + F.when(
-                F.nanvl(
-                    F.get(v, F.lit(w * BITS_PER_WORD) + i), F.lit(0.0)
-                )
-                > 0,
-                1,
-            ).otherwise(0),
-        )
-
-    return vectors.select(
-        F.col(id_col),
-        F.array(*[word(w) for w in range(n_words)]).alias(b_col),
-    )
 
 
 def pack_query_bits(query_vector: Sequence[float]) -> list[int]:
@@ -306,12 +177,48 @@ def hamming_distance_col(b_col: Column | str, qwords_col: Column) -> Column:
 
 
 class BinaryCodec(_Codec):
-    """The 1-bit codec: Hamming distance of the packed sign bits
-    ``bvec`` (:func:`quantize_binary`) to the query's bits, packed on
-    the driver (:func:`pack_query_bits`). The code is far lossier than
-    int8, so callers pass a wider ``rescore`` (16)."""
+    """The 1-bit codec: sign bits packed 32 per BIGINT word in ``bvec``
+    — bit i of word w is 1 iff ``x[w*32 + i] > 0`` — scored by Hamming
+    distance to the query's bits, packed on the driver
+    (:func:`pack_query_bits`). A write needs ``dim``: like the
+    bucketed-cosine op, the packing width is part of the schema and
+    must not be probed from data with a driver-side ``first()``. The
+    code is far lossier than int8, so callers pass a wider ``rescore``
+    (16)."""
 
     fields = (StructField("_qw", ArrayType(LongType())),)
+
+    def __init__(self, dim: int | None = None):
+        self.dim = dim
+
+    def columns(self, df: DataFrame, vector_col: str):
+        n_words = (int(self.dim) + BITS_PER_WORD - 1) // BITS_PER_WORD
+        v = to_double_array(vector_col)
+
+        def word(w: int) -> Column:
+            # an ANSI-safe ``acc*2 + bit`` fold (no shiftleft-by-column,
+            # no sign-bit overflow), bits folded high→low so bit index i
+            # lands at weight 2^i; F.get is 0-based and NULL out of range
+            # (tail word of a dim that is not a multiple of 32 pads with
+            # 0-bits). nanvl: Spark SQL orders NaN ABOVE every number
+            # (NaN > 0 is true, unlike IEEE/Python), so NaN elements must
+            # be normalized to 0 before the sign test or the packed bits
+            # diverge from pack_query_bits' driver-side rule
+            # (hypothesis-caught).
+            return F.aggregate(
+                F.sequence(F.lit(BITS_PER_WORD - 1), F.lit(0), F.lit(-1)),
+                F.lit(0).cast("bigint"),
+                lambda acc, i: acc * 2
+                + F.when(
+                    F.nanvl(
+                        F.get(v, F.lit(w * BITS_PER_WORD) + i), F.lit(0.0)
+                    )
+                    > 0,
+                    1,
+                ).otherwise(0),
+            )
+
+        return df, {"bvec": F.array(*[word(w) for w in range(n_words)])}
 
     def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
         return [(pack_query_bits(qv),)] * len(cells)
@@ -346,7 +253,9 @@ def quantized_recall(
         r[0] for r in knn_scores(embeddings, qv, k, metric, id_col=id_col,
                                  vector_col=vector_col).collect()
     ]
-    quantized = quantize_int8(embeddings, id_col=id_col, vector_col=vector_col)
+    quantized = store_rows(
+        embeddings, codecs=(Int8Codec(),), id_col=id_col, vector_col=vector_col
+    )
     coarse_only = [
         r[0]
         for r in quantized.select(
@@ -365,7 +274,10 @@ def quantized_recall(
     ]
     dim = len(qv)
     bin_rescore = 4 * int(rescore)
-    binarized = quantize_binary(embeddings, dim, id_col=id_col, vector_col=vector_col)
+    binarized = store_rows(
+        embeddings, codecs=(BinaryCodec(dim),), id_col=id_col,
+        vector_col=vector_col,
+    )
     bin_rescored = [
         r[0]
         for r in VectorStore(
@@ -420,8 +332,8 @@ def mrl_coarse_distance(
 
 class MrlCodec(_Codec):
     """The Matryoshka prefix codec: distance between the stored
-    ``dims``-prefix (the ``prefix`` column of :func:`write_mrl_store`,
-    or any ``source`` column or Column — e.g. ``mrl_prefix(vector_col,
+    ``dims``-prefix (the ``prefix`` column its ``columns`` writes, or
+    any ``source`` column or Column — e.g. ``mrl_prefix(vector_col,
     dims)`` to slice a float relation inline, the testing path with no
     byte saving) and the query's ``dims``-prefix. At 100 TB the coarse
     scan reads d'/d of the float bytes and full-width vectors are
@@ -431,25 +343,11 @@ class MrlCodec(_Codec):
         self.dims = int(dims)
         self.source = F.col(source) if isinstance(source, str) else source
 
+    def columns(self, df: DataFrame, vector_col: str):
+        return df, {"prefix": mrl_prefix(vector_col, self.dims)}
+
     def score(self, metric: str, q: Column, *_) -> Column:
         return distance(self.source, F.slice(q, 1, self.dims), metric)
-
-
-def write_mrl_store(
-    embeddings: DataFrame,
-    path: str,
-    dims: int = 16,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    keep_cols: Sequence[str] = (),
-) -> None:
-    """Persist the (id, dims-prefix) companion store — the byte lever
-    made physical: the coarse scan reads d'/d of the float bytes. The
-    full-width store stays where it is for candidate rescore (the same
-    pairing as write_quantized_store)."""
-    _cell_rows(
-        embeddings, id_col, _prefix_cols(vector_col, dims), keep_cols=keep_cols
-    ).write.mode("overwrite").parquet(path)
 
 
 def mrl_recall(
@@ -506,27 +404,6 @@ def mrl_recall(
         "dims INT, k INT, rescore INT, recall_coarse DOUBLE, "
         "recall_rescored DOUBLE",
     )
-
-
-def write_mrl_quantized_store(
-    embeddings: DataFrame,
-    path: str,
-    dims: int = 16,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    keep_cols: Sequence[str] = (),
-) -> None:
-    """The two byte levers COMPOSED: int8-quantize the ``dims``-prefix —
-    the persisted coarse store holds d'/d × 1/4 of the float bytes
-    (16 of 64 dims → 16×). The coarse scan stays a pure Column scan;
-    the full-width float store still serves the exact rescore."""
-    pref = _cell_rows(
-        embeddings, id_col, _prefix_cols(vector_col, dims), keep_cols=keep_cols
-    )
-    _cell_rows(
-        pref, id_col, _int8_cols("prefix", "qprefix", scale_type=None),
-        keep_cols=keep_cols,
-    ).write.mode("overwrite").parquet(path)
 
 
 # --------------------------------------------------------------------------

@@ -41,11 +41,10 @@ from ydb_vector_search_demo_spark.functions.vector import distance, dot
 from ydb_vector_search_demo_spark.operators.ann import (
     VectorStore,
     _Codec,
-    _cell_rows,
     recall_at_k,
+    write_store,
 )
 from ydb_vector_search_demo_spark.operators.knn import knn_scores, vector_literal
-from ydb_vector_search_demo_spark.operators.quant import _prefix_cols
 from ydb_vector_search_demo_spark.session import _evict, _get_or_write
 
 Rotation = list[list[float]]
@@ -202,7 +201,11 @@ class PcaCodec(_Codec):
     :func:`rotate_expr`, so a batch scores bit-identically to the
     single-query loop) — ``quant.MrlCodec`` with the basis learned
     instead of assumed. The coarse relation holds the ``prefix`` column
-    of :func:`write_rotated_store`; with ``inline_col`` the prefix is
+    its ``columns`` writes — the first ``dims`` rotated coordinates,
+    under the same name as ``quant.MrlCodec``'s, so a store serves one
+    basis; the store is append-maintainable with the same frozen
+    rotation (the map is data-independent once fitted, like the frozen
+    IVF centroids). With ``inline_col`` the prefix is
     instead rotated from that float column in its OWN projection
     (``_rp``): ``distance`` references its vector argument several
     times (dot + norm), and CollapseProject would otherwise inline the
@@ -213,6 +216,9 @@ class PcaCodec(_Codec):
 
     def __init__(self, rotation: Rotation, dims: int, inline_col: str | None = None):
         self.rotation, self.dims, self.inline_col = rotation, int(dims), inline_col
+
+    def columns(self, df: DataFrame, vector_col: str):
+        return df, {"prefix": rotate_expr(vector_col, self.rotation, self.dims)}
 
     def values(self, qv: list[float], cells: list[tuple], metric: str) -> list:
         return [(rotate_vector(qv, self.rotation[: self.dims]),)] * len(cells)
@@ -227,26 +233,6 @@ class PcaCodec(_Codec):
     def score(self, metric: str, q: Column, rq: Column) -> Column:
         prefix = "prefix" if self.inline_col is None else "_rp"
         return distance(F.col(prefix), rq, metric)
-
-
-def write_rotated_store(
-    embeddings: DataFrame,
-    path: str,
-    rotation: Rotation,
-    dims: int = 16,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    keep_cols: Sequence[str] = (),
-) -> None:
-    """Persist the (id, rotated d'-prefix) companion store under the
-    same ``prefix`` column name as ``quant.write_mrl_store`` — the
-    coarse scan reads d'/d of the float bytes, and the store is
-    append-maintainable with the same frozen rotation (the map is
-    data-independent once fitted, like the frozen IVF centroids)."""
-    _cell_rows(
-        embeddings, id_col, _prefix_cols(vector_col, dims, rotation),
-        keep_cols=keep_cols,
-    ).write.mode("overwrite").parquet(path)
 
 
 _STORE_CACHE: dict = {}
@@ -270,9 +256,9 @@ def get_or_write_rotated_store(
     the float bytes."""
     return _get_or_write(
         _STORE_CACHE, "ydbvs_rotated", (cache_key, int(dims), id_col, vector_col),
-        lambda path: write_rotated_store(
-            embeddings, path, rotation, dims=dims, id_col=id_col,
-            vector_col=vector_col,
+        lambda path: write_store(
+            embeddings, path, codecs=(PcaCodec(rotation, dims),),
+            id_col=id_col, vector_col=vector_col,
         ),
     )
 

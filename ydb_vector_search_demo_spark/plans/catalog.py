@@ -3489,9 +3489,9 @@ def _graph_append_fixed_oracle_sql() -> str:
 def q_ann_graph_append_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental graph maintenance under a full DuckDB oracle — the
     ingest member of the graph family (ann.graph_append), completing
-    the lifecycle symmetry with ivf_append / tree_append: every 50th
-    vector plays the incoming batch against the frozen pinned-bucket
-    corpus graph. DuckDB independently replays the batch beam search
+    the lifecycle symmetry with the store appends (ann.write_store,
+    ivf_append): every 50th vector plays the incoming batch against
+    the frozen pinned-bucket corpus graph. DuckDB independently replays the batch beam search
     (one graph_search for all new nodes), the per-node degree cut,
     the bidirectional link insertion and the global (score, dst)
     re-prune — every edge of the updated graph is checked, including
@@ -3671,7 +3671,7 @@ def q_quant_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = assigned.filter(
         F.col("centroid_id").isin([int(c) for c in _IVF_FIXED_PROBED])
     )
-    qz = quant.quantize_int8(pruned)
+    qz = ann.store_rows(pruned, codecs=(quant.Int8Codec(),))
     pool = (
         qz.select(
             "vec_id",
@@ -3898,8 +3898,9 @@ def _ivfpq_fixed_oracle_sql(k: int = 5, rescore: int = 4) -> str:
 def q_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The residual IVF-PQ SERVING path end to end against a full
     DuckDB oracle: pinned centroids partition the store
-    (write_ivfpq_store — actually written and probed through
-    a VectorStore with pq.PqCodec, the real parquet serving path),
+    (ann.write_store with a residual pq.PqCodec — actually written and
+    probed through a VectorStore with the same codec, the real parquet
+    serving path),
     residual codes from pinned codebooks, nprobe=2 partition pruning,
     per-cell LUT ADC over 4 bytes + norm per vector, coarse
     top-(rescore·k), exact euclidean rescore — every stage of the
@@ -3918,7 +3919,10 @@ def q_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     path = f"/tmp/spark_graft_ivfpq_fixed_{tag}"
-    pq.write_ivfpq_store(index, _IVFPQ_FIXED_BOOKS, path)
+    ann.write_store(
+        index.assigned, path, index.store.router,
+        (pq.PqCodec(_IVFPQ_FIXED_BOOKS, _IVF_FIXED_CENTS),),
+    )
     out = ann.VectorStore(
         spark.read.parquet(path), ann._IvfRouter(_IVF_FIXED_CENTS),
         pq.PqCodec(_IVFPQ_FIXED_BOOKS, _IVF_FIXED_CENTS), embs,
@@ -4327,7 +4331,7 @@ def q_quant_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ydb_vector_search_demo_spark.operators import quant
 
     embs = _t(spark, sf_dir, "embeddings")
-    b = quant.quantize_binary(embs, dim=len(QV))
+    b = ann.store_rows(embs, codecs=(quant.BinaryCodec(len(QV)),))
     qw = quant.pack_query_bits(QV)
     return (
         b.select(
@@ -5208,9 +5212,11 @@ def q_pq_opq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = _t(spark, sf_dir, "embeddings")
     lut = pq.adc_lut(_OPQ_QROT, _OPQ_FIXED_BOOKS, "euclidean")
-    # pq_encode's rotation seam materializes the rotated vector ONCE
+    # the PQ codec's rotation seam materializes the rotated vector ONCE
     # (see pq._with_rotated) — the full ingest-side OPQ path under test
-    enc = pq.pq_encode(embs, _OPQ_FIXED_BOOKS, rotation=_OPQ_H)
+    enc = ann.store_rows(
+        embs, codecs=(pq.PqCodec(_OPQ_FIXED_BOOKS, rotation=_OPQ_H),)
+    )
     return (
         enc.select(
             "vec_id",
@@ -5369,7 +5375,7 @@ def q_pq_refit_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     baseline = pq.pq_quantization_mse(embs, books)
     v1 = f"{tmp}/v1"
-    pq.write_pq_store(embs, books, v1)
+    ann.write_store(embs, v1, codecs=(pq.PqCodec(books),))
     pq.save_codebooks(spark, v1, books, baseline)
     stores.publish_store(spark, root, v1)
 

@@ -1,12 +1,13 @@
 """Streaming vector-store ingest: new embeddings arrive as files, get
-routed to their index cell (and optionally int8-quantized) map-side,
-and append to the partitioned store continuously — the streaming
-completion of the batch ``ivf_append``/``tree_append`` story
-(operators.ann) and the store-ingest half of the reference's
-(disabled) index path [API-inferred, /root/reference/app.py:37].
+routed to their index cell (and optionally encoded into companion
+formats) map-side, and append to the partitioned store continuously —
+the streaming twin of the batch append (``ann.write_store`` with
+``mode="append"``, ``ann.ivf_append``) and the store-ingest half of the
+reference's (disabled) index path [API-inferred, the reference's
+app.py:37].
 
-Everything between source and sink is a stateless projection
-(``tree_assign``/``ivf_assign`` and the codec columns are pure Column
+Everything between source and sink is a stateless projection (the
+router's assignment and the codecs' column sets are pure Column
 expressions), so this runs as a stateless streaming query: no
 watermark, no state store, exactly-once file-sink semantics via the
 checkpoint, and each micro-batch touches only the leaf directories
@@ -15,79 +16,19 @@ plan literals fixed at query start, and when drift accumulates
 (`ann.tree_drift_report`) a batch `rebalance_tree` rewrites the store
 — the classic streaming-ingest / batch-reorg split.
 The stream shares the batch write side (operators.ann, "Write side"):
-the routers' assignment, the codec column sets (:func:`_with_companions`)
-and one ``writeStream`` body (:func:`_stream_cells`)."""
+one row projection (``ann.store_rows``) and one ``writeStream`` body
+(:func:`_stream_cells`), behind one entry point, :func:`stream_ingest`."""
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ydb_vector_search_demo_spark.operators.ann import (
-    _IvfRouter,
-    _TreeRouter,
-    ivf_assign,
-    tree_assign,
-)
-from ydb_vector_search_demo_spark.operators.pq import _pq_cols
-from ydb_vector_search_demo_spark.operators.quant import (
-    _int8_cols,
-    _prefix_cols,
-)
-
-
-def _with_companions(
-    assigned: DataFrame,
-    quantize: bool,
-    pq_codebooks,
-    vector_col: str = "embedding",
-    mrl_dims: int | None = None,
-    rotation=None,
-    rotation_dims: int | None = None,
-    pq_rotation=None,
-) -> DataFrame:
-    """Optional quantized companion columns, computed in the same
-    map-only micro-batch pass as the cell routing: int8 (qvec, qscale),
-    PQ (pq_codes, vnorm) with FROZEN codebooks travelling as plan
-    literals, a Matryoshka ``mrl_dims``-prefix column, or a
-    learned-rotation ``rotation_dims``-prefix (the fitted PCA/Hadamard
-    basis is data-independent once fitted, so it freezes into plan
-    literals exactly like the codebooks) — the ingest stays refit-free;
-    codebook/basis refresh is the batch rebalance job's concern,
-    exactly like the centroids. With the prefix column the streamed-in
-    store serves MRL coarse searches (``quant.MrlCodec``) or
-    rotated-prefix searches (``rotation.PcaCodec``) through
-    ``ann.VectorStore`` directly — every precision of the ladder is maintained
-    incrementally. ``mrl_dims`` and ``rotation`` are mutually
-    exclusive: both write the ``prefix`` column and a store can only
-    serve one basis. The columns are the batch writers' codec column
-    sets (``quant._int8_cols``, ``pq._pq_cols``, ``quant._prefix_cols``),
-    so a streamed store holds the bytes a batch write would."""
-    if mrl_dims is not None and rotation is not None:
-        raise ValueError(
-            "mrl_dims and rotation both write the 'prefix' companion; "
-            "a store serves one basis — pick one"
-        )
-    if quantize:
-        assigned = assigned.withColumns(_int8_cols(vector_col))
-    if pq_codebooks is not None:
-        # pq_rotation: the codebooks were OPQ-trained (pq.train_pq_
-        # codebooks(rotation=...)); the frozen basis rotates each
-        # streamed vector before encoding, materialized ONCE in its
-        # own projection (pq._with_rotated rationale). The probe side
-        # passes the same basis to pq.PqCodec.
-        rotated, cols = _pq_cols(
-            assigned, vector_col, vector_col, pq_codebooks, pq_rotation,
-            tmp="_opq_rot",
-        )
-        assigned = rotated.withColumns(cols).drop("_opq_rot")
-    if mrl_dims is not None:
-        assigned = assigned.withColumns(_prefix_cols(vector_col, mrl_dims))
-    if rotation is not None:
-        assigned = assigned.withColumns(
-            _prefix_cols(vector_col, rotation_dims, rotation)
-        )
-    return assigned
+from ydb_vector_search_demo_spark import stores
+from ydb_vector_search_demo_spark.operators.ann import store_rows
+from ydb_vector_search_demo_spark.session import _get_or_build
 
 
 def read_embeddings_stream(
@@ -104,17 +45,15 @@ def read_embeddings_stream(
 
 
 def _stream_cells(
-    assigned: DataFrame, router, store_path: str, checkpoint_dir: str,
-    available_now: bool, **companions,
+    rows: DataFrame, router, store_path: str, checkpoint_dir: str,
+    available_now: bool,
 ):
-    """The one streaming cell writer: the routed stream plus its
-    companion columns (:func:`_with_companions`), appended by the file
+    """The one streaming cell writer: store rows appended by the file
     sink partitioned by the router's cell columns (``router.fields``)
     — the streaming twin of ``ann._write_cells``. Returns the started
     StreamingQuery."""
     writer = (
-        _with_companions(assigned, **companions)
-        .writeStream.format("parquet")
+        rows.writeStream.format("parquet")
         .option("path", store_path)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy(*router.fields)
@@ -124,58 +63,31 @@ def _stream_cells(
     return writer.start()
 
 
-def stream_ivf_ingest(
+def stream_ingest(
     stream: DataFrame,
-    centroids: list[list[float]],
+    router,
     store_path: str,
     checkpoint_dir: str,
-    quantize: bool = False,
-    pq_codebooks=None,
-    mrl_dims: int | None = None,
-    rotation=None,
-    rotation_dims: int | None = None,
-    pq_rotation=None,
+    codecs=(None,),
     available_now: bool = True,
 ):
-    """Continuous IVF ingest: map-only centroid routing (+ optional
-    int8 and/or PQ companion columns, frozen codebooks — see
-    :func:`_with_companions`), appended to the centroid-partitioned
-    store. Returns the started StreamingQuery (caller awaits). With
-    ``pq_codebooks`` set, the best bytes/recall point of the r4
-    quantization ladder is maintained incrementally — coarse searches
-    (``ann.VectorStore`` with ``pq.PqCodec``) run directly on the
-    streamed-in store."""
+    """Continuous vector-store ingest: each micro-batch routed map-side
+    by ``router`` (``ann._IvfRouter`` or ``ann._TreeRouter``) and
+    encoded into the store's formats — ``codecs``, the float vector
+    (``None``) plus any companion codecs, e.g. ``(None,
+    quant.Int8Codec(), pq.PqCodec(books))`` — by the batch write's one
+    row projection (``ann.store_rows``), then appended to the
+    cell-partitioned store. Codebooks, centroids and fitted bases
+    (PCA/Hadamard ``rotation.PcaCodec``, an OPQ ``PqCodec`` rotation)
+    freeze into plan literals at query start, so the ingest stays
+    refit-free and a streamed store holds the bytes a batch write
+    would; every precision of the ladder is served from it directly
+    (``ann.VectorStore``). Two formats writing one column (e.g. an MRL
+    and a rotated prefix) is a ``ValueError``. Returns the started
+    StreamingQuery (caller awaits)."""
     return _stream_cells(
-        ivf_assign(centroids, stream), _IvfRouter, store_path, checkpoint_dir,
-        available_now, quantize=quantize, pq_codebooks=pq_codebooks,
-        mrl_dims=mrl_dims, rotation=rotation, rotation_dims=rotation_dims,
-        pq_rotation=pq_rotation,
-    )
-
-
-def stream_tree_ingest(
-    stream: DataFrame,
-    centroids_top: list[list[float]],
-    centroids_sub: list[list[list[float]]],
-    store_path: str,
-    checkpoint_dir: str,
-    quantize: bool = False,
-    pq_codebooks=None,
-    mrl_dims: int | None = None,
-    rotation=None,
-    rotation_dims: int | None = None,
-    pq_rotation=None,
-    available_now: bool = True,
-):
-    """Continuous two-level-tree ingest: (cell_top, cell_sub) routing
-    map-side, appended to the two-level directory layout — with the
-    same optional int8/PQ companion columns as the IVF path, so the
-    tree store composes with the quantized coarse scans too."""
-    return _stream_cells(
-        tree_assign(centroids_top, centroids_sub, stream), _TreeRouter,
-        store_path, checkpoint_dir, available_now, quantize=quantize,
-        pq_codebooks=pq_codebooks, mrl_dims=mrl_dims, rotation=rotation,
-        rotation_dims=rotation_dims, pq_rotation=pq_rotation,
+        store_rows(stream, router, codecs), router, store_path,
+        checkpoint_dir, available_now,
     )
 
 
@@ -197,7 +109,7 @@ def stream_bm25_ingest(
     always see a complete index equal to a full rebuild over
     everything ingested so far (the batch append's equality contract).
 
-    Unlike the vector ingests above this is NOT a file-sink append —
+    Unlike the vector ingest above this is NOT a file-sink append —
     publishing a new version per micro-batch is a metadata swap, the
     streaming analogue of the continuous-aggregate refresh
     (events_rollup_serve). Exactly-once comes from the foreachBatch
@@ -209,8 +121,6 @@ def stream_bm25_ingest(
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        from ydb_vector_search_demo_spark import stores
-
         if stores.current_store_path(spark, root) is None:
             idx = R.build_bm25_index(
                 batch_df, text_col=text_col, id_col=id_col,
@@ -265,7 +175,6 @@ def stream_scd2_ingest(
     the publish cadence batches micro-batches (trigger interval), the
     same continuous-aggregate refresh economics as
     events_rollup_serve. Returns the writer (caller starts/awaits)."""
-    from ydb_vector_search_demo_spark import stores
     from ydb_vector_search_demo_spark.pipeline import rag
 
     ups_schema = base.select(
@@ -353,7 +262,9 @@ def _scd2_meta_path(hbase_dir: str) -> str:
 # version dirs). Caching them turns the per-micro-batch resolve's
 # metadata cost (a JVM meta-file read + a parquet schema inference per
 # call) into one read per version. This caches METADATA keyed on the
-# store's own immutable layout — never query results.
+# store's own immutable layout — never query results. The schema cache
+# is filled through the locked session get-or-build
+# (``session._get_or_build``), so concurrent resolves infer once.
 _SCD2_META_CACHE: dict = {}
 _SCD2_SCHEMA_CACHE: dict = {}
 
@@ -361,46 +272,27 @@ _SCD2_SCHEMA_CACHE: dict = {}
 def _scd2_store_reader(spark: SparkSession, hdir: str):
     """Partitioned store read with the version dir's cached schema —
     skips per-call footer-based schema inference."""
-    schema = _SCD2_SCHEMA_CACHE.get(hdir)
-    if schema is None:
-        schema = spark.read.parquet(hdir).schema
-        _SCD2_SCHEMA_CACHE[hdir] = schema
+    schema = _get_or_build(
+        _SCD2_SCHEMA_CACHE, hdir, lambda: spark.read.parquet(hdir).schema
+    )
     return spark.read.schema(schema).parquet(hdir)
 
 
 def _read_scd2_meta(spark: SparkSession, hbase_dir: str) -> dict:
-    import json as _json
-
     cached = _SCD2_META_CACHE.get(hbase_dir)
     if cached is not None:
         return dict(cached)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    path = jvm.org.apache.hadoop.fs.Path(_scd2_meta_path(hbase_dir))
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    stream = fs.open(path)
-    try:
-        meta = _json.loads(
-            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        )
-    finally:
-        stream.close()
+    jvm, path, fs = stores._fs(spark, _scd2_meta_path(hbase_dir))
+    meta = json.loads(stores._read_file(jvm, fs, path))
     _SCD2_META_CACHE[hbase_dir] = dict(meta)
     return meta
 
 
 def _write_scd2_meta(spark: SparkSession, hbase_dir: str, meta: dict) -> None:
-    import json as _json
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    path = jvm.org.apache.hadoop.fs.Path(_scd2_meta_path(hbase_dir))
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    out = fs.create(path, True)
-    try:
-        out.write(_json.dumps(meta).encode("utf-8"))
-    finally:
-        out.close()
+    jvm, path, fs = stores._fs(spark, _scd2_meta_path(hbase_dir))
+    if fs.exists(path):
+        fs.delete(path, False)
+    stores._write_file(jvm, fs, path, json.dumps(meta).encode("utf-8"))
     # keep the write-once cache coherent even if a caller re-writes
     # meta before publishing (the cache key is the version dir path)
     _SCD2_META_CACHE[hbase_dir] = dict(meta)
@@ -410,10 +302,7 @@ def _scd2_list_delta_ids(spark: SparkSession, ddir: str) -> list:
     """Batch ids of the existing delta directories (Hadoop FS listing,
     so any scheme the store itself supports works — never a
     local-only os.listdir)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    path = jvm.org.apache.hadoop.fs.Path(ddir)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    _, path, fs = stores._fs(spark, ddir)
     if not fs.exists(path):
         return []
     out = []
@@ -443,7 +332,6 @@ def init_scd2_base(
     the manifest publish. The one O(store) pass, paid once (the
     bucketed-join layout-write convention); every subsequent publish
     is churn-bound."""
-    from ydb_vector_search_demo_spark import stores
     from ydb_vector_search_demo_spark.pipeline import rag
 
     hroot = f"{root}/hbase"
@@ -505,7 +393,6 @@ def _scd2_resolve(
     churn buckets it already resolved, so one micro-batch pays the
     manifest/meta metadata reads and the churn-key job exactly once
     (guide §5 driver latency); readers omit them and resolve here."""
-    from ydb_vector_search_demo_spark import stores
 
     hroot = f"{root}/hbase"
     if hdir is None:
@@ -664,7 +551,6 @@ def apply_scd2_batch(
     pointer + meta are read once and passed through the resolve
     instead of being re-read per helper. One micro-batch is therefore
     one keys job + one delta-write job."""
-    from ydb_vector_search_demo_spark import stores
     from ydb_vector_search_demo_spark.pipeline import rag
 
     spark = batch_df.sparkSession
@@ -794,7 +680,6 @@ def compact_scd2_history(
     the partial write is permanent). Pass it whenever the ingest query
     may not have terminated cleanly; without it the caller MUST ensure
     the stream is stopped with all written deltas committed."""
-    from ydb_vector_search_demo_spark import stores
 
     hroot = f"{root}/hbase"
     hdir = stores.current_store_path(spark, hroot)
