@@ -808,3 +808,85 @@ def test_search_with_summary_runs_at_most_two_jobs(spark):
     assert len(rows) == 1
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 2, jobs
+
+
+def _leaf_scans(df) -> list[tuple[str, str]]:
+    """(class, description) of every leaf of ``df``'s executed plan,
+    looking through adaptive plans and their query stages; ``df`` has
+    run, so adaptive plans are final."""
+    leaves = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if "AdaptiveSparkPlan" in cls:
+            stack.append(node.executedPlan())
+            continue
+        if "QueryStage" in cls and "Reused" not in cls:
+            stack.append(node.plan())
+            continue
+        children = node.children()
+        if children.size() == 0:
+            leaves.append((cls, node.toString()))
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+    return leaves
+
+
+def _parquet_embedding_scans(leaves) -> list[str]:
+    # a leaf's description is truncated before its path; its output names
+    # the embedding column
+    return [s for cls, s in leaves if cls == "FileSourceScanExec" and "embedding#" in s]
+
+
+def test_search_statement_reads_resident_embeddings(spark):
+    """A steady-state request within ``rag.RESIDENT_SHARE`` of the free
+    storage memory is one statement: the embeddings come from the
+    handle's in-memory relation (no parquet scan of them), one
+    TakeOrderedAndProject keeps the top-k and one BroadcastHashJoin
+    attaches the payloads."""
+    from ydb_vector_search_demo_spark.functions.vector import distance_sql
+    from ydb_vector_search_demo_spark.pipeline import rag
+
+    query = "как оформить возврат"
+    rag.search_with_summary(spark, SF_ORACLE, query).collect()  # resolves the store
+    handle = rag._STORE_HANDLES[(spark, SF_ORACLE)]
+    assert handle.resident is not None
+    score = distance_sql("embedding", rag.embed_query_stub(query), "cosine")
+    df = rag._scored_docs(handle, handle.resident_view, score, 5)
+    assert len(df.collect()) == 5
+    leaves = _leaf_scans(df)
+    assert any(cls == "InMemoryTableScanExec" for cls, _ in leaves), leaves
+    assert not _parquet_embedding_scans(leaves), leaves
+    assert _count_exec_nodes(df, "TakeOrderedAndProject") == 1
+    assert _count_exec_nodes(df, "BroadcastHashJoin") == 1
+
+
+def test_search_statement_above_resident_share_reads_parquet(spark, tmp_path, monkeypatch):
+    """A store whose bytes exceed ``rag.RESIDENT_SHARE`` of the free
+    storage memory (here: a share of 0) persists nothing; the same
+    statement scans its embeddings from parquet and serves the same
+    prompt as a resident store."""
+    import shutil
+
+    from ydb_vector_search_demo_spark.pipeline import rag
+
+    query = "как оформить возврат"
+    d = str(tmp_path)
+    for name in ("documents", "embeddings"):
+        shutil.copy(f"{SF_ORACLE}/{name}.parquet", d)
+    want = rag.search_with_summary(spark, SF_ORACLE, query).collect()
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    monkeypatch.setattr(rag, "RESIDENT_SHARE", 0.0)
+    assert rag.search_with_summary(spark, d, query).collect() == want
+    handle = rag._STORE_HANDLES[(spark, d)]
+    assert handle.resident is None
+    assert handle.resident_view == handle.embs_view
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
+    score = rag._score_sql(query, "cosine", rag.embed_query_stub)
+    df = rag._scored_docs(handle, handle.resident_view, score, 5)
+    assert len(df.collect()) == 5
+    leaves = _leaf_scans(df)
+    assert not any(cls == "InMemoryTableScanExec" for cls, _ in leaves), leaves
+    assert _parquet_embedding_scans(leaves), leaves
+    rag.clear_store_cache()

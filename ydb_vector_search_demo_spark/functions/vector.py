@@ -4,11 +4,23 @@ The reference delegates distance computation to the store's server-side
 ``Knn::*`` functions behind ``similarity_search_by_vector_with_score``
 (/root/reference/app.py:124); its public strategy surface offers cosine
 similarity/distance, inner product, Euclidean and Manhattan. Here each
-metric is a pure Column expression built from Spark's higher-order array
-functions (``zip_with``/``aggregate``/``transform``) — JVM-side, no UDF,
-fully inside whole-stage codegen, so a distance scan over 100 TB of
+metric is a fold over Spark's higher-order array functions
+(``zip_with``/``aggregate``/``transform``) — JVM-side, no UDF, fully
+inside whole-stage codegen, so a distance scan over 100 TB of
 ``ARRAY<FLOAT>`` never leaves Tungsten.
 
+Each metric exists in two spellings of the same fold:
+
+* :func:`distance_sql` renders it as SQL text over column names and
+  driver-side sequences (one array literal each, :func:`_sql_literal`).
+  ``distance`` parses it in one ``F.expr`` call, where the Column form
+  costs ~90 py4j calls; a serving statement (``pipeline.rag``) embeds the
+  text directly. Against a sequence, cosine takes the sequence's norm
+  folded on the driver in the same order and bound as one literal.
+* The Column functions below (:data:`METRICS`) fold arbitrary Column
+  operands: codec prefixes, dequantized or rotated vectors.
+
+Both spellings give bit-identical scores (tests/test_distance_sql.py).
 All math is done in DOUBLE regardless of the storage element type
 (float32 on disk) so results are reproducible against the DuckDB oracle
 (SURVEY.md §7.4): elements are cast to double *before* any arithmetic,
@@ -17,6 +29,9 @@ functions to the last ulp in practice.
 """
 
 from __future__ import annotations
+
+import math
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -90,11 +105,98 @@ METRICS = {
 }
 
 
-def distance(a: ColumnOrName, b: ColumnOrName, metric: str = "cosine") -> Column:
+def _double_sql(x: float) -> str:
+    x = float(x)
+    if math.isnan(x) or math.isinf(x):
+        # a string cast is nullable; coalesce to a literal keeps the
+        # element non-nullable, the type F.lit gives
+        word = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+        return f"coalesce(CAST('{word}' AS DOUBLE), 0D)"
+    return f"{x!r}D"
+
+
+def _sql_literal(x, integers: bool = False) -> str:
+    """A driver-side value as SQL text: nested sequences as nested
+    ``array(...)``, leaves as doubles (``repr`` is the shortest decimal
+    that round-trips, so each parses back to the identical double) or,
+    with ``integers``, as whole numbers."""
+    if isinstance(x, (list, tuple)):
+        return "array(" + ", ".join(_sql_literal(e, integers) for e in x) + ")"
+    return str(int(x)) if integers else _double_sql(x)
+
+
+def _name_sql(name: str) -> str:
+    """A column name as ``F.col`` reads it: dots separate struct fields,
+    and a name that already carries backticks is taken as written."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+# Operand of distance_sql: a column name or a driver-side vector.
+NameOrSequence = str | Sequence[float]
+
+
+def _array_sql(x: NameOrSequence) -> str:
+    body = _name_sql(x) if isinstance(x, str) else _sql_literal([float(v) for v in x])
+    return f"CAST({body} AS array<double>)"
+
+
+def _fold_sql(a: NameOrSequence, b: NameOrSequence, term: str) -> str:
+    """``term`` over the pairs (x, y) of ``a`` and ``b``, summed left to
+    right from 0 — the fold of :func:`dot` and the distances above."""
+    return (
+        f"aggregate(zip_with({_array_sql(a)}, {_array_sql(b)}, (x, y) -> {term}), "
+        "0D, (acc, x) -> acc + x)"
+    )
+
+
+def _norm_sql(a: NameOrSequence) -> str:
+    """:func:`l2_norm`; a driver-side vector's norm is folded here in the
+    same order (a sequential float sum, then the correctly rounded
+    square root) and bound as one literal."""
+    if isinstance(a, str):
+        return f"sqrt({_fold_sql(a, a, 'x * y')})"
+    total = 0.0
+    for v in a:
+        total += float(v) * float(v)
+    return _double_sql(math.sqrt(total))
+
+
+def dot_sql(a: NameOrSequence, b: NameOrSequence) -> str:
+    """:func:`dot` as SQL text."""
+    return _fold_sql(a, b, "x * y")
+
+
+def distance_sql(a: NameOrSequence, b: NameOrSequence, metric: str = "cosine") -> str:
+    """The named metric's distance as SQL text, each operand a column
+    name or a driver-side vector; the same fold, in the same order, as
+    the Column function in :data:`METRICS`."""
+    if metric == "cosine":
+        return f"1D - try_divide({dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
+    if metric == "euclidean":
+        return f"sqrt({_fold_sql(a, b, '(x - y) * (x - y)')})"
+    if metric == "manhattan":
+        return _fold_sql(a, b, "abs(x - y)")
+    if metric == "inner_product":
+        return f"-({dot_sql(a, b)})"
+    raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
+
+
+def distance(
+    a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float],
+    metric: str = "cosine",
+) -> Column:
     """Distance under the named metric; ascending order == most similar first.
+
+    Names and driver-side vectors are parsed from :func:`distance_sql`
+    in one call; once an operand is a Column (a codec prefix, a
+    dequantized or rotated vector), both take the Column fold.
 
     Mirrors the pluggable-strategy requirement of SURVEY.md §7.4 (the
     reference deployment yields a distance — lower is better)."""
+    if not isinstance(a, Column) and not isinstance(b, Column):
+        return F.expr(distance_sql(a, b, metric))
     try:
         return METRICS[metric](a, b)
     except KeyError:

@@ -513,7 +513,7 @@ class VectorStore:
             coarse = _apply_pred(base, predicate).crossJoin(
                 F.broadcast(queries.select(query_id_col, query_vec_col))
             )
-            q = F.col(query_vec_col)
+            q = query_vec_col
         else:
             level = None if self.router is None else self.router.levels(
                 nprobe=nprobe, nprobe_top=nprobe_top, nprobe_sub=nprobe_sub
@@ -525,7 +525,7 @@ class VectorStore:
                 base, self.router, level, metric, queries, query_id_col,
                 query_vec_col, predicate, fields, extra,
             )
-            q = F.col("_qv")
+            q = "_qv"
         if codec is None:
             scored = coarse.select(
                 F.col(query_id_col), F.col(self.id_col),
@@ -535,7 +535,7 @@ class VectorStore:
                 scored, k, query_id_col, self.id_col, score_col, rank_col
             )
         return _batch_coarse_rescore(
-            coarse, codec.score(metric, q, *[F.col(f.name) for f in fields]),
+            coarse, codec.score(metric, F.col(q), *[F.col(f.name) for f in fields]),
             self.embeddings, queries, k, rescore, metric, query_id_col,
             query_vec_col, self.id_col, self.vector_col, score_col, rank_col,
         )
@@ -1617,7 +1617,7 @@ def _batch_coarse_rescore(
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            distance(vector_col, F.col(query_vec_col), metric).alias(score_col),
+            distance(vector_col, query_vec_col, metric).alias(score_col),
         )
     )
     return _batch_topk(exact, k, query_id_col, id_col, score_col, rank_col)
@@ -1916,7 +1916,7 @@ def knn_graph_bucketed(
             F.col("_na") * F.col("_nb"),
         )
     else:
-        score_col = distance(F.col("_va"), F.col("_vb"), metric)
+        score_col = distance("_va", "_vb", metric)
     join_keys = ["_bk"]
     if max_bucket:
         # one-row action: plane literals need the vector dimension.
@@ -2283,7 +2283,7 @@ def knn_graph_multiprobe(
     scored = (
         a.join(b, on="_bk")
         .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", distance(F.col("_va"), F.col("_vb"), metric).alias("score"))
+        .select("src", "dst", distance("_va", "_vb", metric).alias("score"))
     )
     w = Window.partitionBy("src").orderBy(
         F.col("score").asc_nulls_last(), F.col("dst").asc()
@@ -2343,7 +2343,7 @@ def nn_descent(
         graph.select("src", "dst", "score")
         if has_score
         else graph.join(emb_a, on="src").join(emb_b, on="dst").select(
-            "src", "dst", distance(F.col("_va"), F.col("_vb"), metric).alias("score")
+            "src", "dst", distance("_va", "_vb", metric).alias("score")
         )
     ).persist()
     cur.count()
@@ -2367,7 +2367,7 @@ def nn_descent(
             .join(emb_b, on="dst")
             .select(
                 "src", "dst",
-                distance(F.col("_va"), F.col("_vb"), metric).alias("score"),
+                distance("_va", "_vb", metric).alias("score"),
             )
         )
         merged = cur.unionByName(scored).dropDuplicates(["src", "dst"])
@@ -2544,7 +2544,7 @@ def graph_search_visited(
     emb = embeddings.select(
         F.col(id_col).alias("__gid"), F.col(vector_col).alias("__gv")
     )
-    score = distance(F.col("__gv"), F.col("query_vec"), metric)
+    score = distance("__gv", "query_vec", metric)
     entries = emb.filter(F.col("__gid").isin([int(i) for i in entry_ids]))
     # Round 0 (the entry scoring) is checkpointed so `visited` starts
     # from a materialized leaf; each later round appends one more
@@ -2954,7 +2954,7 @@ def graph_search_parquet(
     vectors = spark.read.parquet(path + "/vectors")
     q = queries.select("query_id", "query_vec")
     qids = [r["query_id"] for r in q.select("query_id").collect()]
-    score = distance(F.col("embedding"), F.col("query_vec"), metric)
+    score = distance("embedding", "query_vec", metric)
 
     def scored_fetch(per_query_ids: dict) -> DataFrame:
         """One pruned vector fetch for the union of ids, fanned back

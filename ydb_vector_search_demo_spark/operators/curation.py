@@ -561,7 +561,7 @@ def mine_hard_negatives(
     scored = scored.select(
         F.col(query_id_col),
         F.col(id_col),
-        distance(vector_col, F.col(query_vec_col), metric).alias("score"),
+        distance(vector_col, query_vec_col, metric).alias("score"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").asc_nulls_last(), F.col(id_col).asc()
@@ -598,7 +598,7 @@ def mine_positives(
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            distance(vector_col, F.col(query_vec_col), metric).alias("score"),
+            distance(vector_col, query_vec_col, metric).alias("score"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(

@@ -6,9 +6,12 @@ scores, ``index_enabled=False`` semantics of
 Scale design (100 TB posture):
 
 * The query vector is a plan literal — broadcast implicitly with the
-  serialized plan; nothing is collected from executors. It is bound as
-  one parsed expression (:func:`vector_literal`), not one py4j literal
-  per component.
+  serialized plan; nothing is collected from executors. The score is
+  one parsed expression (``functions.vector.distance_sql``: the metric's
+  fold as SQL text, the query as one array literal and, for cosine, its
+  norm folded once on the driver), not a tree of py4j Column calls.
+  Every name/sequence caller here — ``knn_scores``, ``batch_knn``,
+  paging, faceting, the normalized store — scores through that text.
 * Distance + ``orderBy().limit(k)`` compiles to ``TakeOrderedAndProject``:
   each scan task keeps a size-k heap, only ``k * num_partitions`` tiny
   rows ever reach the driver-side merge. No global sort, no full shuffle.
@@ -25,39 +28,28 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ydb_vector_search_demo_spark.functions.vector import distance
+from ydb_vector_search_demo_spark.functions.vector import (
+    _sql_literal,
+    distance,
+    dot_sql,
+)
 from ydb_vector_search_demo_spark.session import _get_or_write
-
-
-def _double_sql(x: float) -> str:
-    x = float(x)
-    if math.isnan(x) or math.isinf(x):
-        # a string cast is nullable; coalesce to a literal keeps the
-        # element non-nullable, the type F.lit gives
-        word = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
-        return f"coalesce(CAST('{word}' AS DOUBLE), 0D)"
-    return f"{x!r}D"
-
-
-def _sql_literal(x, integers: bool) -> str:
-    if isinstance(x, (list, tuple)):
-        return "array(" + ", ".join(_sql_literal(e, integers) for e in x) + ")"
-    return str(int(x)) if integers else _double_sql(x)
 
 
 def vector_literal(values: Sequence, integers: bool = False) -> Column:
     """A driver-side array as one ``array(<x>D, ...)`` expression parsed
     in the JVM: a single py4j call, where ``F.lit(list)`` makes one per
     element. Nested lists nest (a codebook, a LUT, a rotation matrix).
-    ``repr`` is the shortest decimal that round-trips, so each component
-    parses back to the identical double (NaN and ±inf through Spark's
-    own string casts, kept non-nullable). ``integers`` binds whole
+    The text is ``functions.vector``'s one literal renderer, the one
+    :func:`distance` embeds in a score: ``repr`` is the shortest decimal
+    that round-trips, so each component parses back to the identical
+    double (NaN and ±inf through Spark's own string casts, kept
+    non-nullable). ``integers`` binds whole
     numbers instead (packed bit words, cell ids): the parser types each
     as INT when it fits and BIGINT otherwise, the rule ``F.lit`` applies
     per element. Constant folding turns both forms into the same array
@@ -79,10 +71,9 @@ def knn_scores(
     Reference analogue: ``similarity_search_by_vector_with_score(v, k)``
     (/root/reference/app.py:124) with ``index_enabled=False``.
     """
-    qv = vector_literal(query_vector)
     return (
         embeddings.select(
-            F.col(id_col), distance(vector_col, qv, metric).alias(score_col)
+            F.col(id_col), distance(vector_col, query_vector, metric).alias(score_col)
         )
         # nulls last: a zero-norm vector has NULL cosine distance and
         # must never outrank real matches (Spark default is nulls FIRST
@@ -174,7 +165,7 @@ def batch_knn(
     scored = embeddings.crossJoin(F.broadcast(queries)).select(
         F.col(query_id_col),
         F.col(id_col),
-        distance(vector_col, F.col(query_vec_col), metric).alias(score_col),
+        distance(vector_col, query_vec_col, metric).alias(score_col),
     )
     # (score asc NULLS LAST, id asc) — deterministic ties; NULL scores
     # (zero-norm cosine) never outrank real matches
@@ -323,7 +314,7 @@ def knn_page_after(
     reachable through a numeric cursor; they are excluded, keeping the
     page contract total-order clean (same rows as the OFFSET oracle,
     which never reaches the NULL tail either)."""
-    sc = distance(vector_col, vector_literal(query_vector), metric)
+    sc = distance(vector_col, query_vector, metric)
     scored = embeddings.select(F.col(id_col), sc.alias(score_col)).filter(
         F.col(score_col).isNotNull()
     )
@@ -362,7 +353,7 @@ def knn_topk_per_group(
     scored = embeddings.select(
         F.col(group_col),
         F.col(id_col),
-        distance(vector_col, vector_literal(query_vector), metric).alias(score_col),
+        distance(vector_col, query_vector, metric).alias(score_col),
     )
     w = Window.partitionBy(group_col).orderBy(
         F.col(score_col).asc_nulls_last(), F.col(id_col).asc()
@@ -449,15 +440,13 @@ def knn_cosine_normalized_parquet(
     rank-on-rounded convention."""
     import math
 
-    from ydb_vector_search_demo_spark.functions.vector import dot
-
     qv = [float(x) for x in query_vector]
     qn = math.sqrt(sum(x * x for x in qv))
     if qn == 0:
         raise ValueError("zero-norm query vector has no cosine ranking")
     qu = [x / qn for x in qv]
     store = spark.read.parquet(path)
-    score = F.round(F.lit(1.0) - dot(F.col("unit"), vector_literal(qu)), 6)
+    score = F.expr(f"round(1D - {dot_sql('unit', qu)}, 6)")
     return (
         store.select(F.col(id_col), score.alias("score"))
         .orderBy(F.col("score").asc_nulls_last(), F.col(id_col).asc())

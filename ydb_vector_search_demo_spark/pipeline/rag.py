@@ -17,8 +17,10 @@ The serving path, :func:`search_with_summary`, has the reference's own
 shape: it runs at call time as one scored top-k joined to payloads
 (collected as at most k rows), then builds the context and prompt in
 Python on the driver and calls ``llm_fn`` once there, like app.py:95.
-Both ``search`` and ``search_with_summary`` read the store through a
-resolved-once handle (:func:`store_tables`). The DataFrame forms
+Both ``search`` and ``search_with_summary`` parse that top-k as one
+``spark.sql`` statement (:func:`_scored_docs`) over the temp views of a
+resolved-once store handle (:class:`StoreHandle`); the served request
+reads the handle's resident copy of the embeddings. The DataFrame forms
 (:func:`format_results`, :func:`assemble_context`, :func:`build_prompt`)
 and the Arrow-batched UDF seams (:func:`embed_texts_udf`,
 :func:`llm_udf`) remain for column-wise and batch callers, never
@@ -28,10 +30,12 @@ row-at-a-time.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import math
 import random
 import threading
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 import pandas as pd
 import pyarrow as pa
@@ -39,8 +43,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
+from ydb_vector_search_demo_spark.functions.vector import distance_sql
 # knn_scores is re-exported: callers (and tracers) address it as rag.knn_scores
-from ydb_vector_search_demo_spark.operators.knn import knn, knn_scores  # noqa: F401
+from ydb_vector_search_demo_spark.operators.knn import knn_scores  # noqa: F401
 from ydb_vector_search_demo_spark.sources.tables import load_table
 
 EMBEDDING_DIM = 64
@@ -172,6 +177,27 @@ def build_prompt(query: str, context_df: DataFrame) -> DataFrame:
     )
 
 
+# An embeddings table stays resident when its bytes on disk are at most
+# this share of the storage memory the executors report free when its
+# handle is built. Cached, a store's (vec_id, embedding) relation took
+# 0.72x (sf0.01) and 0.69x (sf0.1) of its parquet bytes, so a resident
+# store holds under a fifth of the storage memory that was free; each
+# later store is checked against what is left.
+RESIDENT_SHARE = 0.25
+
+_HANDLE_IDS = itertools.count()
+
+
+def _free_storage_bytes(spark: SparkSession) -> int:
+    """Storage memory the executors (the driver, in local mode) report
+    free, on and off heap."""
+    return sum(
+        e.totalOnHeapStorageMemory() - e.usedOnHeapStorageMemory()
+        + e.totalOffHeapStorageMemory() - e.usedOffHeapStorageMemory()
+        for e in spark.sparkContext._jsc.sc().statusTracker().getExecutorInfos()
+    )
+
+
 class StoreHandle:
     """The ``documents`` and ``embeddings`` relations of one store
     directory, resolved (listed) once. ``version`` is the tables'
@@ -180,11 +206,24 @@ class StoreHandle:
     recursive listing. A writer that adds or replaces files of a table
     changes its root's modification time (Spark's commit protocol does
     on every append or overwrite), so a changed version means the
-    resolved listing may be stale."""
+    resolved listing may be stale.
+
+    The handle registers session temp views under names of its own,
+    which a request's one statement (:func:`_scored_docs`) reads:
+    ``docs_view`` (the documents), ``embs_view`` (``vec_id``,
+    ``embedding`` from parquet) and ``resident_view``. When the
+    embeddings' bytes on disk (``embedding_bytes``, from the listing
+    ``load_table`` made) are at most :data:`RESIDENT_SHARE` of the free
+    storage memory, ``resident_view`` is ``resident``: the same relation
+    persisted and materialised here. Its plan carries a filter naming
+    the view, which the optimizer folds away; without it, Spark would
+    substitute the cached data into every other reader of the table,
+    stale after a write. Otherwise ``resident_view`` is ``embs_view``."""
 
     def __init__(self, spark: SparkSession, sf_dir: str) -> None:
         jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
+        self._spark = spark
         self._status = []
         for name in ("documents", "embeddings"):
             path = jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
@@ -192,52 +231,155 @@ class StoreHandle:
         self.version = self.current_version()
         self.documents = load_table(spark, sf_dir, "documents")
         self.embeddings = load_table(spark, sf_dir, "embeddings")
+        self.embedding_bytes = (
+            self.embeddings._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        n = next(_HANDLE_IDS)
+        self.docs_view = f"_ydbvs_store{n}_documents"
+        self.embs_view = self.resident_view = f"_ydbvs_store{n}_embeddings"
+        scan = self.embeddings.select("vec_id", "embedding")
+        self.resident = None
+        if self.embedding_bytes <= RESIDENT_SHARE * _free_storage_bytes(spark):
+            self.resident_view = f"_ydbvs_store{n}_resident"
+            resident = scan.where(F.lit(self.resident_view).isNotNull()).persist()
+            try:
+                resident.count()
+            except BaseException:
+                resident.unpersist(blocking=False)
+                raise
+            self.resident = resident
+            resident.createOrReplaceTempView(self.resident_view)
+        self.documents.createOrReplaceTempView(self.docs_view)
+        scan.createOrReplaceTempView(self.embs_view)
+        # requests between lookup and the end of their statement's use;
+        # a replaced handle is released once none is left
+        self._requests = 0
+        self._retired = False
 
     def current_version(self) -> tuple[int, ...]:
         return tuple(fs.getFileStatus(p).getModificationTime() for fs, p in self._status)
 
+    def _release(self) -> None:
+        """Non-blocking unpersist and view drop, once the handle has left
+        the map and no request uses it: a request planned against the
+        cached relation and run after its unpersist would persist an
+        orphan copy of it."""
+        if self.resident is not None:
+            self.resident.unpersist(blocking=False)
+        for view in {self.docs_view, self.embs_view, self.resident_view}:
+            self._spark.catalog.dropTempView(view)
+
 
 # One handle per (session, store directory). Owned by this module: entries
 # of a stopped session are dropped at the next lookup, and
-# clear_store_cache() drops them all.
+# clear_store_cache() drops them all. _BUILD_LOCK serialises the builds
+# of handles, which list files and run a job; _STORE_LOCK guards the map
+# and the request counts only.
 _STORE_HANDLES: dict[tuple[SparkSession, str], StoreHandle] = {}
 _STORE_LOCK = threading.Lock()
+_BUILD_LOCK = threading.Lock()
 
 
-def store_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """``(documents, embeddings)`` of the store at ``sf_dir``, from its
-    resident handle; re-resolved only when the store's version changed.
-    Safe to call from any thread: lookups and re-resolution run under
-    one lock, so concurrent requests never list the same store twice."""
-    key = (spark, sf_dir)
+def _retire(handle: StoreHandle) -> bool:
+    """Mark a handle that left the map (under ``_STORE_LOCK``); True when
+    no request still uses it, so the caller releases it now."""
+    handle._retired = True
+    return handle._requests == 0
+
+
+def _take(key: tuple[SparkSession, str], use: bool) -> StoreHandle | None:
+    """The map's handle for ``key`` when its version is current, counted
+    as in use with ``use``; entries of stopped sessions are dropped
+    untouched on the way."""
     with _STORE_LOCK:
         for stale in [k for k in _STORE_HANDLES if k[0].sparkContext._jsc is None]:
             del _STORE_HANDLES[stale]
         handle = _STORE_HANDLES.get(key)
         if handle is None or handle.current_version() != handle.version:
-            handle = _STORE_HANDLES[key] = StoreHandle(spark, sf_dir)
-    return handle.documents, handle.embeddings
+            return None
+        handle._requests += use
+        return handle
+
+
+def _lookup(spark: SparkSession, sf_dir: str, use: bool) -> StoreHandle:
+    """The current handle of ``sf_dir``, re-resolved when the store's
+    version changed; with ``use``, counted as in use until
+    :func:`_done`. A new handle is built outside ``_STORE_LOCK``, so
+    requests for current handles never wait on a build, and under
+    ``_BUILD_LOCK``, so concurrent requests never list the same store
+    twice; statements are parsed and analysed outside both."""
+    key = (spark, sf_dir)
+    handle = _take(key, use)
+    if handle is not None:
+        return handle
+    with _BUILD_LOCK:
+        handle = _take(key, use)  # built while this request waited
+        if handle is not None:
+            return handle
+        fresh = StoreHandle(spark, sf_dir)
+        with _STORE_LOCK:
+            old = _STORE_HANDLES.get(key)
+            _STORE_HANDLES[key] = fresh
+            fresh._requests += use
+            idle = old is not None and _retire(old)
+    if idle:
+        old._release()
+    return fresh
+
+
+def _done(handle: StoreHandle) -> None:
+    with _STORE_LOCK:
+        handle._requests -= 1
+        last = handle._retired and handle._requests == 0
+    if last:
+        handle._release()
+
+
+@contextmanager
+def _store_in_use(spark: SparkSession, sf_dir: str) -> Iterator[StoreHandle]:
+    """The current handle of ``sf_dir``, counted as in use for the block."""
+    handle = _lookup(spark, sf_dir, use=True)
+    try:
+        yield handle
+    finally:
+        _done(handle)
 
 
 def clear_store_cache() -> None:
-    """Drop every resident store handle (the next call re-resolves)."""
+    """Drop every resident store handle (the next call re-resolves):
+    each live session's handle unpersists its relation and drops its
+    views, at once or when its last request is done."""
     with _STORE_LOCK:
+        live = [h for k, h in _STORE_HANDLES.items() if k[0].sparkContext._jsc is not None]
         _STORE_HANDLES.clear()
+        idle = [h for h in live if _retire(h)]
+    for handle in idle:
+        handle._release()
 
 
 def _scored_docs(
-    spark: SparkSession,
-    sf_dir: str,
-    query: str,
-    k: int,
-    metric: str,
-    embed_fn: Callable[[str], Sequence[float]],
+    handle: StoreHandle, embs_view: str, score_sql: str, k: int, columns: str = "d.*"
 ) -> DataFrame:
-    """Embed the (validated) query once — app.py:118 CSE — then the
-    exact KNN top-k joined to its document payloads."""
-    qv = list(embed_fn(query))
-    docs, embs = store_tables(spark, sf_dir)
-    return knn(docs, embs, qv, k=k, metric=metric)
+    """The exact KNN top-k joined to its document payloads as one
+    statement over the handle's views: the rows and schema of
+    ``knn(documents, embeddings, ...)`` with ``columns`` = ``d.*``. The
+    k-row side is broadcast; ``score_sql`` scores ``embedding`` of
+    ``embs_view`` (the handle's ``embs_view`` or ``resident_view``)."""
+    return handle._spark.sql(
+        f"SELECT /*+ BROADCAST(t) */ {columns}, t.score "
+        f"FROM {handle.docs_view} d "
+        f"JOIN (SELECT vec_id, {score_sql} AS score FROM {embs_view} "
+        f"ORDER BY score ASC NULLS LAST, vec_id ASC LIMIT {int(k)}) t "
+        "ON d.doc_id = t.vec_id"
+    )
+
+
+def _score_sql(
+    query: str, metric: str, embed_fn: Callable[[str], Sequence[float]]
+) -> str:
+    """Embed the (validated) query once — app.py:118 CSE — and render its
+    distance to ``embedding``."""
+    return distance_sql("embedding", list(embed_fn(query)), metric)
 
 
 def search(
@@ -249,9 +391,17 @@ def search(
     embed_fn: Callable[[str], Sequence[float]] = embed_query_stub,
 ) -> DataFrame:
     """End-to-end search stage (app.py:117-138): embed once, exact KNN
-    top-k, formatted results. Returns the formatted-results DataFrame."""
+    top-k, formatted results. Returns the formatted-results DataFrame.
+
+    The result is lazy, so its statement reads the store's parquet
+    relation (``embs_view``), not the resident copy: the handle may be
+    released before the caller runs it, and a plan over a released
+    cached relation would persist an orphan copy of it when run."""
     query = validate_query(query)
-    return format_results(_scored_docs(spark, sf_dir, query, k, metric, embed_fn))
+    score = _score_sql(query, metric, embed_fn)
+    with _store_in_use(spark, sf_dir) as handle:
+        scored = _scored_docs(handle, handle.embs_view, score, k)
+    return format_results(scored)
 
 
 def _result_order(row) -> tuple:
@@ -287,11 +437,11 @@ def search_with_summary(
     skipped in the context but counted in ``n_docs``, and the summary
     is stripped of ASCII spaces only, as ``F.trim`` does."""
     query = validate_query(query)
-    rows = (
-        _scored_docs(spark, sf_dir, query, k, metric, embed_fn)
-        .select("doc_id", "text", "score")
-        .collect()
-    )
+    score = _score_sql(query, metric, embed_fn)
+    with _store_in_use(spark, sf_dir) as handle:
+        rows = _scored_docs(
+            handle, handle.resident_view, score, k, "d.doc_id, d.text"
+        ).collect()
     top = sorted(rows, key=_result_order)[:CONTEXT_TOP_N]
     context = CONTEXT_SEPARATOR.join(r["text"] for r in top if r["text"] is not None)
     prompt = PROMPT_TEMPLATE % (query, context)

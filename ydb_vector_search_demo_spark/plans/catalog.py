@@ -2987,7 +2987,7 @@ def q_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.select(
             "vec_id",
             F.col("centroid_id").alias("cell"),
-            V.distance("embedding", F.lit(QV), "cosine").alias("_raw"),
+            V.distance("embedding", QV, "cosine").alias("_raw"),
         )
         .orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
         .limit(5)
@@ -3067,7 +3067,7 @@ def q_ann_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_count(
                 code.bitwiseXOR(F.lit(_LSH_FIXED_QCODE))
             ).cast("bigint").alias("hamming"),
-            V.distance("embedding", F.lit(QV), "cosine").alias("_raw"),
+            V.distance("embedding", QV, "cosine").alias("_raw"),
         )
         .filter(F.col("hamming") <= 1)
         .orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
@@ -3600,7 +3600,7 @@ def q_ann_tree_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "cell_top",
             "cell_sub",
-            V.distance("embedding", F.lit(QV), "cosine").alias("_raw"),
+            V.distance("embedding", QV, "cosine").alias("_raw"),
         )
         .orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
         .limit(5)
@@ -3684,7 +3684,7 @@ def q_quant_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         embs.join(F.broadcast(pool.select("vec_id")), on="vec_id")
         .select(
-            "vec_id", V.distance("embedding", F.lit(QV), "cosine").alias("_raw")
+            "vec_id", V.distance("embedding", QV, "cosine").alias("_raw")
         )
         .orderBy(F.col("_raw").asc_nulls_last(), F.col("vec_id").asc())
         .limit(5)
